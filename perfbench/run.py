@@ -30,7 +30,7 @@ HERE = Path(__file__).resolve().parent
 ROOT = HERE.parent
 ENGINE_SRC = ROOT / "src" / "main" / "scala"
 BENCH_SRC = HERE / "src"
-BUILD = ROOT / os.environ.get("CARGO_TARGET_DIR", ".bench_build")
+BUILD = ROOT / ".bench_build"
 WORK = ROOT / ".bench_work"
 RESULTS = ROOT / ".bench_results"
 WORKLOADS = ("extract_steady", "extract_skewed", "ingest_skewed", "query_suite")

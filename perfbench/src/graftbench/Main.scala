@@ -27,10 +27,12 @@ object Main {
   /** The fixed `query_suite` set: one query per family of
     * `SparkEntry.queries` that a ROADMAP item targets (see README). Queries
     * whose harness writes scratch directories through `graft.spark.TmpDirs`
-    * are not in it.
+    * are not in it; `stream_extract` is `streaming_extract` with its
+    * directories under the run's work directory.
     */
   val Queries: Seq[String] = Seq(
-    "e2e_extract", "text_bpe_train", "classifier_train", "dedup_minhash_lsh", "ann_pq_topk")
+    "e2e_extract", QuerySuite.Stream, "text_bpe_train", "classifier_train", "dedup_minhash_lsh",
+    "ann_pq_topk")
 
   val EndToEnd: Seq[(String, String)] = Seq(
     "setup_s" -> "s", "ops_per_s" -> "1/s", "cpu_us_per_op" -> "us")
@@ -87,7 +89,7 @@ object Main {
         val expected = if (o.pin.isDefined) Map.empty[String, String]
           else Json.readStringMap(new String(Files.readAllBytes(pinned), "UTF-8"))
         val names = if (o.scale < 1) Queries.take(3) else Queries
-        new QuerySuite(names, o.root.resolve("data/sf0.01").toString, expected, o.seed)
+        new QuerySuite(names, o.root.resolve("data/sf0.01").toString, expected, o.seed, o.work)
       case other => throw new IllegalArgumentException(s"unknown workload: $other")
     }
   }
@@ -132,7 +134,10 @@ object Main {
   /** Writes the result digests of the `query_suite` set to `file`. */
   private def pin(o: Opts, wl: Workload, cores: Int, file: Path): Unit = {
     val spark = session(cores, cores, o.work)
-    try Files.write(file, Json.write(wl.asInstanceOf[QuerySuite].digests(spark)).getBytes("UTF-8"))
+    try {
+      wl.prepare(spark, o.work.resolve("input"))
+      Files.write(file, Json.write(wl.asInstanceOf[QuerySuite].digests(spark)).getBytes("UTF-8"))
+    }
     finally { spark.stop(); Fs.delete(o.work) }
   }
 
@@ -229,14 +234,19 @@ final class Run(o: Main.Opts, wl: Workload, cores: Int, runId: String) {
   }
 
   /** The paper's N -> 4N criterion: untraced passes on one core, against
-    * untraced passes on every core. Ends the session on every core.
+    * untraced passes on every core. The one-core session gets the same three
+    * warm-up passes as the session on every core before its passes are
+    * timed. Ends the session on every core.
     */
   private def oneCore(all: Seq[Pass]): Map[String, Any] = {
     stop()
     spark = Main.session(1, cores, o.work)
-    val one = loop(Ctx(spark, off, None, 1), 0, 2)(wl.pass(Ctx(spark, off, None, 1), _))
+    val ctx = Ctx(spark, off, None, 1)
+    val warm = count((0 until 3).map(wl.pass(ctx, _))).map(_.wall)
+    val one = loop(ctx, 0, 2)(wl.pass(ctx, _))
     Map(s"scaling_eff_1_to_$cores" -> opsPerS(all) / (cores * opsPerS(one)),
-      "turns_per_s_1_core" -> opsPerS(one), "pass_wall_s_1_core" -> one.map(_.wall))
+      "turns_per_s_1_core" -> opsPerS(one), "warmup_pass_s_1_core" -> warm,
+      "pass_wall_s_1_core" -> one.map(_.wall))
   }
 
   /** A whole traced run of another workload, nested in this traced run:
@@ -262,7 +272,7 @@ final class Run(o: Main.Opts, wl: Workload, cores: Int, runId: String) {
     counters.register(spark)
     val ctx = Ctx(spark, tracer, Some(counters), cores)
     val windows = ArrayBuffer.empty[Map[String, Double]]
-    val stageSplits = ArrayBuffer.empty[(Double, Double)]
+    val pipeline = ArrayBuffer.empty[Map[String, Double]]
     val ps = loop(ctx, o.seconds / 2.0, 1) { i =>
       val cg0 = CodeGenerator.compileTime
       val t0 = System.currentTimeMillis()
@@ -271,7 +281,7 @@ final class Run(o: Main.Opts, wl: Workload, cores: Int, runId: String) {
       org.apache.spark.graftbench.Bus.drain(spark.sparkContext)
       windows += counters.window(t0, t1, cores, p.ops) +
         ("sql.codegen_share" -> (CodeGenerator.compileTime - cg0) / 1e9 / p.wall)
-      stageSplits += counters.stageSplit(t0, t1)
+      pipeline += counters.pipeline(t0, t1, cores, p.ops)
       p
     }
     val core = tracer.span("core", "single-thread kernel calls")(CoreProbe.run(wl.sample(spark)))
@@ -292,9 +302,8 @@ final class Run(o: Main.Opts, wl: Workload, cores: Int, runId: String) {
       "per_layer" -> layer)
     if (wl.opName == "turns") {
       report ++= Map(
-        "core.kernel_share" -> core("core.turn_us") / cpuUsPerOp(plain),
-        "pipeline.scan_stage_s" -> Stats.median(stageSplits.map(_._1).toSeq),
-        "pipeline.post_shuffle_stage_s" -> Stats.median(stageSplits.map(_._2).toSeq))
+        "core.kernel_share" -> core("core.turn_us") / cpuUsPerOp(plain)) ++
+        pipeline.head.keys.map(k => k -> Stats.median(pipeline.map(_(k)).toSeq))
     }
     wl match {
       case qs: QuerySuite =>
@@ -314,7 +323,7 @@ final class Run(o: Main.Opts, wl: Workload, cores: Int, runId: String) {
       report ++= Map("queries" -> byQuery) ++
         Seq("build_s", "plan_s", "codegen_s", "exec_s", "rerun_s", "eager_jobs", "shuffle_bytes",
           "stages", "tasks").map(k => s"query.$k" -> total(k)) ++
-        Map("query.stream_s" -> "not measured: the streaming queries write outside the checkout")
+        Map("query.stream_s" -> byQuery.get(QuerySuite.Stream).map(_("wall_s")).getOrElse(0.0))
       case _ =>
     }
     counters.unregister(spark)

@@ -146,18 +146,33 @@ final class Counters extends SparkListener with QueryExecutionListener {
       "io.bytes_written" -> ts.map(_.outputBytes).sum.toDouble)
   }
 
-  /** Wall time of the stages of one pass, split into the scan side (reads
-    * input, writes shuffle) and the post-shuffle side (reads shuffle).
+  /** The `ExtractPipeline.extract` figures of one pass, `[t0, t1]` in epoch
+    * millis. The scan stage reads the input and writes the salted shuffle;
+    * the map stage is the post-shuffle stage that runs the `mapPartitions`
+    * kernel (of the stages that read shuffle, the one with the most task
+    * time). Skew is max/median over the map stage's tasks.
     */
-  def stageSplit(t0: Long, t1: Long): (Double, Double) = {
+  def pipeline(t0: Long, t1: Long, cores: Int, ops: Double): Map[String, Double] = {
     val stageIds = jobs.values.asScala.filter(j => j.start >= t0 && j.start <= t1)
       .flatMap(_.stages).toSet
-    val byStage = tasks.asScala.filter(t => stageIds(t.stage)).groupBy(_.stage)
+    val byStage = tasks.asScala.filter(t => stageIds(t.stage)).toSeq.groupBy(_.stage)
     val ss = stages.asScala.filter(s => byStage.contains(s.id)).toSeq
     def len(s: Stage) = (s.completed - s.submitted) / 1e3
-    val scan = ss.filter(s => byStage(s.id).exists(_.inputBytes > 0)).map(len).sum
-    val post = ss.filter(s => byStage(s.id).exists(_.shuffleRead > 0)).map(len).sum
-    (scan, post)
+    val scan = ss.filter(s => byStage(s.id).exists(_.inputBytes > 0))
+    val map = ss.filter(s => byStage(s.id).exists(_.shuffleRead > 0))
+      .sortBy(s => -byStage(s.id).map(_.runMs).sum).headOption
+    val mapTasks = map.map(s => byStage(s.id)).getOrElse(Nil)
+    val w = window(t0, t1, cores, ops)
+    Map(
+      "pipeline.scan_stage_s" -> scan.map(len).sum,
+      "pipeline.map_stage_s" -> map.map(len).getOrElse(0.0),
+      "pipeline.shuffle_bytes_per_turn" -> byStage.values.flatten.map(_.shuffleWrite).sum / ops,
+      "pipeline.task_time_skew" -> Stats.maxOverMedian(mapTasks.map(_.durationMs.toDouble)),
+      "pipeline.partition_rows_skew" -> Stats.maxOverMedian(mapTasks.map(_.shuffleRecords.toDouble)),
+      "pipeline.idle_core_share" -> w("exec.idle_core_share"),
+      "pipeline.gc_share" -> w("exec.gc_share"),
+      "pipeline.task_cpu_share" -> w("exec.task_cpu_share"),
+      "pipeline.spill_bytes" -> w("exec.spill_bytes"))
   }
 }
 

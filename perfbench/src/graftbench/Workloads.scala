@@ -3,7 +3,10 @@ package graftbench
 import java.lang.management.ManagementFactory
 import java.nio.file.{Files, Path}
 
+import scala.collection.mutable.ArrayBuffer
+
 import graft.spark.{ExtractPipeline, Lineage, Transcripts}
+import graft.streaming.StreamPipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.functions._
@@ -185,17 +188,39 @@ final class IngestSkewed(spec: Gen.Spec, files: Int, buckets: Int, work: Path)
   * sf0.01 tables, in a seed-permuted order, each forced to its full result
   * and compared with its pinned digest.
   */
-final class QuerySuite(names: Seq[String], dataDir: String, expected: Map[String, String], seed: Long)
-    extends Workload {
+final class QuerySuite(names: Seq[String], dataDir: String, expected: Map[String, String], seed: Long,
+                       work: Path) extends Workload {
   val name = "query_suite"
   val opName = "queries"
   private val order = new scala.util.Random(seed).shuffle(names)
   private val all = graft.SparkEntry.queries
+  private var transcripts: String = _
+  private val streamDirs = ArrayBuffer.empty[Path]
 
   def prepare(spark: SparkSession, dir: Path): Unit = {
-    val missing = names.filterNot(all.contains)
+    val missing = names.filterNot(q => q == QuerySuite.Stream || all.contains(q))
     require(missing.isEmpty, s"unknown queries: ${missing.mkString(",")}")
+    if (names.contains(QuerySuite.Stream)) {
+      transcripts = dir.resolve("transcripts").toString
+      Transcripts.fromDocuments(spark, dataDir).write.parquet(transcripts)
+    }
   }
+
+  private def query(q: String): (SparkSession, String) => DataFrame =
+    if (q == QuerySuite.Stream) streamExtract else all(q)
+
+  /** `SparkEntry`'s `streaming_extract` with its directories in `work`:
+    * the same `StreamPipeline.runAvailableNow` call over the same derived
+    * transcripts, then the per-status counts.
+    */
+  private def streamExtract(s: SparkSession, dir: String): DataFrame = {
+    val base = work.resolve(s"stream-${streamDirs.size}")
+    streamDirs += base
+    StreamPipeline.runAvailableNow(s, transcripts, s"$base/out", s"$base/cp")
+    s.read.parquet(s"$base/out").groupBy("status").agg(count(lit(1)).as("n_rows")).orderBy("status")
+  }
+
+  private def dropStreamDirs(): Unit = { streamDirs.foreach(Fs.delete); streamDirs.clear() }
 
   def shape: Map[String, Any] = Map("queries" -> names.size, "order" -> order,
     "data" -> "perfbench/data/sf0.01 (fixed tables; the seed only permutes the order)")
@@ -205,7 +230,8 @@ final class QuerySuite(names: Seq[String], dataDir: String, expected: Map[String
       .collect().toSeq.map(r => CoreProbe.Sample(r.getString(0), r.getInt(1), r.getString(2), r.getString(3)))
 
   def digests(spark: SparkSession): Map[String, String] =
-    names.map(q => q -> Digest.result(all(q)(spark, dataDir).collect())).toMap
+    try names.map(q => q -> Digest.result(query(q)(spark, dataDir).collect())).toMap
+    finally dropStreamDirs()
 
   def pass(ctx: Ctx, i: Int): Pass = {
     val tr = ctx.tracer
@@ -219,7 +245,7 @@ final class QuerySuite(names: Seq[String], dataDir: String, expected: Map[String
       var buildS = 0.0; var planS = 0.0; var execS = 0.0
       val (res, w, c) = Clock.timed {
         try tr.span("query", q) {
-          val (df, b, _) = Clock.timed(tr.span("query", s"$q build")(all(q)(ctx.spark, dataDir)))
+          val (df, b, _) = Clock.timed(tr.span("query", s"$q build")(query(q)(ctx.spark, dataDir)))
           buildS = b
           if (traced) planS = Clock.timed(tr.span("query", s"$q plan")(df.queryExecution.executedPlan))._2
           val (rows, e, _) = Clock.timed(tr.span("query", s"$q execute")(df.collect()))
@@ -243,6 +269,7 @@ final class QuerySuite(names: Seq[String], dataDir: String, expected: Map[String
           System.err.println(s"[perfbench] $q failed: $err")
       }
     }
+    dropStreamDirs()
     Pass(wall, cpu, names.size, failed,
       report = Map("query_wall_s" -> times.toMap, "split" -> split.toMap))
   }
@@ -250,11 +277,16 @@ final class QuerySuite(names: Seq[String], dataDir: String, expected: Map[String
   /** Each query built once more, collected once untimed, then collected
     * again on the same planned DataFrame: the data-bound floor.
     */
-  def reruns(ctx: Ctx): Map[String, Double] = order.map { q =>
+  def reruns(ctx: Ctx): Map[String, Double] = try order.map { q =>
     ctx.tracer.span("query", s"$q rerun") {
-      val df = all(q)(ctx.spark, dataDir)
+      val df = query(q)(ctx.spark, dataDir)
       df.collect()
       q -> Clock.timed(df.collect())._2
     }
-  }.toMap
+  }.toMap finally dropStreamDirs()
+}
+
+object QuerySuite {
+  /** The streaming query of the set (`graft.streaming`). */
+  val Stream = "stream_extract"
 }

@@ -60,6 +60,21 @@ class Smoke(unittest.TestCase):
                 self.check(w["name"], 1)
 
 
+class Layers(unittest.TestCase):
+    def test_every_per_layer_metric_is_mapped(self):
+        layers = json.loads((HERE / "layers.json").read_text())["per_layer"]
+        self.assertEqual(sorted(layers), sorted(m["name"] for m in SPEC["per_layer"]))
+        end_to_end = {m["name"] for m in SPEC["end_to_end"]}
+        for name, entry in layers.items():
+            with self.subTest(metric=name):
+                self.assertTrue(entry["layer"])
+                for m in entry["moves"]:
+                    self.assertIn(m["metric"], end_to_end)
+                    self.assertIn(m["workload"], run.WORKLOADS)
+                for w in entry["flat_on"]:
+                    self.assertIn(w, run.WORKLOADS)
+
+
 class Determinism(unittest.TestCase):
     def test_generators(self):
         jars = run.spark_jars()
