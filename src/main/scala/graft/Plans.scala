@@ -5,12 +5,13 @@ import graft.spark.{ExtractPipeline, Transcripts}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
-/** Plan-audit dump: writes `PLANS.md` with the FORMATTED physical plans of
-  * the load-bearing queries, so the shapes the specs assert (one Exchange in
-  * the pipeline, zero Exchange in IVF assignment, pushed filters, pruned
-  * scans, whole-stage codegen spans around the native expressions) are
-  * reviewable without running Spark. Regenerate after plan-affecting
-  * changes: `sbt "runMain graft.Plans"`.
+/** Plan-audit dump: writes `PLANS.md` (in the working directory, not
+  * committed) with the FORMATTED physical plans of the load-bearing
+  * queries, so the shapes the specs assert (one Exchange in the pipeline,
+  * zero Exchange in IVF assignment, pushed filters, pruned scans,
+  * whole-stage codegen spans around the native expressions) can be read
+  * without a debugger. Generate on demand: `sbt "runMain graft.Plans"`;
+  * per-query dumps come from `sbt "runMain graft.BenchExtra --plans <dir>"`.
   */
 object Plans {
 

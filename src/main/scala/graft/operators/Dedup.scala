@@ -19,7 +19,7 @@ import org.apache.spark.sql.SparkSession
   *     for hot keys); [[runStreamingNearDup]] is the streaming member.
   *   - simhash: narrow map to a 16-bit signature (native `simhash16`);
   *     pairing via banded OR-of-rotations blocking with in-block pairs from
-  *     the native `SimHashPairs` kernel (equi-join keys, block cap).
+  *     the native `SimHashPairsKernel` (equi-join keys, block cap).
   *   - embedding: content-derived banded hyperplane LSH ([[nearDupPairs]]),
   *     one equi-join on (band_idx, band_val).
   *
@@ -96,7 +96,7 @@ object Dedup {
       .agg(min(col("doc_id")).as("keeper"), count(lit(1)).as("n_copies"))
 
   /** Distinct word-3-gram shingles of the `text` column — routed through
-    * the native one-pass [[graft.spark.Shingles3]] expression (the HOF form
+    * the native one-pass [[graft.spark.ShinglesKernel.shingles3]] kernel (the HOF form
     * re-evaluated `split(text, ' ')` inside every lambda element: O(n²)
     * per document). Bit-identical output order to
     * `array_distinct(transform(...))` — pinned by a parity spec.
@@ -154,7 +154,7 @@ object Dedup {
   /** MinHash signature from a prebuilt (doc_id, grams) table:
     * [[minhashHashes]] hashes -> [[minhashBandCount]] band keys (md5 over
     * the '_'-joined band rows). The 16 hash values come from the native
-    * one-pass [[graft.spark.MinHash16]] expression (bit-identical to the
+    * one-pass [[graft.spark.MinHashKernel.minhash16]] kernel (bit-identical to the
     * `conv(substring(md5-concat...))` SQL form the DuckDB twin still uses —
     * pinned by a parity spec + the oracle hash-compare).
     */
@@ -888,7 +888,7 @@ object Dedup {
     * label — every node has exactly one labels row, so min(prev) over the
     * group recovers it past the sentinel on neighbor rows) materializes
     * alongside `label` so convergence is decided from the SAME aggregation.
-    * Exposed for the plan dossier (PLANS.md dumps one round's shape).
+    * Exposed for the plan dossier (`graft.Plans` dumps one round's shape).
     */
   private[graft] def clusterStep(edges: DataFrame, labels: DataFrame): DataFrame = {
     val viaNeighbor = edges
@@ -949,7 +949,7 @@ object Dedup {
   /** 16-bit SimHash over tokens: bit b set iff the majority of token hashes
     * have bit b set (strict majority; tie -> 0). Token hash = first 4 md5 hex
     * chars as int. Routed through the native one-pass
-    * [[graft.spark.SimHash16]] expression — the HOF form ran one md5
+    * [[graft.spark.SimHashKernel.simhash16]] kernel — the HOF form ran one md5
     * `transform` plus SIXTEEN interpreted `filter` traversals of the
     * token-hash array per document. Bit-identical (pinned by a parity spec
     * against [[simhashHof]] and by the unchanged DuckDB twin).
@@ -1035,7 +1035,7 @@ object Dedup {
     observeCapDrops(blocks, "simhash", size(col("ms")), simhashMaxBlock)
       .filter(size(col("ms")) > 1 && size(col("ms")) <= simhashMaxBlock)
       // in-block quadratic comparison via the native one-pass
-      // [[graft.spark.SimHashPairs]] kernel: only pairs within maxHamming
+      // [[graft.spark.SimHashPairsKernel.pairs]] kernel: only pairs within maxHamming
       // are ever materialized (the HOF form built EVERY in-block pair as an
       // interpreted struct before the filter — blocks cluster to ~700 docs
       // on natural-language signatures, so that was millions of structs)
@@ -1299,7 +1299,7 @@ object Dedup {
   /** The shared doc→blocks projection of [[spanDedup]] /
     * [[spanDedupIncremental]]: narrow posexplode into
     * `(doc_id, pos, block, h)` via the native one-pass
-    * [[graft.spark.SpanBlocks]] kernel (the HOF
+    * [[graft.spark.SpanBlocksKernel.spanBlocks]] kernel (the HOF
     * `transform(sequence...slice)` form re-split the text inside every
     * lambda element — interpreted, O(blocks × tokens) per doc; parity
     * spec pins bit-identical output).

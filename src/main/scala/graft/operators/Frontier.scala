@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 /** Crawl-FRONTIER ingest — the URL-side member of the incremental-ingest
   * family ([[Dedup.incrementalDedup]] guards document content; this guards
   * the frontier itself): a batch of discovered URLs is canonicalized
-  * (native [[graft.spark.UrlCanonical]] expression), screened against the
+  * (native [[graft.spark.UrlKernel.canonicalize]] kernel), screened against the
   * crawled corpus's canonical-key artifact behind a Bloom prescreen, and
   * the genuinely NEW urls are rate-capped per host before they enter the
   * fetch queue (politeness/anti-spider-trap — the [[Sampling.domainCap]]

@@ -79,6 +79,9 @@ object TextAnalysis {
 
   /** The interpreted when-chain twin of [[langPredicted]] — kept for the
     * parity spec that pins the native kernel to the SQL-expressible form.
+    * Known difference on NULL text: every score is NULL, no branch holds and
+    * the chain falls through to "fr", while the native kernel gives NULL.
+    * The corpus has no NULL text, so the oracle cannot see this.
     */
   def langPredictedHof: Column = {
     val Seq(en, de, es, fr) = langScores.map(_._2)
@@ -100,7 +103,7 @@ object TextAnalysis {
 
   /** Polynomial rolling hash (Karp-Rabin form): h = (h*31 + code) mod 2^31-1
     * over the character codes, routed through the native one-pass
-    * [[graft.spark.RollingHash]] expression (the HOF form evaluated an
+    * [[graft.spark.RollingHashKernel.rollingHash]] kernel (the HOF form evaluated an
     * interpreted lambda + a substring PER CHARACTER — the per-document
     * fingerprint hot loop at 100 TB). Bit-identical to the interpreted
     * `aggregate(transform(sequence(...), i -> ascii(substr(i,1))))` chain

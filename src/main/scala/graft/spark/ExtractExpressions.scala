@@ -1,9 +1,10 @@
 package graft.spark
 
 import graft.core.Extractor
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{GraftColumnBridge, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, QuaternaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal,
+  QuaternaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, IntegerType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -114,39 +115,24 @@ object GraftExtensions {
     }
   )
 
-  /** One-arg native kernels, SQL-registered so the whole kernel set is
-    * reachable from pure SQL (not just the DataFrame DSL).
-    */
-  private def unaryFn(name: String, cls: Class[_], build: Expression => Expression) = (
-    FunctionIdentifier(name),
-    new ExpressionInfo(cls.getName, name),
-    (children: Seq[Expression]) => {
-      require(children.length == 1, s"$name(x) takes 1 argument")
-      build(children(0))
-    }
-  )
+  import HashFunctions._
 
+  /** The native kernels, SQL-registered from their [[HashFunctions]]
+    * declarations so the kernel set is reachable from pure SQL (not just
+    * the DataFrame DSL). `span_blocks` goes through its column builder, so
+    * its width is an int literal with the same positive-width guard.
+    */
   val functions = Seq(
-    fn("extract_text", "text"), fn("extract_status", "status"), vecDotFn,
-    unaryFn("shingles3", classOf[Shingles3], Shingles3),
-    unaryFn("minhash16", classOf[MinHash16], MinHash16),
-    unaryFn("rolling_hash", classOf[RollingHash], RollingHash),
-    unaryFn("simhash16", classOf[SimHash16], SimHash16),
-    unaryFn("url_canonical", classOf[UrlCanonical], UrlCanonical),
-    (
-      FunctionIdentifier("span_blocks"),
-      new ExpressionInfo(classOf[SpanBlocks].getName, "span_blocks"),
-      (children: Seq[Expression]) => {
-        require(children.length == 2,
-          "span_blocks(text, width) takes 2 arguments")
-        val w = children(1) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-          case other => throw new IllegalArgumentException(
-            s"span_blocks width must be an int literal, got $other")
-        }
-        SpanBlocks(children(0), w)
-      }
-    ))
+    fn("extract_text", "text"), fn("extract_status", "status"), vecDotFn) ++
+    Seq(shingles3Kernel, minHash16Kernel, rollingHashKernel, simHash16Kernel,
+      urlCanonicalKernel).map(_.sqlFunction()) :+
+    spanBlocksKernel.sqlFunction {
+      case Seq(text, Literal(w: Int, IntegerType)) =>
+        GraftColumnBridge.expression(spanBlocks(GraftColumnBridge.column(text), w))
+      case args => throw new IllegalArgumentException(
+        "span_blocks(text, width) takes a text and an int literal width, got " +
+          args.mkString(", "))
+    }
 
   /** Imperative registration on an already-built session. */
   def register(spark: org.apache.spark.sql.SparkSession): Unit =

@@ -1,19 +1,43 @@
 package graft.spark
 
 import org.apache.spark.sql.{Column, GraftColumnBridge}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.GraftColumnBridge.StaticKernel
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
+import org.apache.spark.sql.types._
 
-/** Static kernel the generated (whole-stage codegen) Java calls into. */
-object MinHashKernel {
-
-  private val md5 = new ThreadLocal[java.security.MessageDigest] {
+/** One thread-local MD5 digest and one lowercase-hex encoder shared by
+  * every md5-based kernel (a `MessageDigest` is not thread-safe, and
+  * `getInstance` per row is a provider lookup plus an allocation).
+  */
+private[spark] object Md5 {
+  private val digest = new ThreadLocal[java.security.MessageDigest] {
     override def initialValue(): java.security.MessageDigest =
       java.security.MessageDigest.getInstance("MD5")
   }
+
+  def get(): java.security.MessageDigest = digest.get()
+
+  private val hexDigits = "0123456789abcdef".toCharArray
+
+  def hex(d: Array[Byte]): String = {
+    val out = new Array[Char](32)
+    var i = 0
+    while (i < 16) {
+      out(2 * i) = hexDigits((d(i) >> 4) & 0xf)
+      out(2 * i + 1) = hexDigits(d(i) & 0xf)
+      i += 1
+    }
+    new String(out)
+  }
+}
+
+/** MinHash signature kernel: the 16 keyed 32-bit hashes of
+  * [[graft.operators.Dedup.minhashSignature]] in one primitive pass over
+  * the shingle array, replacing four md5-building `transform`s plus sixteen
+  * interpreted `array_min(transform(substring...))` traversals per row.
+  */
+object MinHashKernel {
 
   private val salts: Array[Array[Byte]] =
     Array("0:", "1:", "2:", "3:").map(_.getBytes("UTF-8"))
@@ -31,7 +55,7 @@ object MinHashKernel {
     */
   def minhash16(grams: ArrayData): ArrayData = {
     val mins = Array.fill(16)(Long.MaxValue)
-    val digestFn = md5.get()
+    val digestFn = Md5.get()
     var i = 0
     val n = grams.numElements()
     while (i < n) {
@@ -59,35 +83,10 @@ object MinHashKernel {
   }
 }
 
-/** Native codegen'd MinHash signature: the 16 keyed 32-bit hashes of
-  * [[graft.operators.Dedup.minhashSignature]] in one primitive pass over
-  * the shingle array, replacing four md5-building `transform`s plus sixteen
-  * interpreted `array_min(transform(substring...))` traversals per row.
-  * Same "(b) custom Catalyst Expression" tier as [[ExtractTurnField]] /
-  * [[VecDot]]; values are bit-identical to the HOF/DuckDB form (pinned by a
-  * parity spec and the oracle hash-compare).
+/** Word-3-gram shingling kernel. Feeds [[MinHashKernel]] and the Jaccard
+  * verifiers; the pair replaces the two hottest interpreted higher-order
+  * chains in the dedup family.
   */
-case class MinHash16(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"minhash16 expects array<string>, got ${other.simpleString}")
-  }
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override protected def nullSafeEval(g: Any): Any =
-    MinHashKernel.minhash16(g.asInstanceOf[ArrayData])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.spark.MinHashKernel.minhash16($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Static kernel for [[Shingles3]]. */
 object ShinglesKernel {
   /** Distinct word-3-gram shingles of `text`, split on single spaces with
     * trailing empties kept (Java `split(" ", -1)` == Spark
@@ -119,31 +118,9 @@ object ShinglesKernel {
   }
 }
 
-/** Native codegen'd word-3-gram shingling (see [[ShinglesKernel.shingles3]]).
-  * Feeds [[MinHash16]] and the Jaccard verifiers; the pair replaces the two
-  * hottest interpreted higher-order chains in the dedup family.
+/** Rolling-hash fingerprint kernel — the per-document fingerprint
+  * primitive of [[graft.operators.TextAnalysis.fingerprint]].
   */
-case class Shingles3(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"shingles3 expects string, got ${other.simpleString}")
-  }
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-
-  override protected def nullSafeEval(t: Any): Any =
-    ShinglesKernel.shingles3(t.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.spark.ShinglesKernel.shingles3($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Static kernel for [[RollingHash]]. */
 object RollingHashKernel {
   /** Polynomial rolling hash h = (h*31 + code) mod 2^31-1 over the
     * characters of `text`, where `code` replicates the HOF form
@@ -170,38 +147,10 @@ object RollingHashKernel {
   }
 }
 
-/** Native codegen'd rolling-hash fingerprint (see
-  * [[RollingHashKernel.rollingHash]]) — the per-document fingerprint
-  * primitive of [[graft.operators.TextAnalysis.fingerprint]], third member
-  * of the one-pass kernel set ([[Shingles3]], [[MinHash16]]).
+/** 16-bit SimHash kernel: collapses the per-document signature from one
+  * md5-HOF plus sixteen interpreted filter traversals to a single pass.
   */
-case class RollingHash(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"rolling_hash expects string, got ${other.simpleString}")
-  }
-
-  override def dataType: DataType = LongType
-
-  override protected def nullSafeEval(t: Any): Any =
-    RollingHashKernel.rollingHash(t.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.spark.RollingHashKernel.rollingHash($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Static kernel for [[SimHash16]]. */
 object SimHashKernel {
-
-  private val md5 = new ThreadLocal[java.security.MessageDigest] {
-    override def initialValue(): java.security.MessageDigest =
-      java.security.MessageDigest.getInstance("MD5")
-  }
 
   /** 16-bit SimHash over single-space tokens in ONE pass. Token hash = the
     * first 16 bits of md5(token) big-endian (== `CAST(conv(substring(
@@ -217,7 +166,7 @@ object SimHashKernel {
     val toks = text.toString.split(" ", -1)
     val n = toks.length
     val counts = new Array[Int](16)
-    val digestFn = md5.get()
+    val digestFn = Md5.get()
     var i = 0
     while (i < n) {
       digestFn.reset()
@@ -240,33 +189,10 @@ object SimHashKernel {
   }
 }
 
-/** Native codegen'd 16-bit SimHash signature (see
-  * [[SimHashKernel.simhash16]]) — fourth member of the one-pass kernel set
-  * ([[Shingles3]], [[MinHash16]], [[RollingHash]]); collapses the
-  * per-document signature from one md5-HOF plus sixteen interpreted filter
-  * traversals to a single pass.
+/** In-block SimHash pairing kernel: the quadratic block comparison is the
+  * dedup family's hottest loop once blocks cluster (natural-language
+  * signatures concentrate: 6k docs put ~700 in one rotation window at sf0.1).
   */
-case class SimHash16(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"simhash16 expects string, got ${other.simpleString}")
-  }
-
-  override def dataType: DataType = org.apache.spark.sql.types.IntegerType
-
-  override protected def nullSafeEval(t: Any): Any =
-    SimHashKernel.simhash16(t.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.spark.SimHashKernel.simhash16($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Static kernel for [[SimHashPairs]]. */
 object SimHashPairsKernel {
   /** All (a_id, b_id, hamming) pairs within one block whose hamming
     * distance is <= maxHamming, in one primitive pass over the sorted
@@ -306,43 +232,10 @@ object SimHashPairsKernel {
   }
 }
 
-/** Native codegen'd in-block SimHash pairing (see
-  * [[SimHashPairsKernel.pairs]]) — fifth one-pass kernel; the quadratic
-  * block comparison is the dedup family's hottest loop once blocks cluster
-  * (natural-language signatures concentrate: 6k docs put ~700 in one
-  * rotation window at sf0.1).
-  */
-case class SimHashPairs(child: Expression, maxHamming: Int) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(s: org.apache.spark.sql.types.StructType, _)
-        if s.length == 2 && s(0).dataType == LongType &&
-          s(1).dataType == org.apache.spark.sql.types.IntegerType =>
-      TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"simhash_pairs expects array<struct<long,int>>, got ${other.simpleString}")
-  }
-
-  override def dataType: DataType = ArrayType(
-    org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("a_id", LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("b_id", LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("hamming",
-        org.apache.spark.sql.types.IntegerType, nullable = false))),
-    containsNull = false)
-
-  override protected def nullSafeEval(ms: Any): Any =
-    SimHashPairsKernel.pairs(ms.asInstanceOf[ArrayData], maxHamming)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.spark.SimHashPairsKernel.pairs($c, $maxHamming)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Static kernel for [[UrlCanonical]] — delegates to the unit-tested core
-  * function so the columnar semantics ARE [[graft.core.Urls.canonicalize]].
+/** Crawl-URL canonicalization kernel: the dedup-key normalization applied
+  * before URL-level dedup at crawl scale, as a narrow map. Delegates to the
+  * unit-tested core function so the columnar semantics ARE
+  * [[graft.core.Urls.canonicalize]].
   */
 object UrlKernel {
   def canonicalize(url: org.apache.spark.unsafe.types.UTF8String)
@@ -351,32 +244,10 @@ object UrlKernel {
       graft.core.Urls.canonicalize(url.toString))
 }
 
-/** Native codegen'd crawl-URL canonicalization (see
-  * [[graft.core.Urls.canonicalize]]): the dedup-key normalization applied
-  * before URL-level dedup at crawl scale — a narrow map, one kernel call
-  * per row inside whole-stage codegen.
+/** Span blocking kernel — the hot loop of the span-dedup family
+  * ([[graft.operators.Dedup.spanDedup]] and its ingest/streaming forms
+  * explode every document through it).
   */
-case class UrlCanonical(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"url_canonical expects string, got ${other.simpleString}")
-  }
-
-  override def dataType: DataType = StringType
-
-  override protected def nullSafeEval(u: Any): Any =
-    UrlKernel.canonicalize(u.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.spark.UrlKernel.canonicalize($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Static kernel for [[SpanBlocks]]. */
 object SpanBlocksKernel {
   /** Consecutive `width`-token blocks of `text` (single-space split with
     * trailing empties kept — Java `split(" ", -1)` == Spark
@@ -411,34 +282,12 @@ object SpanBlocksKernel {
   }
 }
 
-/** Native codegen'd span blocking (see [[SpanBlocksKernel.spanBlocks]]) —
-  * the hot loop of the span-dedup family ([[graft.operators.Dedup.spanDedup]]
-  * and its ingest/streaming forms explode every document through it).
-  * Same "(b) custom Catalyst Expression" tier as [[Shingles3]].
+/** Language-id kernels. `langPredict` is the mixture key every sampler keys
+  * on ([[graft.operators.Sampling]]); its HOF form evaluated up to ~12
+  * interpreted filter-over-split traversals per reference. `langScores4`
+  * collapses the langId projection's four HOF columns into one call that
+  * common-subexpression elimination can share, unlike the lambdas.
   */
-case class SpanBlocks(child: Expression, width: Int) extends UnaryExpression {
-  require(width > 0, s"span_blocks width must be positive, got $width")
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"span_blocks expects string, got ${other.simpleString}")
-  }
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-
-  override protected def nullSafeEval(t: Any): Any =
-    SpanBlocksKernel.spanBlocks(
-      t.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], width)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.spark.SpanBlocksKernel.spanBlocks($c, $width)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Static kernel for [[LangPredict]] / [[LangScores4]]. */
 object LangKernel {
 
   /** word -> bitmask of language indexes (en=1, de=2, es=4, fr=8), built
@@ -510,79 +359,12 @@ object LangKernel {
   }
 }
 
-/** Native codegen'd language prediction (see [[LangKernel.langPredict]]) —
-  * the mixture-key expression every sampler keys on
-  * ([[graft.operators.Sampling]] stratified/upweight/temperature/exact-N/
-  * split/budget). The HOF form evaluated up to ~12 interpreted
-  * filter-over-split traversals per reference, and downstream when-chains
-  * referencing the alias multiplied the references.
+/** Winnowed window fingerprinting kernel — the hot loop of the
+  * winnowed-fingerprint dedup family ([[graft.operators.Dedup.windowDupPairs]]
+  * and the artifact/ingest forms). The HOF form paid one interpreted md5 plus
+  * two array slices per window position per document.
   */
-case class LangPredict(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"lang_predict expects string, got ${other.simpleString}")
-  }
-
-  override def dataType: DataType = StringType
-
-  override protected def nullSafeEval(t: Any): Any =
-    LangKernel.langPredict(t.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.spark.LangKernel.langPredict($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Native codegen'd per-language stopword scores (see
-  * [[LangKernel.langScores4]]): array(c_en, c_de, c_es, c_fr) in one token
-  * pass — the langId projection's four HOF columns collapsed to one kernel
-  * call (CSE-eligible, unlike the lambdas).
-  */
-case class LangScores4(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"lang_scores4 expects string, got ${other.simpleString}")
-  }
-
-  override def dataType: DataType =
-    ArrayType(org.apache.spark.sql.types.IntegerType, containsNull = false)
-
-  override protected def nullSafeEval(t: Any): Any =
-    LangKernel.langScores4(t.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.spark.LangKernel.langScores4($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Static kernel for [[WinnowFps]]. */
 object WinnowKernel {
-
-  private val md5 = new ThreadLocal[java.security.MessageDigest] {
-    override def initialValue(): java.security.MessageDigest =
-      java.security.MessageDigest.getInstance("MD5")
-  }
-
-  private val hexDigits = "0123456789abcdef".toCharArray
-
-  private def hex(d: Array[Byte]): String = {
-    val out = new Array[Char](32)
-    var i = 0
-    while (i < 16) {
-      out(2 * i) = hexDigits((d(i) >> 4) & 0xf)
-      out(2 * i + 1) = hexDigits(d(i) & 0xf)
-      i += 1
-    }
-    new String(out)
-  }
 
   /** The DISTINCT winnowed window fingerprints of `text` in one pass
     * (Schleimer et al. 2003 selection over md5 window fingerprints):
@@ -612,7 +394,7 @@ object WinnowKernel {
       tokBytes(i) = toks(i).getBytes(java.nio.charset.StandardCharsets.UTF_8)
       i += 1
     }
-    val digestFn = md5.get()
+    val digestFn = Md5.get()
     val digests = new Array[Array[Byte]](nw)
     i = 0
     while (i < nw) {
@@ -637,7 +419,7 @@ object WinnowKernel {
         if (java.util.Arrays.compareUnsigned(digests(j), best) < 0) best = digests(j)
         j += 1
       }
-      seen.add(hex(best))
+      seen.add(Md5.hex(best))
       k += 1
     }
     val out = new Array[Any](seen.size)
@@ -651,49 +433,11 @@ object WinnowKernel {
   }
 }
 
-/** Native codegen'd winnowed window fingerprinting (see
-  * [[WinnowKernel.winnowFps]]) — the hot loop of the winnowed-fingerprint
-  * dedup family ([[graft.operators.Dedup.windowDupPairs]] and the
-  * artifact/ingest forms). The HOF form paid one interpreted md5 + two
-  * array slices per window position per document.
+/** MinHash band-key kernel — the banding half of every minhash
+  * artifact/signature build ([[graft.operators.Dedup]] hashAndBands /
+  * signatureFromGrams).
   */
-case class WinnowFps(child: Expression, w: Int, s: Int) extends UnaryExpression {
-  require(w > 0 && s > 0, s"winnow_fps needs positive window/stride, got $w/$s")
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"winnow_fps expects string, got ${other.simpleString}")
-  }
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-
-  override protected def nullSafeEval(t: Any): Any =
-    WinnowKernel.winnowFps(
-      t.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], w, s)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.spark.WinnowKernel.winnowFps($c, $w, $s)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Static kernel for [[MinHashBands]]. */
 object MinHashBandsKernel {
-
-  private val hexDigits = "0123456789abcdef".toCharArray
-
-  private def hex(d: Array[Byte]): String = {
-    val out = new Array[Char](32)
-    var i = 0
-    while (i < 16) {
-      out(2 * i) = hexDigits((d(i) >> 4) & 0xf)
-      out(2 * i + 1) = hexDigits(d(i) & 0xf)
-      i += 1
-    }
-    new String(out)
-  }
 
   /** The band keys of a shingle array in one pass: the 16
     * [[MinHashKernel.minhash16]] values banded 4x4, band b =
@@ -701,15 +445,18 @@ object MinHashBandsKernel {
     * `md5(concat_ws("_", element_at(mh, i).cast("string")...))`, pinned by
     * a parity spec. EMPTY grams (a doc too short to shingle) yield NULL,
     * the same genuinely-NULL band semantics as the
-    * `when(mh.isNotNull, ...)` guard in the expression form — null never
-    * equi-joins, so short docs can never spuriously collide. One kernel
+    * `when(mh.isNotNull, ...)` guard in the expression form. NULL never
+    * equi-joins, so on the equi-join paths (incremental dedup against
+    * artifacts) short docs cannot spuriously collide. A `groupBy` keeps
+    * NULL as a key, though: [[graft.operators.Dedup.bandsToPairs]] fed such
+    * a table puts all short docs in one shared NULL bucket per band. One kernel
     * node replaces the 16-column md5/concat_ws band subtree that every
     * artifact/signature plan carried.
     */
   def bands(grams: ArrayData, bandCount: Int, rowsPerBand: Int): ArrayData = {
     if (grams.numElements() == 0) return null
     val mins = MinHashKernel.minhash16(grams)
-    val digestFn = java.security.MessageDigest.getInstance("MD5")
+    val digestFn = Md5.get()
     val out = new Array[Any](bandCount)
     var b = 0
     while (b < bandCount) {
@@ -722,7 +469,7 @@ object MinHashBandsKernel {
       }
       digestFn.reset()
       out(b) = org.apache.spark.unsafe.types.UTF8String.fromString(
-        hex(digestFn.digest(sb.toString.getBytes(
+        Md5.hex(digestFn.digest(sb.toString.getBytes(
           java.nio.charset.StandardCharsets.UTF_8))))
       b += 1
     }
@@ -730,49 +477,8 @@ object MinHashBandsKernel {
   }
 }
 
-/** Native codegen'd MinHash band keys (see [[MinHashBandsKernel.bands]]) —
-  * the banding half of every minhash artifact/signature build
-  * ([[graft.operators.Dedup]] hashAndBands / signatureFromGrams).
-  */
-case class MinHashBands(child: Expression, bandCount: Int, rowsPerBand: Int)
-    extends UnaryExpression {
-  require(bandCount > 0 && rowsPerBand > 0,
-    s"minhash_bands needs positive geometry, got $bandCount x $rowsPerBand")
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"minhash_bands expects array<string>, got ${other.simpleString}")
-  }
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-
-  override def nullable: Boolean = true
-
-  override protected def nullSafeEval(g: Any): Any =
-    MinHashBandsKernel.bands(g.asInstanceOf[ArrayData], bandCount, rowsPerBand)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      s"""
-         |${ev.value} = graft.spark.MinHashBandsKernel.bands($c, $bandCount, $rowsPerBand);
-         |if (${ev.value} == null) {
-         |  ${ev.isNull} = true;
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Static kernel for [[ClassifierBuckets]]. */
+/** Per-token classifier feature-bucket kernel (classifier training). */
 object ClassifierBucketsKernel {
-
-  private val md5 = new ThreadLocal[java.security.MessageDigest] {
-    override def initialValue(): java.security.MessageDigest =
-      java.security.MessageDigest.getInstance("MD5")
-  }
 
   /** The [[ClassifierScoreKernel]] feature bucket of every single-space
     * token, in token order — one array per document, so classifier
@@ -783,7 +489,7 @@ object ClassifierBucketsKernel {
   def buckets(text: org.apache.spark.unsafe.types.UTF8String,
       b: Int): ArrayData = {
     val toks = text.toString.split(" ", -1)
-    val digestFn = md5.get()
+    val digestFn = Md5.get()
     val out = new Array[Any](toks.length)
     var i = 0
     while (i < toks.length) {
@@ -797,33 +503,10 @@ object ClassifierBucketsKernel {
   }
 }
 
-/** Native codegen'd per-token classifier feature buckets (see
-  * [[ClassifierBucketsKernel.buckets]]).
+/** Token-membership count kernel — the blocklist / stopword counting
+  * primitive ([[graft.operators.TextAnalysis.blocklist]], `quality`,
+  * `qualityFunnel`, classifier training labels).
   */
-case class ClassifierBuckets(child: Expression, b: Int) extends UnaryExpression {
-  require(b > 0, s"classifier_buckets needs a positive bucket count, got $b")
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"classifier_buckets expects string, got ${other.simpleString}")
-  }
-
-  override def dataType: DataType =
-    ArrayType(org.apache.spark.sql.types.IntegerType, containsNull = false)
-
-  override protected def nullSafeEval(t: Any): Any =
-    ClassifierBucketsKernel.buckets(
-      t.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], b)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.spark.ClassifierBucketsKernel.buckets($c, $b)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Static kernel for [[TokenSetCount]]. */
 object TokenSetCountKernel {
   /** Count of single-space tokens (trailing empties kept) contained in
     * `words` — bit-identical to the HOF form
@@ -845,52 +528,18 @@ object TokenSetCountKernel {
   }
 }
 
-/** Native codegen'd token-membership count (see
-  * [[TokenSetCountKernel.count]]) — the blocklist / stopword counting
-  * primitive ([[graft.operators.TextAnalysis.blocklist]], `quality`,
-  * `qualityFunnel`, classifier training labels).
+/** Hashed-feature classifier score kernel: the fastText/CCNet-style
+  * quality scorer as one call per row.
   */
-case class TokenSetCount(child: Expression, words: Seq[String]) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"token_set_count expects string, got ${other.simpleString}")
-  }
-
-  override def dataType: DataType = org.apache.spark.sql.types.IntegerType
-
-  @transient private lazy val set: java.util.HashSet[String] = {
-    val s = new java.util.HashSet[String]()
-    words.foreach(s.add)
-    s
-  }
-
-  override protected def nullSafeEval(t: Any): Any =
-    TokenSetCountKernel.count(
-      t.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], set)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("words", set, "java.util.HashSet<String>")
-    defineCodeGen(ctx, ev, c => s"graft.spark.TokenSetCountKernel.count($c, $ref)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Static kernel for [[ClassifierScore]]. */
 object ClassifierScoreKernel {
-
-  private val md5 = new ThreadLocal[java.security.MessageDigest] {
-    override def initialValue(): java.security.MessageDigest =
-      java.security.MessageDigest.getInstance("MD5")
-  }
 
   /** Hashed-feature linear score: sum over single-space tokens of
     * `weights[h(t) mod B]` where h(t) = the first 16 bits of md5(t)
     * big-endian (== `CAST(conv(substring(md5(t), 1, 4), 16, 10) AS INT)`,
-    * the simhash convention) and B = weights.length. Bit-identical to the
+    * the simhash convention) and B = weights.length. `weights` is an
+    * `ArraySeq.ofLong` rather than a raw `long[]` because it rides the plan
+    * as a literal argument: it compares by value, so two builds with equal
+    * weights share one subexpression-eliminated call. Bit-identical to the
     * interpreted `aggregate(split(text, ' '), ..., (acc, t) -> acc +
     * element_at(wArr, pmod(...) + 1))` chain of
     * [[graft.operators.TextAnalysis.classifierScore]] for both the
@@ -900,56 +549,29 @@ object ClassifierScoreKernel {
     * long accumulation here matches both — pinned by a parity spec.
     */
   def score(text: org.apache.spark.unsafe.types.UTF8String,
-      weights: Array[Long]): Long = {
+      weights: scala.collection.immutable.ArraySeq.ofLong): Long = {
     val toks = text.toString.split(" ", -1)
-    val b = weights.length
-    val digestFn = md5.get()
+    val w = weights.unsafeArray
+    val b = w.length
+    val digestFn = Md5.get()
     var acc = 0L
     var i = 0
     while (i < toks.length) {
       digestFn.reset()
       val d = digestFn.digest(toks(i).getBytes(java.nio.charset.StandardCharsets.UTF_8))
       val h = ((d(0) & 0xff) << 8) | (d(1) & 0xff)
-      acc += weights(h % b)
+      acc += w(h % b)
       i += 1
     }
     acc
   }
 }
 
-/** Native codegen'd hashed-feature classifier score (see
-  * [[ClassifierScoreKernel.score]]): the fastText/CCNet-style quality
-  * scorer as one kernel call per row — weights (untrained constant table
-  * or trained cross-difference longs) ride the plan as a reference object,
-  * exactly as the HOF form carried them as an array literal.
+/** Adjacent-character-pair kernel — the per-round hot loop of BPE training
+  * ([[graft.operators.TextAnalysis.bpePairStats]] / `trainBpeMerges`): one
+  * Generate over one kernel array instead of two chained Generates over an
+  * interpreted transform.
   */
-case class ClassifierScore(child: Expression, weights: Seq[Long]) extends UnaryExpression {
-  require(weights.nonEmpty, "classifier_score needs a non-empty weight table")
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"classifier_score expects string, got ${other.simpleString}")
-  }
-
-  override def dataType: DataType = LongType
-
-  @transient private lazy val wArr: Array[Long] = weights.toArray
-
-  override protected def nullSafeEval(t: Any): Any =
-    ClassifierScoreKernel.score(
-      t.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], wArr)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("weights", wArr, "long[]")
-    defineCodeGen(ctx, ev, c => s"graft.spark.ClassifierScoreKernel.score($c, $ref)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Static kernel for [[TextCharPairs]]. */
 object CharPairsKernel {
   /** All adjacent two-code-point pairs of every single-space token with at
     * least two code points, token order then within-token order — the
@@ -984,77 +606,133 @@ object CharPairsKernel {
   }
 }
 
-/** Native codegen'd adjacent-character-pair extraction (see
-  * [[CharPairsKernel.pairs]]) — the per-round hot loop of BPE training
-  * ([[graft.operators.TextAnalysis.bpePairStats]] / `trainBpeMerges`):
-  * one Generate over one kernel array instead of two chained Generates
-  * over an interpreted transform.
+/** DataFrame-DSL access to the kernels above. Each kernel's signature is
+  * declared once here as a [[org.apache.spark.sql.GraftColumnBridge.StaticKernel]]
+  * (Spark's `StaticInvoke`: a direct static call inside whole-stage codegen).
+  * The column builders below and the SQL registrations in
+  * [[GraftExtensions.functions]] both build from those declarations; the
+  * builders also guard the parameters a caller passes in.
+  *
+  * Adding a kernel: write it as a static method on an `object` (Catalyst's
+  * internal types in and out: `UTF8String`, `ArrayData`, `Int`, `Long`),
+  * then declare it here with one `StaticKernel` and give it a column
+  * builder.
   */
-case class TextCharPairs(child: Expression) extends UnaryExpression {
+object HashFunctions {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"text_char_pairs expects string, got ${other.simpleString}")
+  private val strings = ArrayType(StringType, containsNull = false)
+  private val ints = ArrayType(IntegerType, containsNull = false)
+  private val wordSet = ObjectType(classOf[java.util.HashSet[_]])
+  private val weightSeq = ObjectType(classOf[scala.collection.immutable.ArraySeq.ofLong])
+
+  private[graft] val shingles3Kernel =
+    StaticKernel("shingles3", ShinglesKernel, "shingles3", strings, Seq(StringType))
+  private[graft] val minHash16Kernel = StaticKernel("minhash16", MinHashKernel, "minhash16",
+    ArrayType(LongType, containsNull = false), Seq(strings))
+  private[graft] val rollingHashKernel =
+    StaticKernel("rolling_hash", RollingHashKernel, "rollingHash", LongType, Seq(StringType))
+  private[graft] val simHash16Kernel =
+    StaticKernel("simhash16", SimHashKernel, "simhash16", IntegerType, Seq(StringType))
+  private[graft] val simHashPairsKernel = StaticKernel("simhash_pairs", SimHashPairsKernel,
+    "pairs",
+    ArrayType(StructType(Seq(
+      StructField("a_id", LongType, nullable = false),
+      StructField("b_id", LongType, nullable = false),
+      StructField("hamming", IntegerType, nullable = false))), containsNull = false),
+    Seq(ArrayType(StructType(Seq(
+      StructField("doc_id", LongType), StructField("simhash", IntegerType)))), IntegerType))
+  private[graft] val urlCanonicalKernel =
+    StaticKernel("url_canonical", UrlKernel, "canonicalize", StringType, Seq(StringType))
+  private[graft] val spanBlocksKernel = StaticKernel("span_blocks", SpanBlocksKernel,
+    "spanBlocks", strings, Seq(StringType, IntegerType))
+  private[graft] val langPredictKernel =
+    StaticKernel("lang_predict", LangKernel, "langPredict", StringType, Seq(StringType))
+  private[graft] val langScores4Kernel =
+    StaticKernel("lang_scores4", LangKernel, "langScores4", ints, Seq(StringType))
+  private[graft] val winnowFpsKernel = StaticKernel("winnow_fps", WinnowKernel, "winnowFps",
+    strings, Seq(StringType, IntegerType, IntegerType))
+  // empty grams give NULL bands (see MinHashBandsKernel.bands)
+  private[graft] val minHashBandsKernel = StaticKernel("minhash_bands", MinHashBandsKernel,
+    "bands", strings, Seq(strings, IntegerType, IntegerType), returnNullable = true)
+  private[graft] val classifierBucketsKernel = StaticKernel("classifier_buckets",
+    ClassifierBucketsKernel, "buckets", ints, Seq(StringType, IntegerType))
+  private[graft] val tokenSetCountKernel = StaticKernel("token_set_count",
+    TokenSetCountKernel, "count", IntegerType, Seq(StringType, wordSet))
+  private[graft] val classifierScoreKernel = StaticKernel("classifier_score",
+    ClassifierScoreKernel, "score", LongType, Seq(StringType, weightSeq))
+  private[graft] val textCharPairsKernel =
+    StaticKernel("text_char_pairs", CharPairsKernel, "pairs", strings, Seq(StringType))
+
+  /** Every declared kernel, for the specs that run them all. */
+  private[graft] val kernels: Seq[StaticKernel] = Seq(shingles3Kernel, minHash16Kernel,
+    rollingHashKernel, simHash16Kernel, simHashPairsKernel, urlCanonicalKernel,
+    spanBlocksKernel, langPredictKernel, langScores4Kernel, winnowFpsKernel,
+    minHashBandsKernel, classifierBucketsKernel, tokenSetCountKernel, classifierScoreKernel,
+    textCharPairsKernel)
+
+  /** A caller's parameter as a plain literal argument (the same expression
+    * whether the call comes from a DataFrame or from SQL).
+    */
+  private def param(value: Literal): Column = GraftColumnBridge.column(value)
+
+  def minHashBands(grams: Column, bandCount: Int, rowsPerBand: Int): Column = {
+    require(bandCount > 0 && rowsPerBand > 0,
+      s"minhash_bands needs positive geometry, got $bandCount x $rowsPerBand")
+    minHashBandsKernel(grams, param(Literal(bandCount)), param(Literal(rowsPerBand)))
   }
 
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
+  def classifierBuckets(text: Column, b: Int): Column = {
+    require(b > 0, s"classifier_buckets needs a positive bucket count, got $b")
+    classifierBucketsKernel(text, param(Literal(b)))
+  }
 
-  override protected def nullSafeEval(t: Any): Any =
-    CharPairsKernel.pairs(t.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
+  /** The word set rides the plan as a `HashSet` literal (equal sets compare
+    * equal, so repeated uses share one call).
+    */
+  def tokenSetCount(text: Column, words: Seq[String]): Column = {
+    val set = new java.util.HashSet[String]()
+    words.foreach(set.add)
+    tokenSetCountKernel(text, param(Literal(set, wordSet)))
+  }
 
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.spark.CharPairsKernel.pairs($c)")
+  /** Weights (untrained constant table or trained cross-difference longs)
+    * ride the plan as a literal, as the HOF form carried them as an array
+    * literal.
+    */
+  def classifierScore(text: Column, weights: Seq[Long]): Column = {
+    require(weights.nonEmpty, "classifier_score needs a non-empty weight table")
+    classifierScoreKernel(text, param(
+      Literal(new scala.collection.immutable.ArraySeq.ofLong(weights.toArray), weightSeq)))
+  }
 
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
+  def textCharPairs(text: Column): Column = textCharPairsKernel(text)
 
-/** DataFrame-DSL access. */
-object HashFunctions {
-  def minHashBands(grams: Column, bandCount: Int, rowsPerBand: Int): Column =
-    GraftColumnBridge.column(
-      MinHashBands(GraftColumnBridge.expression(grams), bandCount, rowsPerBand))
+  def langPredict(text: Column): Column = langPredictKernel(text)
 
-  def classifierBuckets(text: Column, b: Int): Column =
-    GraftColumnBridge.column(ClassifierBuckets(GraftColumnBridge.expression(text), b))
+  /** array(c_en, c_de, c_es, c_fr) in one token pass. */
+  def langScores4(text: Column): Column = langScores4Kernel(text)
 
-  def tokenSetCount(text: Column, words: Seq[String]): Column =
-    GraftColumnBridge.column(TokenSetCount(GraftColumnBridge.expression(text), words))
+  def winnowFps(text: Column, w: Int, s: Int): Column = {
+    require(w > 0 && s > 0, s"winnow_fps needs positive window/stride, got $w/$s")
+    winnowFpsKernel(text, param(Literal(w)), param(Literal(s)))
+  }
 
-  def classifierScore(text: Column, weights: Seq[Long]): Column =
-    GraftColumnBridge.column(ClassifierScore(GraftColumnBridge.expression(text), weights))
+  def spanBlocks(text: Column, width: Int): Column = {
+    require(width > 0, s"span_blocks width must be positive, got $width")
+    spanBlocksKernel(text, param(Literal(width)))
+  }
 
-  def textCharPairs(text: Column): Column =
-    GraftColumnBridge.column(TextCharPairs(GraftColumnBridge.expression(text)))
+  def urlCanonical(url: Column): Column = urlCanonicalKernel(url)
 
-  def langPredict(text: Column): Column =
-    GraftColumnBridge.column(LangPredict(GraftColumnBridge.expression(text)))
+  def minHash16(grams: Column): Column = minHash16Kernel(grams)
 
-  def langScores4(text: Column): Column =
-    GraftColumnBridge.column(LangScores4(GraftColumnBridge.expression(text)))
+  def shingles3(text: Column): Column = shingles3Kernel(text)
 
-  def winnowFps(text: Column, w: Int, s: Int): Column =
-    GraftColumnBridge.column(WinnowFps(GraftColumnBridge.expression(text), w, s))
+  def rollingHash(text: Column): Column = rollingHashKernel(text)
 
-  def spanBlocks(text: Column, width: Int): Column =
-    GraftColumnBridge.column(SpanBlocks(GraftColumnBridge.expression(text), width))
+  def simHash16(text: Column): Column = simHash16Kernel(text)
 
-  def urlCanonical(url: Column): Column =
-    GraftColumnBridge.column(UrlCanonical(GraftColumnBridge.expression(url)))
-
-  def minHash16(grams: Column): Column =
-    GraftColumnBridge.column(MinHash16(GraftColumnBridge.expression(grams)))
-
-  def shingles3(text: Column): Column =
-    GraftColumnBridge.column(Shingles3(GraftColumnBridge.expression(text)))
-
-  def rollingHash(text: Column): Column =
-    GraftColumnBridge.column(RollingHash(GraftColumnBridge.expression(text)))
-
-  def simHash16(text: Column): Column =
-    GraftColumnBridge.column(SimHash16(GraftColumnBridge.expression(text)))
-
+  /** `ms` is the block's sorted array<struct<doc_id: bigint, simhash: int>>. */
   def simHashPairs(ms: Column, maxHamming: Int): Column =
-    GraftColumnBridge.column(SimHashPairs(GraftColumnBridge.expression(ms), maxHamming))
+    simHashPairsKernel(ms, param(Literal(maxHamming)))
 }

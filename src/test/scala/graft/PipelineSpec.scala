@@ -1488,7 +1488,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     // the signature node is minhash_bands (minhash16 fused inside) since
     // the banding kernel landed; the invariant is unchanged — exactly one
     // signature evaluation, on the incoming side
-    val n = "minhash_?bands\\(".r.findAllIn(plan.toLowerCase).length
+    val n = "minhashbandskernel\\.bands\\(".r.findAllIn(plan.toLowerCase).length
     assert(n == 1, s"expected exactly 1 minhash-band eval (incoming side), got $n:\n$plan")
     // artifacts carry GUARDED bands: a too-short-to-shingle doc has NULL
     // band keys, never the md5('') constant concat_ws alone would produce
@@ -2064,6 +2064,16 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val edge = Seq("", "the", "der und ist", "le les y es the").toDF("text")
       .select(TextAnalysis.langPredicted.as("p")).collect().map(_.getString(0))
     assert(edge.toSeq == Seq("und", "en", "de", "es"))
+    // NULL text: the native kernel gives NULL (scores and prediction);
+    // the HOF when-chain falls through to "fr" — a known difference the
+    // oracle cannot see (the corpus has no NULL text)
+    val nul = Seq(Option.empty[String]).toDF("text")
+      .select(TextAnalysis.langPredicted.as("p"),
+        graft.spark.HashFunctions.langScores4(col("text")).as("sc"),
+        TextAnalysis.langPredictedHof.as("hof"))
+      .head
+    assert(nul.isNullAt(0) && nul.isNullAt(1))
+    assert(nul.getString(2) == "fr")
   }
 
   test("winnow_fps: native winnowing identical to the HOF slice chain") {
