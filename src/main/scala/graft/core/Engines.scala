@@ -250,13 +250,13 @@ object Engines {
         if (nanoTime() > deadline) Left("command timed out")
         else
           parsed.flatMap { text =>
-            val ocrLayer = Pdf.synthesize(text)
+            // the OCR layer is built only for the output types that carry it
             val delivered: Either[String, Array[Byte]] = ocrType match {
               case "TXT" => Right(Payload.bytes(text)) // pdftotext path, 455-471
               case "COMBINEDPDF" =>
-                val combined = multistamp(pdf, ocrLayer)
+                val combined = multistamp(pdf, Pdf.synthesize(text))
                 Right(if (args.resultOptimize) optimizePdf(combined) else combined)
-              case "OCRLAYERONLY" => Right(ocrLayer)
+              case "OCRLAYERONLY" => Right(Pdf.synthesize(text))
               case _              => Left("requested output format is not supported") // 471-476
             }
             delivered.map(b => EngineResult(Payload.encodeBase64(b), "done"))

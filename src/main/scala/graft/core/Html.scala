@@ -47,28 +47,48 @@ object Html {
     false
   }
 
+  /** Trim edge whitespace and collapse every inner whitespace run
+    * (`Character.isWhitespace`) to one space. An input that is already in
+    * that form is returned as is, without a copy.
+    */
   def collapseWs(s: String): String = {
-    val sb = new StringBuilder(s.length)
-    var pendingSpace = false
-    var started = false
-    s.foreach { c =>
-      if (c.isWhitespace) { if (started) pendingSpace = true }
-      else {
-        if (pendingSpace) { sb.append(' '); pendingSpace = false }
-        sb.append(c); started = true
-      }
+    val n = s.length
+    // longest prefix that is already collapsed; `afterSpace` starts true so
+    // leading whitespace ends it at once
+    var i = 0
+    var afterSpace = true
+    var clean = true
+    while (clean && i < n) {
+      val c = s.charAt(i)
+      if (!Character.isWhitespace(c)) { afterSpace = false; i += 1 }
+      else if (!afterSpace && c == ' ') { afterSpace = true; i += 1 }
+      else clean = false
     }
-    sb.toString
+    if (i == n && (n == 0 || !afterSpace)) return s
+    // the output is never longer than the input: write into a char array.
+    // Copy the clean prefix; a single space it ends with becomes pending.
+    var pendingSpace = i > 0 && afterSpace
+    val out = new Array[Char](n)
+    var j = if (pendingSpace) i - 1 else i
+    s.getChars(0, j, out, 0)
+    while (i < n) {
+      val c = s.charAt(i)
+      if (Character.isWhitespace(c)) { if (j > 0) pendingSpace = true }
+      else {
+        if (pendingSpace) { out(j) = ' '; j += 1; pendingSpace = false }
+        out(j) = c; j += 1
+      }
+      i += 1
+    }
+    new String(out, 0, j)
   }
 
   private final class Block(val tag: String) {
-    val text = new StringBuilder
+    val text = new java.lang.StringBuilder
     var linkChars = 0
-    def collapsed: String = collapseWs(text.toString)
-    def linkDensity: Double = {
-      val t = collapsed.length
-      if (t == 0) 0.0 else math.min(1.0, linkChars.toDouble / t.toDouble)
-    }
+    def linkDensity(collapsedLength: Int): Double =
+      if (collapsedLength == 0) 0.0
+      else math.min(1.0, linkChars.toDouble / collapsedLength.toDouble)
   }
 
   /** Extract main content from HTML. `separator` joins the kept blocks. */
@@ -110,11 +130,21 @@ object Html {
           val e = html.indexOf('>', i + 1)
           if (e < 0) { appendText(html.substring(i)); i = n }
           else {
-            val raw = html.substring(i + 1, e).trim
-            val closing = raw.startsWith("/")
-            val selfClosed = raw.endsWith("/")
-            val body = raw.stripPrefix("/").stripSuffix("/").trim
-            val name = body.takeWhile(ch => ch.isLetterOrDigit).toLowerCase
+            // tag name by index: trim (chars <= ' ', as String.trim), one
+            // leading and one trailing '/', trim again, then the leading
+            // letters and digits, lowercased
+            var a = i + 1
+            var b = e
+            while (a < b && html.charAt(a) <= ' ') a += 1
+            while (b > a && html.charAt(b - 1) <= ' ') b -= 1
+            val closing = a < b && html.charAt(a) == '/'
+            val selfClosed = a < b && html.charAt(b - 1) == '/'
+            if (closing) a += 1
+            if (selfClosed && b > a) b -= 1
+            while (a < b && html.charAt(a) <= ' ') a += 1
+            var k = a
+            while (k < b && Character.isLetterOrDigit(html.charAt(k))) k += 1
+            val name = if (k == a) "" else html.substring(a, k).toLowerCase
             if (name.nonEmpty) {
               if (!closing) {
                 // raw-text elements: skip to the matching close tag entirely
@@ -164,14 +194,18 @@ object Html {
       }
     }
 
-    val kept = blocks.iterator
-      .map(b => (b.tag, b.collapsed, b.linkDensity))
-      .filter { case (tag, txt, ld) =>
-        txt.nonEmpty && (alwaysContent.contains(tag) || (txt.length >= 25 && ld < 0.5))
+    val out = new java.lang.StringBuilder
+    var first = true
+    blocks.foreach { b =>
+      val txt = collapseWs(b.text.toString)
+      if (txt.nonEmpty &&
+          (alwaysContent.contains(b.tag) || (txt.length >= 25 && b.linkDensity(txt.length) < 0.5))) {
+        if (!first) out.append(separator)
+        out.append(txt)
+        first = false
       }
-      .map(_._2)
-      .toVector
-    kept.mkString(separator)
+    }
+    out.toString
   }
 
   private def isVoid(name: String): Boolean = name match {

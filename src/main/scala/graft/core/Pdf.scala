@@ -25,15 +25,20 @@ object Pdf {
     * common control escapes.
     */
   def escape(s: String): String = {
-    val sb = new StringBuilder(s.length + 8)
-    s.foreach {
-      case '\\' => sb.append("\\\\")
-      case '('  => sb.append("\\(")
-      case ')'  => sb.append("\\)")
-      case '\n' => sb.append("\\n")
-      case '\r' => sb.append("\\r")
-      case '\t' => sb.append("\\t")
-      case c    => sb.append(c)
+    val n = s.length
+    val sb = new java.lang.StringBuilder(n + 8)
+    var i = 0
+    while (i < n) {
+      s.charAt(i) match {
+        case '\\' => sb.append("\\\\")
+        case '('  => sb.append("\\(")
+        case ')'  => sb.append("\\)")
+        case '\n' => sb.append("\\n")
+        case '\r' => sb.append("\\r")
+        case '\t' => sb.append("\\t")
+        case c    => sb.append(c)
+      }
+      i += 1
     }
     sb.toString
   }
@@ -117,17 +122,17 @@ trailer << /Root 1 0 R >>
     val n = content.length
     var inText = false
     var any = false
-    val lines = mutable.ArrayBuffer.empty[StringBuilder]
-    var cur: StringBuilder = null
+    val lines = mutable.ArrayBuffer.empty[java.lang.StringBuilder]
+    var cur: java.lang.StringBuilder = null
     // a line-break operator starts a new line only if a show op occurred
     // since the last break — positioning ops before the first show (the
     // `Td` after `BT`) are noise, but breaks BETWEEN shows always count,
     // even when the shown string was empty (empty lines must round-trip;
     // pinned by the pdf round-trip property).
     var sawShow = false
-    def ensureLine(): Unit = if (cur == null) { cur = new StringBuilder; lines += cur }
+    def ensureLine(): Unit = if (cur == null) { cur = new java.lang.StringBuilder; lines += cur }
     def breakLine(): Unit = if (sawShow) {
-      cur = new StringBuilder; lines += cur; sawShow = false
+      cur = new java.lang.StringBuilder; lines += cur; sawShow = false
     }
     while (i < n) {
       val c = content.charAt(i)
@@ -137,11 +142,9 @@ trailer << /Root 1 0 R >>
       } else {
         c match {
           case '(' =>
-            val (str, next) = readLiteral(content, i)
             ensureLine()
-            cur.append(str)
+            i = readLiteral(content, i, cur)
             sawShow = true
-            i = next
           case 'E' if content.startsWith("ET", i) =>
             inText = false; i += 2
           case 'T' if content.startsWith("T*", i) =>
@@ -162,28 +165,27 @@ trailer << /Root 1 0 R >>
     else Some(lines.map(_.toString).mkString("\n"))
   }
 
-  /** Read a PDF literal string starting at `(`; returns (decoded, indexAfter).
-    * Handles escapes (\\ \( \) \n \r \t \b \f octal) and balanced parens.
+  /** Read a PDF literal string starting at `(`, append its decoded text to
+    * `sb` and return the index after it. Handles escapes (\\ \( \) \n \r
+    * \t \b \f octal) and balanced parens; runs of plain chars are appended
+    * in bulk.
     */
-  private def readLiteral(s: String, open: Int): (String, Int) = {
-    val sb = new StringBuilder
+  private def readLiteral(s: String, open: Int, sb: java.lang.StringBuilder): Int = {
     var i = open + 1
     var depth = 1
     val n = s.length
     while (i < n && depth > 0) {
-      val c = s.charAt(i)
-      c match {
+      val run = i
+      while (i < n && { val c = s.charAt(i); c != '\\' && c != '(' && c != ')' }) i += 1
+      sb.append(s, run, i)
+      if (i < n) s.charAt(i) match {
         case '\\' if i + 1 < n =>
-          val e = s.charAt(i + 1)
-          e match {
+          s.charAt(i + 1) match {
             case 'n' => sb.append('\n'); i += 2
             case 'r' => sb.append('\r'); i += 2
             case 't' => sb.append('\t'); i += 2
             case 'b' => sb.append('\b'); i += 2
             case 'f' => sb.append('\f'); i += 2
-            case '(' => sb.append('('); i += 2
-            case ')' => sb.append(')'); i += 2
-            case '\\' => sb.append('\\'); i += 2
             case d if d >= '0' && d <= '7' =>
               var j = i + 1
               var v = 0
@@ -192,16 +194,16 @@ trailer << /Root 1 0 R >>
                 v = v * 8 + (s.charAt(j) - '0'); j += 1; k += 1
               }
               sb.append(v.toChar); i = j
-            case _ => sb.append(e); i += 2
+            case e => sb.append(e); i += 2 // \( \) \\ and unknown escapes
           }
         case '(' => depth += 1; sb.append('('); i += 1
         case ')' =>
           depth -= 1
           if (depth > 0) sb.append(')')
           i += 1
-        case _ => sb.append(c); i += 1
+        case c => sb.append(c); i += 1 // a trailing backslash
       }
     }
-    (sb.toString, i)
+    i
   }
 }

@@ -53,17 +53,24 @@ object Preprocessors {
     * Deterministic + arg-sensitive, pinned by tests.
     */
   def strokeWidthTransform(bytes: Array[Byte], darkOnLight: String): Array[Byte] = {
-    val s = Payload.utf8(bytes)
-    val cleaned = s.filter(c => c >= ' ' || c == '\n' || c == '\t' || c == '\r')
-    val out =
-      if (darkOnLight == "0")
-        cleaned.map { c =>
-          if (c >= 'a' && c <= 'z') (c - 32).toChar
+    // one pass, compacting the kept chars in place
+    val cs = Payload.utf8(bytes).toCharArray
+    val flip = darkOnLight == "0"
+    var n = 0
+    var i = 0
+    while (i < cs.length) {
+      val c = cs(i)
+      if (c >= ' ' || c == '\n' || c == '\t' || c == '\r') {
+        cs(n) =
+          if (!flip) c
+          else if (c >= 'a' && c <= 'z') (c - 32).toChar
           else if (c >= 'A' && c <= 'Z') (c + 32).toChar
           else c
-        }
-      else cleaned
-    Payload.bytes(out)
+        n += 1
+      }
+      i += 1
+    }
+    Payload.bytes(new String(cs, 0, n))
   }
 
   /** convert-pdf analog: the reference rasterizes a PDF to TIFF with

@@ -41,10 +41,21 @@ object ExtractPipeline {
       n_chars_out: Int
   )
 
-  /** Payloads above this many chars are considered skew-heavy and get a
-    * per-row salt (long-document salting per the north rule).
+  /** Payloads (text + tool) above this many UTF-8 bytes are considered
+    * skew-heavy and get a per-row salt (long-document salting per the north
+    * rule). The unit is bytes, not chars: bytes are what the shuffle moves
+    * and the kernels walk, and `octet_length` is O(1) on Spark's UTF-8
+    * strings where a char count walks every byte of every row. For ASCII
+    * payloads the two units agree.
     */
   val heavyThreshold: Int = 1 << 20
+
+  /** The skew-heavy predicate, shared by [[saltColumn]] and the
+    * `heavy-only` split so both classify the same rows.
+    */
+  def isHeavy: org.apache.spark.sql.Column =
+    octet_length(coalesce(col("text"), lit(""))) +
+      octet_length(coalesce(col("tool"), lit(""))) > heavyThreshold
 
   /** Distribution key for the salted repartition. Full-width hashes, NEVER
     * pre-modded: collapsing to [0, parts) before `repartition` feeds only
@@ -56,12 +67,9 @@ object ExtractPipeline {
     * for conversation-level consumers), heavy rows by (conv_id, turn_idx) —
     * per-row spread for the long-document tail.
     */
-  def saltColumn(): org.apache.spark.sql.Column = {
-    val payloadLen = length(coalesce(col("text"), lit(""))) +
-      length(coalesce(col("tool"), lit("")))
-    when(payloadLen > heavyThreshold, xxhash64(col("conv_id"), col("turn_idx")))
+  def saltColumn(): org.apache.spark.sql.Column =
+    when(isHeavy, xxhash64(col("conv_id"), col("turn_idx")))
       .otherwise(xxhash64(col("conv_id")))
-  }
 
   /** Run the extraction over a transcript-shaped DataFrame.
     *
@@ -103,12 +111,10 @@ object ExtractPipeline {
     val base = transcripts
       .select(col("conv_id"), col("turn_idx").cast("int").as("turn_idx"),
         col("text"), col("tool"))
-    val payloadLen = length(coalesce(col("text"), lit(""))) +
-      length(coalesce(col("tool"), lit("")))
     val prepared = distribution match {
       case "heavy-only" =>
-        val light = base.filter(payloadLen <= heavyThreshold)
-        val heavy = base.filter(payloadLen > heavyThreshold)
+        val light = base.filter(!isHeavy)
+        val heavy = base.filter(isHeavy)
           .repartition(parts, xxhash64(col("conv_id"), col("turn_idx")))
         light.unionByName(heavy)
       case _ =>

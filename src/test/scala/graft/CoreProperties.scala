@@ -1,7 +1,7 @@
 package graft
 
 import graft.core._
-import org.scalacheck.{Gen, Prop, Properties}
+import org.scalacheck.{Arbitrary, Gen, Prop, Properties}
 import org.scalacheck.Prop.forAll
 
 /** ScalaCheck properties for the pure kernel (FIXTURES.md §"property tests"):
@@ -228,6 +228,116 @@ object CoreProperties extends Properties("core") {
 
   property("url canonicalization is TOTAL on arbitrary garbage (never throws)") =
     forAll(textGen) { s => Urls.canonicalize(s) != null }
+
+  // ---------------------------------------------------------------------
+  // Parity of the primitive-loop kernels with their reference twins
+  // (`CoreRefs`) on arbitrary text: every whitespace code unit, the
+  // non-whitespace NBSP, lone and paired surrogates, PUA.
+
+  /** Every UTF-16 code unit `Character.isWhitespace` accepts. */
+  private val wsUnits: IndexedSeq[Char] =
+    (0 until 0x10000).map(_.toChar).filter(Character.isWhitespace)
+
+  private val oddUnits: Seq[String] = Seq(
+    "\u00a0", "\ud800", "\udbff", "\udc00", "\udfff", "\ud83d\ude00", "\ue000", "\uf8ff",
+    "\u0130", "é", "中")
+
+  private val unitGen: Gen[String] = Gen.frequency(
+    5 -> Gen.alphaNumChar.map(_.toString),
+    3 -> Gen.oneOf(wsUnits).map(_.toString),
+    2 -> Gen.oneOf(oddUnits),
+    1 -> Gen.oneOf("(", ")", "\\", "&", ";", "<", ">", "/"))
+
+  private val anyText: Gen[String] = Gen.frequency(
+    1 -> Gen.const(""),
+    1 -> Gen.const(wsUnits.mkString("a", "", "b") + wsUnits.mkString),
+    2 -> textGen,
+    2 -> Arbitrary.arbitrary[String],
+    4 -> Gen.listOf(unitGen).map(_.mkString))
+
+  property("collapseWs equals its reference twin") = forAll(anyText) { s =>
+    Html.collapseWs(s) == CoreRefs.collapseWsRef(s)
+  }
+
+  property("pdf escape equals its reference twin") = forAll(anyText) { s =>
+    Pdf.escape(s) == CoreRefs.escapeRef(s)
+  }
+
+  property("swt equals its reference twin on text and raw bytes") =
+    forAll(Gen.oneOf(anyText.map(Payload.bytes),
+      Gen.listOf(Arbitrary.arbitrary[Byte]).map(_.toArray))) { bs =>
+      Seq("0", "1").forall { d =>
+        Preprocessors.strokeWidthTransform(bs, d)
+          .sameElements(CoreRefs.strokeWidthTransformRef(bs, d))
+      }
+    }
+
+  private val htmlPiece: Gen[String] = {
+    val tag = Gen.oneOf("p", "P", "div", "DiV", "a", "A", "td", "li", "h1", "span",
+      "nav", "Form", "br", "hr", "img", "table", "section", "x1")
+    Gen.frequency(
+      4 -> anyText.map(_.take(30)),
+      2 -> Gen.const("Lorem ipsum dolor sit amet, consectetur adipiscing"),
+      4 -> tag.flatMap(t => Gen.oneOf(s"<$t>", s"</$t>", s"< / $t >", s"<$t/>",
+        s"<$t class='c'>", s"< $t >", s"<$t\t/ >", s"</$t\u000b>")),
+      3 -> Gen.oneOf("<br/>", "<", "< ", "<>", "</>", "<//>", "</", "<!-- c -->",
+        "<!--", "<!DOCTYPE html>", "<?xml ?>", "<script>var x = '</p>';",
+        "<SCRIPT>1</script >", "<style>p{}</STYLE>", "&amp;", "&lt;", "&#65;",
+        "&#x41;", "&nbsp;", "&bogus;", "&", "<a href='x'>out <a>in</a> tail</a>"))
+  }
+
+  property("html extract equals its reference twin on html-shaped and arbitrary text") =
+    forAll(Gen.oneOf(Gen.listOf(htmlPiece).map(_.mkString), anyText)) { h =>
+      Seq("\n\n", "\n").forall(sep => Html.extract(h, sep) == CoreRefs.htmlExtractRef(h, sep))
+    }
+
+  /** PDF-literal generator: nested parens, octal escapes, unknown escapes,
+    * a trailing backslash, an unterminated literal, a missing endstream.
+    */
+  private val pdfGen: Gen[Array[Byte]] = {
+    val plain = anyText.map(_.take(20).filterNot(c => c == '(' || c == ')' || c == '\\'))
+    val litPiece = Gen.frequency(
+      3 -> plain,
+      2 -> Gen.oneOf("(", ")", "\\(", "\\)", "\\\\", "\\n", "\\r", "\\t", "\\b", "\\f",
+        "\\q", "\\0", "\\7", "\\101", "\\1234", "\\777", "\\8", "(nested (deep) x)"))
+    val literal = Gen.listOf(litPiece).map(l => s"(${l.mkString})")
+    val op = Gen.oneOf(" Tj ", " T* ", " Td ", " TD ", " ' ", " \" ", " [", "] TJ ", " 0 -14 ")
+    for {
+      parts <- Gen.listOf(Gen.zip(literal, op))
+      tail <- Gen.oneOf("", "(unterminated", "(trailing \\", "\\")
+      et <- Gen.oneOf(" ET", "")
+      end <- Gen.oneOf("\nendstream\n%%EOF", "")
+    } yield {
+      val content = "BT " + parts.map { case (l, o) => l + o }.mkString + tail + et
+      Payload.bytes(s"%PDF-1.4\nstream\n$content$end")
+    }
+  }
+
+  property("pdf extractText equals its reference twin on literal-heavy streams") =
+    forAll(Gen.oneOf(pdfGen, anyText.map(t => Pdf.synthesize(t)))) { bs =>
+      Pdf.extractText(bs) == CoreRefs.extractTextRef(bs)
+    }
+
+  property("sandwich equals its reference twin for every ocr_type and result_optimize") = {
+    import graft.model.JVal._
+    val payload: Gen[Array[Byte]] = Gen.oneOf(
+      anyText.map(Pdf.synthesize),
+      pdfGen,
+      anyText.map(t => Array[Byte](0x49, 0x49, 0x2a, 0x00) ++ Payload.bytes(t)),
+      anyText.map(t => Array[Byte](0x4d, 0x4d, 0x00, 0x2a) ++ Payload.bytes(t)))
+    forAll(payload) { bs =>
+      val cfg = Engines.CoreConfig()
+      val combos = for {
+        ocrType <- Seq(None, Some("txt"), Some("TXT"), Some("CombinedPDF"),
+          Some("COMBINEDPDF"), Some("ocrlayeronly"), Some("bogus"))
+        optimize <- Seq(None, Some(true), Some(false))
+      } yield Some((ocrType.map(t => "ocr_type" -> (JStr(t): model.JVal)).toList ++
+        optimize.map(o => "result_optimize" -> (JBool(o): model.JVal))).toMap)
+      (None +: combos).forall { args =>
+        Engines.sandwich(bs, args, 60L, cfg) == CoreRefs.sandwichRef(bs, args, 60L, cfg)
+      }
+    }
+  }
 }
 
 /** Pure-Scala mirrors of columnar text kernels, shared by the ScalaCheck

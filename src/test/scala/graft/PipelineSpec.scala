@@ -70,6 +70,65 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(salts(1) != salts(2)) // different convs spread
   }
 
+  test("pipeline: the heavy predicate counts UTF-8 bytes of text + tool") {
+    import spark.implicits._
+    val t = ExtractPipeline.heavyThreshold
+    val rows = Seq(
+      ("c", 0, "x" * t, ""),             // exactly the threshold: light
+      ("c", 1, "x" * (t + 1), ""),       // one byte more: heavy
+      ("c", 2, "x" * (t - 2), "{}"),     // text + tool at the threshold: light
+      ("c", 3, "x" * (t - 1), "{}"),     // text + tool one byte over: heavy
+      ("c", 4, "é" * (t / 2 + 1), ""),   // over in bytes, under in chars: heavy
+      ("c", 5, null, null))              // NULL payload: light
+    val heavy = rows.toDF("conv_id", "turn_idx", "text", "tool")
+      .select(col("turn_idx"), ExtractPipeline.isHeavy.as("h"))
+      .collect().map(r => r.getInt(0) -> r.getBoolean(1)).toMap
+    assert(heavy == Map(0 -> false, 1 -> true, 2 -> false, 3 -> true, 4 -> true, 5 -> false))
+  }
+
+  test("pipeline: salted and heavy-only classify the same rows as heavy") {
+    import spark.implicits._
+    val t = ExtractPipeline.heavyThreshold
+    val df = Seq(
+      ("c", 0, "x" * t, ""), ("c", 1, "x" * (t + 1), ""), ("c", 2, "x" * (t - 1), "{}"),
+      ("c", 3, "é" * (t / 2 + 1), ""), ("c", 4, "small", ""), ("d", 5, null, null))
+      .toDF("conv_id", "turn_idx", "text", "tool")
+    // salted: a heavy row keys by (conv_id, turn_idx), a light one by conv_id
+    val salted = df
+      .filter(ExtractPipeline.saltColumn() === xxhash64(col("conv_id"), col("turn_idx")))
+      .select("turn_idx").as[Int].collect().toSet
+    // heavy-only: with one scan partition the light branch is union
+    // partition 0 and every heavy row comes out of the heavy branch's shuffle
+    val key = "spark.sql.leafNodeDefaultParallelism"
+    val saved = spark.conf.getOption(key)
+    spark.conf.set(key, "1")
+    val heavyOnly = try ExtractPipeline.extract(spark, df, numPartitions = 3, distribution = "heavy-only")
+        .filter(spark_partition_id() > 0).select("turn_idx").as[Int].collect().toSet
+      finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    assert(salted == Set(1, 2, 3))
+    assert(heavyOnly == salted)
+  }
+
+  test("plan: the salted Exchange sizes payloads with octet_length, never length") {
+    val plan = ExtractPipeline.extract(spark, Transcripts.fromDocuments(spark, sfDir))
+      .queryExecution.executedPlan.toString
+    val exchange = plan.linesIterator.filter(_.contains("Exchange hashpartitioning")).toList
+    assert(exchange.size == 1, s"plan:\n$plan")
+    assert(exchange.head.contains("octet_length("), exchange.head)
+    assert("\\blength\\(".r.findFirstIn(exchange.head).isEmpty, exchange.head)
+  }
+
+  test("tmpdirs: created directories are registered and deleted recursively") {
+    val dir = graft.spark.TmpDirs.create("graft_tmpdirs_spec_")
+    val nested = java.nio.file.Paths.get(dir, "a", "b")
+    java.nio.file.Files.createDirectories(nested)
+    java.nio.file.Files.writeString(nested.resolve("f.txt"), "x")
+    assert(graft.spark.TmpDirs.isRegistered(dir))
+    assert(!graft.spark.TmpDirs.isRegistered(tmpDir("graft_tmpdirs_other_")))
+    graft.spark.TmpDirs.deleteRecursively(java.nio.file.Paths.get(dir))
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(dir)))
+  }
+
   test("lineage: crash after K buckets + resume = identical output, buckets skipped") {
     val t = Transcripts.fromDocuments(spark, sfDir)
     val full = tmpDir("graft_full_")
