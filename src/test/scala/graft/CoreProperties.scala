@@ -317,27 +317,6 @@ object CoreProperties extends Properties("core") {
     forAll(Gen.oneOf(pdfGen, anyText.map(t => Pdf.synthesize(t)))) { bs =>
       Pdf.extractText(bs) == CoreRefs.extractTextRef(bs)
     }
-
-  property("sandwich equals its reference twin for every ocr_type and result_optimize") = {
-    import graft.model.JVal._
-    val payload: Gen[Array[Byte]] = Gen.oneOf(
-      anyText.map(Pdf.synthesize),
-      pdfGen,
-      anyText.map(t => Array[Byte](0x49, 0x49, 0x2a, 0x00) ++ Payload.bytes(t)),
-      anyText.map(t => Array[Byte](0x4d, 0x4d, 0x00, 0x2a) ++ Payload.bytes(t)))
-    forAll(payload) { bs =>
-      val cfg = Engines.CoreConfig()
-      val combos = for {
-        ocrType <- Seq(None, Some("txt"), Some("TXT"), Some("CombinedPDF"),
-          Some("COMBINEDPDF"), Some("ocrlayeronly"), Some("bogus"))
-        optimize <- Seq(None, Some(true), Some(false))
-      } yield Some((ocrType.map(t => "ocr_type" -> (JStr(t): model.JVal)).toList ++
-        optimize.map(o => "result_optimize" -> (JBool(o): model.JVal))).toMap)
-      (None +: combos).forall { args =>
-        Engines.sandwich(bs, args, 60L, cfg) == CoreRefs.sandwichRef(bs, args, 60L, cfg)
-      }
-    }
-  }
 }
 
 /** Pure-Scala mirrors of columnar text kernels, shared by the ScalaCheck

@@ -1,15 +1,13 @@
 package graft
 
-import graft.core.{Engines, Html, Payload, Pdf}
-import graft.model.JVal
+import graft.core.{Html, Payload, Pdf}
 import scala.collection.mutable
 
 /** Reference twins of the per-character `graft.core` kernels: the
   * straightforward forms (boxed `foreach`/`filter`/`map`, `substring` tag
-  * parsing, per-use block collapse, an OCR layer built for every sandwich
-  * output type) that the primitive-loop kernels replaced. `CoreProperties`
-  * checks each kernel against its twin on arbitrary input; nothing in
-  * `src/main` calls these.
+  * parsing, per-use block collapse) that the primitive-loop kernels
+  * replaced. `CoreProperties` checks each kernel against its twin on
+  * arbitrary input; nothing in `src/main` calls these.
   */
 object CoreRefs {
 
@@ -321,45 +319,5 @@ object CoreRefs {
         }
       else cleaned
     Payload.bytes(out)
-  }
-
-  // ---------------------------------------------------------- sandwich
-
-  def sandwichRef(
-      bytes: Array[Byte],
-      engineArgs: Option[Map[String, JVal]],
-      timeOutSeconds: Long,
-      config: Engines.CoreConfig,
-      nanoTime: () => Long = System.nanoTime
-  ): Either[String, Engines.EngineResult] = {
-    if (bytes == null || bytes.isEmpty)
-      return Left("EOF") // readFirstBytes on an empty file, sandwich_engine.go:169-176
-    if (Payload.detectFileType(bytes) == Payload.UNKNOWN)
-      return Left("file format not understood") // sandwich_engine.go:178-185
-    Engines.parseSandwichArgs(engineArgs).flatMap { args =>
-      val deadline = nanoTime() + timeOutSeconds * 1000000000L
-      val pdfBytes: Either[String, Array[Byte]] =
-        if (Payload.detectFileType(bytes) == Payload.TIFF) Engines.tiffToPdf(bytes, config.t2pConverter)
-        else Right(bytes)
-      pdfBytes.flatMap { pdf =>
-        val ocrType = args.ocrType.toUpperCase
-        // pdfsandwich analog: layout parse under the request deadline
-        val parsed = extractTextRef(pdf)
-        if (nanoTime() > deadline) Left("command timed out")
-        else
-          parsed.flatMap { text =>
-            val ocrLayer = Pdf.synthesize(text)
-            val delivered: Either[String, Array[Byte]] = ocrType match {
-              case "TXT" => Right(Payload.bytes(text)) // pdftotext path, 455-471
-              case "COMBINEDPDF" =>
-                val combined = Engines.multistamp(pdf, ocrLayer)
-                Right(if (args.resultOptimize) Engines.optimizePdf(combined) else combined)
-              case "OCRLAYERONLY" => Right(ocrLayer)
-              case _              => Left("requested output format is not supported") // 471-476
-            }
-            delivered.map(b => Engines.EngineResult(Payload.encodeBase64(b), "done"))
-          }
-      }
-    }
   }
 }

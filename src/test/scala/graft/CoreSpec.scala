@@ -331,6 +331,28 @@ class CoreSpec extends AnyFunSuite {
     assert(Pdf.extractText(Payload.decodeBase64(layer.text).toOption.get) == Right("combined content\n\f\n\f"))
   }
 
+  test("sandwich: each ocr_type spelling delivers its exact bytes; bogus is unsupported") {
+    val pdf = Pdf.synthesize("spelled out")
+    val text = Pdf.extractText(pdf).toOption.get
+    val layer = Pdf.synthesize(text)
+    def run(ocrType: String, optimize: Option[Boolean] = None) = Engines.sandwich(pdf,
+      Some(Map("ocr_type" -> (JVal.JStr(ocrType): JVal)) ++
+        optimize.map(o => "result_optimize" -> (JVal.JBool(o): JVal))), 60L, Engines.CoreConfig())
+    def done(b: Array[Byte]) = Right(Engines.EngineResult(Payload.encodeBase64(b), "done"))
+    for (t <- Seq("txt", "TXT", "Txt")) assert(run(t) == done(Payload.bytes(text)))
+    for (t <- Seq("combinedpdf", "COMBINEDPDF", "CombinedPDF")) {
+      val combined = Engines.multistamp(pdf, layer)
+      assert(run(t) == done(combined))
+      assert(run(t, Some(false)) == done(combined))
+      assert(run(t, Some(true)) == done(Engines.optimizePdf(combined)))
+    }
+    for (t <- Seq("ocrlayeronly", "OCRLAYERONLY", "OcrLayerOnly")) {
+      assert(run(t) == done(layer))
+      assert(run(t, Some(true)) == done(layer))
+    }
+    assert(run("bogus") == Left("requested output format is not supported"))
+  }
+
   test("sandwich: per-request deadline -> 'command timed out'") {
     val pdf = Pdf.synthesize("slow")
     var calls = 0

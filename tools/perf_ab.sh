@@ -1,16 +1,16 @@
 #!/usr/bin/env bash
-# A/B the perfbench benchmark: a base ref against a head ref, run in
-# alternation with the same seeds, in one host window.
+# A/B the perfbench benchmark: a base ref against HEAD, run in alternation
+# with the same seeds, in one host window.
 #
-#   tools/perf_ab.sh [-b BASE] [-H HEAD] [-n SEEDS] [-f FIRST_SEED]
-#                    [-s SECONDS] [-t TRACE] [-o OUTDIR] [WORKLOAD...]
+#   tools/perf_ab.sh [-b BASE] [-n SEEDS] [-f FIRST_SEED] [-t TRACE]
+#                    [-o OUTDIR] [WORKLOAD...]
 #
-#   -b  base ref (default HEAD~1)      -H  head ref (default HEAD)
-#   -n  seeds per workload (default 3) -f  first seed (default 1)
-#   -s  --seconds per run (default 15) -t  --trace 0|1 (default 0)
+#   -b  base ref (default HEAD~1)      -n  seeds per workload (default 3)
+#   -f  first seed (default 1)         -t  --trace 0|1 (default 0)
 #   -o  where the result lines go (default: a new directory under $TMPDIR)
 #   WORKLOAD...  default: the workloads BENCHMARK.json lists
 #
+# Every run lasts BENCHMARK.json's `run_seconds`, the same on both sides.
 # Each ref's committed files are exported with `git archive` into a fresh
 # directory under ${TMPDIR:-/tmp} (removed at exit), so both sides build
 # from committed source as a clean checkout would and the working tree is
@@ -21,23 +21,22 @@
 # `-t 1 -n 1` for one traced pair of per-layer metrics. Run from the repo.
 set -euo pipefail
 
-base=HEAD~1 head=HEAD seeds=3 first=1 seconds=15 trace=0 out=""
-while getopts "b:H:n:f:s:t:o:" opt; do
+base=HEAD~1 head=HEAD seeds=3 first=1 trace=0 out=""
+while getopts "b:n:f:t:o:" opt; do
   case $opt in
-    b) base=$OPTARG ;; H) head=$OPTARG ;; n) seeds=$OPTARG ;; f) first=$OPTARG ;;
-    s) seconds=$OPTARG ;; t) trace=$OPTARG ;; o) out=$OPTARG ;;
+    b) base=$OPTARG ;; n) seeds=$OPTARG ;; f) first=$OPTARG ;;
+    t) trace=$OPTARG ;; o) out=$OPTARG ;;
     *) sed -n '2,21p' "$0"; exit 2 ;;
   esac
 done
 shift $((OPTIND - 1))
 
 repo=$(git rev-parse --show-toplevel)
-if [ $# -gt 0 ]; then
-  workloads=("$@")
-else
-  mapfile -t workloads < <(python3 -c 'import json,sys
-for w in json.load(open(sys.argv[1]))["workloads"]: print(w["name"])' "$repo/BENCHMARK.json")
-fi
+mapfile -t bench < <(python3 -c 'import json,sys
+b = json.load(open(sys.argv[1])); print(b["run_seconds"])
+for w in b["workloads"]: print(w["name"])' "$repo/BENCHMARK.json")
+seconds=${bench[0]}
+if [ $# -gt 0 ]; then workloads=("$@"); else workloads=("${bench[@]:1}"); fi
 
 work=$(mktemp -d "${TMPDIR:-/tmp}/perf_ab.XXXXXX")
 trap 'rm -rf "$work"' EXIT
