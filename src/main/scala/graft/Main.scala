@@ -1,7 +1,7 @@
 package graft
 
 import graft.spark.{ExtractPipeline, Lineage, Transcripts}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** spark-submit entrypoint for the extraction job (north rule: "runs via
@@ -20,19 +20,17 @@ import org.apache.spark.sql.functions._
   *                                           partition column either way)
   *   --buckets 256                       \  (lineage/commit granularity)
   *   --max-buckets 0                     \  (0 = all pending; >0 = partial run)
-  *   --parallelism 0                     \  (0 = spark.sql.shuffle.partitions)
-  *   --distribution salted               \  (or heavy-only: light rows are
-  *                                           mapped in place on their scan
-  *                                           splits and only the skew-heavy
-  *                                           payload tail is repartitioned —
-  *                                           the 100 TB-optimal variant; see
-  *                                           ExtractPipeline.extract)
+  *   --parallelism 0                        (0 = spark.sql.shuffle.partitions)
   * }}}
   *
   * Rerunning with the same --output resumes: completed buckets are skipped
-  * (exactly-once via per-bucket idempotent overwrite — SURVEY.md §7.5). Each
-  * run appends per-bucket rows to `<output>/_lineage` and writes the
-  * aggregated per-status/engine metrics table to `<output>/_metrics`.
+  * (exactly-once via per-bucket idempotent overwrite — SURVEY.md §7.5). Both
+  * output sinks run the one [[graft.spark.Lineage]] protocol: each run
+  * appends per-bucket rows to the lineage (`<output>/_lineage`, or the
+  * LINEAGE table), and once no bucket is pending the aggregated
+  * per-status/engine metrics and histograms are published next to the data
+  * (`<output>/_metrics` + `_histograms`, or `DATA_metrics` +
+  * `DATA_histograms`).
   *
   * A second mode, `--query NAME[,NAME...]` (or `list` / `all`), runs any
   * named operator query from the SURVEY §8 inventory over an sf-style
@@ -122,9 +120,6 @@ object Main {
     val buckets = opts.getOrElse("buckets", "256").toInt
     val maxBuckets = opts.getOrElse("max-buckets", "0").toInt
     val parallelism = opts.getOrElse("parallelism", "0").toInt
-    val distribution = opts.getOrElse("distribution", "salted")
-    require(Set("salted", "heavy-only")(distribution),
-      s"--distribution must be salted or heavy-only (got $distribution)")
 
     val spark = buildSession("graft-extract")
 
@@ -149,40 +144,28 @@ object Main {
         case Array(data) => Some((data, s"${data}_lineage"))
         case Array(data, lineage, _*) => Some((data, lineage))
       }
-    val (lineage, pending) = tables match {
+    val lineage = tables match {
       case Some((dataTable, lineageTable)) =>
-        val l = Lineage.runTable(spark, transcripts, dataTable, lineageTable,
-          buckets, maxB, distribution)
-        val done = l.select("bucket").distinct().collect().map(_.getLong(0)).toSet
-        (l, (0L until buckets.toLong).filterNot(done))
-      case None =>
-        val l = Lineage.run(spark, transcripts, output, buckets, maxB, distribution)
-        (l, Lineage.pendingBuckets(spark, output, buckets))
+        Lineage.runTable(spark, transcripts, dataTable, lineageTable, buckets, maxB)
+      case None => Lineage.run(spark, transcripts, output, buckets, maxB)
     }
+    val pending = Lineage.pendingIn(lineage, buckets)
     if (pending.isEmpty) {
       // all buckets committed: publish the aggregated metrics table (O22)
       val out = tables match {
         case Some((dataTable, _)) => spark.table(dataTable)
         case None => Lineage.readOutput(spark, output)
       }
-      val metrics = out.groupBy(col("status"), col("engine"))
-        .agg(count(lit(1)).as("n_rows"),
-          sum(col("n_chars_in")).cast("long").as("chars_in"),
-          sum(col("n_chars_out")).cast("long").as("chars_out"))
       import spark.implicits._
-      val histos = ExtractPipeline.histograms(
-        out.select("conv_id", "turn_idx", "text", "status", "engine",
-          "n_chars_in", "n_chars_out").as[ExtractPipeline.Extracted])
-      tables match {
+      val committed = out.select("conv_id", "turn_idx", "text", "status", "engine",
+        "n_chars_in", "n_chars_out").as[ExtractPipeline.Extracted]
+      def publish(df: DataFrame, name: String): Unit = tables match {
         case Some((dataTable, _)) =>
-          metrics.write.mode("overwrite").format("parquet")
-            .saveAsTable(s"${dataTable}_metrics")
-          histos.write.mode("overwrite").format("parquet")
-            .saveAsTable(s"${dataTable}_histograms")
-        case None =>
-          metrics.write.mode("overwrite").parquet(s"$output/_metrics")
-          histos.write.mode("overwrite").parquet(s"$output/_histograms")
+          df.write.mode("overwrite").format("parquet").saveAsTable(s"${dataTable}_$name")
+        case None => df.write.mode("overwrite").parquet(s"$output/_$name")
       }
+      publish(ExtractPipeline.metrics(committed), "metrics")
+      publish(ExtractPipeline.histograms(committed), "histograms")
     }
     val done = lineage.agg(
       count(lit(1)).as("buckets"),

@@ -37,9 +37,6 @@ object Plans {
       ("Flagship extraction (salted)",
         "scan with pruned columns -> ONE Exchange (the salted repartition) -> fused typed map",
         fmt(ExtractPipeline.extract(spark, t).toDF())),
-      ("Extraction, heavy-only distribution",
-        "light rows map in place on their scan splits; only the skew tail shuffles",
-        fmt(ExtractPipeline.extract(spark, t, distribution = "heavy-only").toDF())),
       ("IVF cell assignment",
         "map-side argmax over inlined centroid literals: ZERO Exchange, no Window",
         fmt(Similarity.ivfAssign(emb))),

@@ -70,7 +70,9 @@ object Engine {
   * `engineArgs` / `preprocessorArgs` stay as raw JSON trees (rendered to a
   * small AST) because the reference validates them lazily *inside* each
   * engine (`tesseract_engine.go:22-74`, `sandwich_engine.go:36-104`) and the
-  * error points must match.
+  * error points must match. Reference fields no stage reads (`doc_type`,
+  * whose priority is computed from the raw tool JSON, `deferred`,
+  * `reply_to`, `page_number`, `user_agent`, `reference_id`) are not decoded.
   */
 final case class ExtractRequest(
     id: String, // conv_id#turn_idx — deterministic replacement for ksuid
@@ -81,13 +83,7 @@ final case class ExtractRequest(
     preprocessorChain: List[String], // consumed from the TAIL, ocr_request.go:30-40
     preprocessorArgs: Map[String, JVal],
     engineArgs: Option[Map[String, JVal]],
-    docType: String,
     timeOut: Long, // seconds; clamped per ocr_rpc_client.go:87-89
-    deferred: Boolean,
-    replyTo: String,
-    pageNumber: Int,
-    userAgent: String,
-    referenceId: String,
     /** O24 — `inplace_decode`: run the engine directly, skipping the queue
       * AND the preprocessor chain (the chain routing lives in the RPC client
       * the inplace path bypasses, `/root/reference/ocr_http_handler.go:109-146`).

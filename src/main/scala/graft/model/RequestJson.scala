@@ -47,13 +47,7 @@ object RequestJson {
       preprocessorChain = Nil,
       preprocessorArgs = Map.empty,
       engineArgs = None,
-      docType = "",
-      timeOut = 0L,
-      deferred = false,
-      replyTo = "",
-      pageNumber = 0,
-      userAgent = "",
-      referenceId = ""
+      timeOut = 0L
     )
     if (tool == null || tool.trim.isEmpty) Right(base)
     else {
@@ -100,10 +94,6 @@ object RequestJson {
         case n if n != null && n.isNumber => n.asLong()
         case _                            => 0L
       }
-      val pageNumber: Int = root.get("page_number") match {
-        case n if n != null && n.isNumber => n.asInt()
-        case _                            => 0
-      }
 
       engine.map { eng =>
         base.copy(
@@ -113,13 +103,7 @@ object RequestJson {
           preprocessorChain = chain,
           preprocessorArgs = pArgs,
           engineArgs = eArgs,
-          docType = str("doc_type"),
           timeOut = timeOut,
-          deferred = bool("deferred"),
-          replyTo = str("reply_to"),
-          pageNumber = pageNumber,
-          userAgent = str("user_agent"),
-          referenceId = str("reference_id"),
           inplaceDecode = bool("inplace_decode")
         )
       }

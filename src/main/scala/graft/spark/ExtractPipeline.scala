@@ -50,9 +50,7 @@ object ExtractPipeline {
     */
   val heavyThreshold: Int = 1 << 20
 
-  /** The skew-heavy predicate, shared by [[saltColumn]] and the
-    * `heavy-only` split so both classify the same rows.
-    */
+  /** The skew-heavy predicate of [[saltColumn]]. */
   def isHeavy: org.apache.spark.sql.Column =
     octet_length(coalesce(col("text"), lit(""))) +
       octet_length(coalesce(col("tool"), lit(""))) > heavyThreshold
@@ -71,21 +69,11 @@ object ExtractPipeline {
     when(isHeavy, xxhash64(col("conv_id"), col("turn_idx")))
       .otherwise(xxhash64(col("conv_id")))
 
-  /** Run the extraction over a transcript-shaped DataFrame.
+  /** Run the extraction over a transcript-shaped DataFrame: one salted
+    * repartition on [[saltColumn]] (the reference's work queue, O16), then
+    * the fused per-turn kernel.
     *
-    * `distribution`:
-    *   - `"salted"` (default, the north-rule shape): one full salted
-    *     repartition replaces the reference's work queue — every row
-    *     shuffles once on [[saltColumn]].
-    *   - `"heavy-only"`: the 100 TB-optimal variant — light rows are mapped
-    *     IN PLACE on their scan splits (the scan already distributes; no
-    *     reason to move 100 TB through a shuffle), only the skew-heavy tail
-    *     (payload > [[heavyThreshold]]) is salted-repartitioned per row and
-    *     unioned back. Costs a second pushed-down scan of the predicate
-    *     instead of a full-corpus shuffle write+read. Output is identical
-    *     (pinned by spec) — partitioning never changes per-turn results.
-    */
-  /** O14 with an actual SCHEDULING effect (the reference publishes each
+    * O14 with an actual SCHEDULING effect (the reference publishes each
     * message with a priority 0-9 onto an `x-max-priority` queue so
     * high-priority documents are decoded first — `ocr_rpc_client.go:74-85,
     * 294-340`): when `priorityOrdered` is true, rows are sorted within each
@@ -101,25 +89,16 @@ object ExtractPipeline {
       transcripts: DataFrame,
       numPartitions: Int = 0,
       config: Engines.CoreConfig = Engines.CoreConfig(),
-      distribution: String = "salted",
       priorityOrdered: Boolean = false
   ): Dataset[Extracted] = {
     import spark.implicits._
     val parts =
       if (numPartitions > 0) numPartitions
       else spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val base = transcripts
+    val prepared = transcripts
       .select(col("conv_id"), col("turn_idx").cast("int").as("turn_idx"),
         col("text"), col("tool"))
-    val prepared = distribution match {
-      case "heavy-only" =>
-        val light = base.filter(!isHeavy)
-        val heavy = base.filter(isHeavy)
-          .repartition(parts, xxhash64(col("conv_id"), col("turn_idx")))
-        light.unionByName(heavy)
-      case _ =>
-        base.repartition(parts, saltColumn()) // O16: the only shuffle
-    }
+      .repartition(parts, saltColumn()) // O16: the only shuffle
     val ordered =
       if (!priorityOrdered) prepared
       else {
@@ -203,20 +182,6 @@ object ExtractPipeline {
     try body
     finally sc.setLocalProperty("spark.scheduler.pool", prev)
   }
-
-  /** Extraction + stable-ordered write (the equality contract orders by
-    * (conv_id, turn_idx); we sort within partitions for run-length locality
-    * and deterministic files).
-    */
-  def run(
-      spark: SparkSession,
-      transcripts: DataFrame,
-      outDir: String,
-      numPartitions: Int = 0
-  ): Unit =
-    extract(spark, transcripts, numPartitions)
-      .sortWithinPartitions("conv_id", "turn_idx")
-      .write.mode("overwrite").parquet(outDir)
 
   /** Per-partition extraction metrics (O22: the Prometheus counters as a
     * metrics table): rows, errors, chars in/out per status+engine.

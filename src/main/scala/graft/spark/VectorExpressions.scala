@@ -35,10 +35,10 @@ object VecKernel {
   * the ANN / near-dup / IVF paths were the per-candidate hot loop, and the
   * `aggregate(zip_with(...))` higher-order form evaluates one interpreted
   * lambda per element (~µs per 64-dim dot). This emits a tight primitive
-  * loop instead — same "(b) custom Catalyst Expression" tier as
-  * [[ExtractTurnField]] — while preserving the exact float summation order
-  * of the HOF form (and therefore of every DuckDB oracle twin). Accepts
-  * array<float> or array<double> on either side; result is double.
+  * loop instead — the "(b) custom Catalyst Expression" tier — while
+  * preserving the exact float summation order of the HOF form (and
+  * therefore of every DuckDB oracle twin). Accepts array<float> or
+  * array<double> on either side; result is double.
   */
 case class VecDot(left: Expression, right: Expression) extends BinaryExpression {
 

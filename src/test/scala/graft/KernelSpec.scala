@@ -215,4 +215,49 @@ class KernelSpec extends AnyFunSuite with BeforeAndAfterAll {
     intercept[IllegalArgumentException](HashFunctions.winnowFps(col("text"), 0, 1))
     intercept[IllegalArgumentException](HashFunctions.classifierScore(col("text"), Nil))
   }
+
+  test("extract_text / extract_status: codegen and interpreted runs equal Extractor.extractTurn") {
+    GraftExtensions.register(spark)
+    val pdf = graft.core.Payload.encodeBase64(graft.core.Pdf.synthesize(s"pdf héllo $pua"))
+    val tools = Seq(null, """{"engine":"mock"}""",
+      s"""{"engine":"sandwich","img_base64":"$pdf","engine_args":{"ocr_type":"txt"}}""",
+      """{"engine":"mock",""")
+    val rows = for {
+      (text, i) <- Seq(null, "", "héllo wörld", s"ab${pua}cd x$pua").zipWithIndex
+      (tool, j) <- tools.zipWithIndex
+    } yield (if (i + j == 1) null else s"c$i", i * tools.size + j, text, tool)
+    val dir = java.nio.file.Files.createTempDirectory("graft_extract_").toString + "/in"
+    import spark.implicits._
+    rows.toDF("conv_id", "turn_idx", "text", "tool").coalesce(1).write.parquet(dir)
+    spark.read.parquet(dir).createOrReplaceTempView("extract_in")
+    // NULL in any argument gives NULL out; otherwise the kernel itself
+    val want = rows.map { case (c, i, text, tool) =>
+      if (c == null || text == null || tool == null) (i, null, null)
+      else {
+        val r = graft.core.Extractor.extractTurn(c, i, text, tool)
+        (i, r.text, r.status)
+      }
+    }
+    assert(want.exists(_._3 == "error") && want.exists(_._3 == "done") &&
+      want.exists(_._3 == ""), "inputs cover error, done and mock status")
+    val sql = """SELECT turn_idx,
+      |  extract_text(conv_id, turn_idx, text, tool) AS text,
+      |  extract_status(conv_id, turn_idx, text, tool) AS status
+      |FROM extract_in""".stripMargin
+    def plan() = spark.sql(sql).queryExecution.executedPlan.toString
+    def run() = spark.sql(sql).collect().toSeq
+      .map(r => (r.getInt(0), r.getString(1), r.getString(2))).sortBy(_._1)
+    val codegen = plan()
+    for (m <- Seq("evalText(", "evalStatus("))
+      assert(codegen.linesIterator.exists(l => l.contains("*(") &&
+        l.contains(s"graft.spark.ExtractTextKernel.$m")), s"no codegen stage around $m in:\n$codegen")
+    assert(run() == want, "codegen")
+    val interpreted = withConf(
+        "spark.sql.codegen.wholeStage" -> "false",
+        "spark.sql.codegen.factoryMode" -> "NO_CODEGEN") {
+      assert(!plan().contains("*("), s"still a codegen stage in:\n${plan()}")
+      run()
+    }
+    assert(interpreted == want, "interpreted")
+  }
 }

@@ -38,6 +38,16 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
 
+  /** (data, lineage) table names in a fresh database for the catalog-table
+    * sink of [[Lineage.runTable]].
+    */
+  private def tableSink(prefix: String): (String, String) = {
+    val loc = tmpDir(prefix)
+    val db = "gspec" + loc.replaceAll("[^a-zA-Z0-9]", "_").takeRight(16)
+    spark.sql(s"CREATE DATABASE IF NOT EXISTS $db LOCATION '$loc'")
+    (s"$db.d", s"$db.l")
+  }
+
   test("pipeline: per-turn golden equality on the mock anchor class") {
     val out = ExtractPipeline
       .extract(spark, Transcripts.fromDocuments(spark, sfDir))
@@ -86,27 +96,18 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(heavy == Map(0 -> false, 1 -> true, 2 -> false, 3 -> true, 4 -> true, 5 -> false))
   }
 
-  test("pipeline: salted and heavy-only classify the same rows as heavy") {
+  test("pipeline: the salt keys exactly the heavy rows per row") {
     import spark.implicits._
     val t = ExtractPipeline.heavyThreshold
     val df = Seq(
       ("c", 0, "x" * t, ""), ("c", 1, "x" * (t + 1), ""), ("c", 2, "x" * (t - 1), "{}"),
       ("c", 3, "é" * (t / 2 + 1), ""), ("c", 4, "small", ""), ("d", 5, null, null))
       .toDF("conv_id", "turn_idx", "text", "tool")
-    // salted: a heavy row keys by (conv_id, turn_idx), a light one by conv_id
+    // a heavy row keys by (conv_id, turn_idx), a light one by conv_id
     val salted = df
       .filter(ExtractPipeline.saltColumn() === xxhash64(col("conv_id"), col("turn_idx")))
       .select("turn_idx").as[Int].collect().toSet
-    // heavy-only: with one scan partition the light branch is union
-    // partition 0 and every heavy row comes out of the heavy branch's shuffle
-    val key = "spark.sql.leafNodeDefaultParallelism"
-    val saved = spark.conf.getOption(key)
-    spark.conf.set(key, "1")
-    val heavyOnly = try ExtractPipeline.extract(spark, df, numPartitions = 3, distribution = "heavy-only")
-        .filter(spark_partition_id() > 0).select("turn_idx").as[Int].collect().toSet
-      finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
     assert(salted == Set(1, 2, 3))
-    assert(heavyOnly == salted)
   }
 
   test("plan: the salted Exchange sizes payloads with octet_length, never length") {
@@ -164,31 +165,9 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
-  test("lineage: heavy-only distribution resumes to the same output as salted") {
-    // the 100 TB-optimal variant (--distribution heavy-only via graft.Main):
-    // light rows map in place on their scan splits, only the heavy payload
-    // tail repartitions — crash + resume must still commit identical output
-    val t = Transcripts.fromDocuments(spark, sfDir)
-    val salted = tmpDir("graft_ho_salted_")
-    Lineage.run(spark, t, salted, numBuckets = 8)
-    val heavyOnly = tmpDir("graft_ho_")
-    Lineage.run(spark, t, heavyOnly, numBuckets = 8, maxBucketsThisRun = 3,
-      distribution = "heavy-only")
-    assert(Lineage.pendingBuckets(spark, heavyOnly, 8).size == 5)
-    Lineage.run(spark, t, heavyOnly, numBuckets = 8, distribution = "heavy-only")
-    assert(Lineage.pendingBuckets(spark, heavyOnly, 8).isEmpty)
-    def rows(dir: String) = Lineage.readOutput(spark, dir)
-      .select("conv_id", "turn_idx", "text", "status", "engine")
-      .orderBy("conv_id", "turn_idx").collect().toSeq
-    assert(rows(heavyOnly) == rows(salted))
-  }
-
   test("lineage: catalog-table path — crash + resume equals the path-based output") {
     val t = Transcripts.fromDocuments(spark, sfDir)
-    val loc = tmpDir("graft_lintabspec_")
-    val db = "gspec" + loc.replaceAll("[^a-zA-Z0-9]", "_").takeRight(16)
-    spark.sql(s"CREATE DATABASE IF NOT EXISTS $db LOCATION '$loc'")
-    val data = s"$db.d"; val lin = s"$db.l"
+    val (data, lin) = tableSink("graft_lintabspec_")
     Lineage.runTable(spark, t, data, lin, numBuckets = 8, maxBucketsThisRun = 3)
     assert(Lineage.readLineageTable(spark, lin).count() == 3)
     Lineage.runTable(spark, t, data, lin, numBuckets = 8) // resume: remaining 5
@@ -241,10 +220,15 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val empty = Seq.empty[(String, Int, String, String)]
       .toDF("conv_id", "turn_idx", "text", "tool")
     val out = tmpDir("graft_zero_")
-    val lineage = Lineage.run(spark, empty, out, numBuckets = 4)
-    assert(lineage.count() == 4)
-    assert(lineage.filter(col("n_rows") =!= 0).count() == 0)
+    val (data, lin) = tableSink("graft_zerotab_")
+    for (lineage <- Seq(Lineage.run(spark, empty, out, numBuckets = 4),
+        Lineage.runTable(spark, empty, data, lin, numBuckets = 4))) {
+      assert(lineage.count() == 4)
+      assert(lineage.filter(col("n_rows") =!= 0).count() == 0)
+      assert(Lineage.pendingIn(lineage, 4).isEmpty)
+    }
     assert(Lineage.pendingBuckets(spark, out, 4).isEmpty)
+    assert(spark.table(data).count() == 0)
   }
 
   test("plan: lineage stats readback prunes to the pending buckets' partitions") {
@@ -392,16 +376,25 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("lineage: empty buckets still commit (one-job path, 64 buckets over 50 convs)") {
     val t = Transcripts.fromDocuments(spark, sfDir)
     val out = tmpDir("graft_empty_")
+    val (data, lin) = tableSink("graft_emptytab_")
     Lineage.run(spark, t, out, numBuckets = 64)
     assert(Lineage.pendingBuckets(spark, out, 64).isEmpty)
-    val lineage = Lineage.readLineage(spark, out)
-    assert(lineage.count() == 64)
-    // 50 conversations into 64 hash buckets: some buckets MUST be empty,
-    // and they must be committed as done with 0 rows (else resume would
-    // reprocess them forever)
-    assert(lineage.filter(col("n_rows") === 0).count() > 0)
-    val total = lineage.agg(sum("n_rows")).collect()(0).getLong(0)
-    assert(total == t.count())
+    val byPath = Lineage.readLineage(spark, out)
+    val byTable = Lineage.runTable(spark, t, data, lin, numBuckets = 64)
+    for (lineage <- Seq(byPath, byTable)) {
+      assert(lineage.count() == 64)
+      assert(Lineage.pendingIn(lineage, 64).isEmpty)
+      // 50 conversations into 64 hash buckets: some buckets MUST be empty,
+      // and they must be committed as done with 0 rows (else resume would
+      // reprocess them forever)
+      assert(lineage.filter(col("n_rows") === 0).count() > 0)
+      val total = lineage.agg(sum("n_rows")).collect()(0).getLong(0)
+      assert(total == t.count())
+    }
+    // one protocol: both sinks commit the same per-bucket stats
+    def stats(l: org.apache.spark.sql.DataFrame) =
+      l.select("bucket", "n_rows", "chars_out").orderBy("bucket").collect().toSeq
+    assert(stats(byTable) == stats(byPath))
   }
 
   test("plan: scan prunes to needed columns and the pipeline has exactly one shuffle") {
@@ -632,20 +625,6 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(sc.getPoolForName("prio-9").map(_.weight).contains(10))
     assert(sc.getPoolForName("prio-1").map(_.weight).contains(2))
     assert(sc.getPoolForName("prio-0").map(_.weight).contains(1))
-  }
-
-  test("distribution: heavy-only (no full shuffle) equals the salted pipeline") {
-    val t = Transcripts.fromDocuments(spark, sfDir)
-    def rows(mode: String) =
-      ExtractPipeline.extract(spark, t, distribution = mode)
-        .select("conv_id", "turn_idx", "text", "status", "engine")
-        .orderBy("conv_id", "turn_idx").collect().toSeq
-    assert(rows("heavy-only") == rows("salted"))
-    // and the light path really avoids shuffling the corpus: the only
-    // Exchange in the heavy-only plan hangs off the heavy-filter branch
-    val plan = ExtractPipeline.extract(spark, t, distribution = "heavy-only")
-      .queryExecution.executedPlan.toString
-    assert("Exchange".r.findAllMatchIn(plan).length == 1)
   }
 
   test("plan: ivf assignment is a pure narrow map (zero Exchange, no Window)") {

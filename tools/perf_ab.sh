@@ -17,7 +17,9 @@
 # never touched. For every workload and seed the two sides run back to back,
 # base first on odd pairs and head first on even ones, so slow drift in host
 # load does not favour one side. Prints, per metric of the result object,
-# each pair's base -> head values and the medians, plus `failed`; run with
+# each pair's base -> head values, the medians, the base IQR and, for the
+# metrics BENCHMARK.json declares, how many pairs the head won by its
+# `better` direction (ties count for neither side), plus `failed`; run with
 # `-t 1 -n 1` for one traced pair of per-layer metrics. Run from the repo.
 set -euo pipefail
 
@@ -26,7 +28,7 @@ while getopts "b:n:f:t:o:" opt; do
   case $opt in
     b) base=$OPTARG ;; n) seeds=$OPTARG ;; f) first=$OPTARG ;;
     t) trace=$OPTARG ;; o) out=$OPTARG ;;
-    *) sed -n '2,21p' "$0"; exit 2 ;;
+    *) sed -n '2,23p' "$0"; exit 2 ;;
   esac
 done
 shift $((OPTIND - 1))
@@ -65,10 +67,12 @@ for w in "${workloads[@]}"; do
   done
 done
 
-python3 - "$out" "$trace" "$first" "$seeds" "${workloads[@]}" <<'EOF'
+python3 - "$repo/BENCHMARK.json" "$out" "$trace" "$first" "$seeds" "${workloads[@]}" <<'EOF'
 import json, statistics, sys
-out, trace, first, n, workloads = sys.argv[1], sys.argv[2], int(sys.argv[3]), int(sys.argv[4]), sys.argv[5:]
+bench, out, trace = json.load(open(sys.argv[1])), sys.argv[2], sys.argv[3]
+first, n, workloads = int(sys.argv[4]), int(sys.argv[5]), sys.argv[6:]
 lead = ["setup_s", "ops_per_s", "cpu_us_per_op"]
+better = {m["name"]: m["better"] for m in bench["end_to_end"] + bench["per_layer"]}
 
 def load(side, w, seed):
     try:
@@ -96,6 +100,13 @@ def iqr(xs):
     q = statistics.quantiles(xs, n=4)
     return q[2] - q[0]
 
+def wins(m, bs, hs):  # pairs the head won, of the pairs with both values
+    both = [(x, y) for x, y in zip(bs, hs) if x is not None and y is not None]
+    if m not in better or not both:
+        return ""
+    sign = 1 if better[m] == "higher" else -1
+    return f", head wins {sum(sign * (y - x) > 0 for x, y in both)}/{len(both)}"
+
 for w in workloads:
     pairs = [(s, load("base", w, s), load("head", w, s)) for s in range(first, first + n)]
     names = sorted({m for _, b, h in pairs for r in (b, h) for m in r.get("metrics", {})},
@@ -111,6 +122,6 @@ for w in workloads:
         rel = f" ({(mh / mb - 1) * 100:+.1f} %)" if mb and mh is not None else ""
         per = "  ".join(f"{fmt(x)}->{fmt(y)}" for x, y in zip(bs, hs))
         print(f"  {m:28s} median {fmt(mb)} -> {fmt(mh)}{rel}, base IQR {fmt(iqr(bs))}"
-              f"   pairs: {per}")
+              f"{wins(m, bs, hs)}   pairs: {per}")
 print(f"[perf_ab] result lines in {out}", file=sys.stderr)
 EOF
