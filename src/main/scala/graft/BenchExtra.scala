@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import scala.util.{Failure, Success, Try}
 
 /** Optimization-round measurement harness (guide §1) — SEPARATE from the
   * frozen `graft.Bench`: per-query wall-clock with repeat control and
@@ -8,7 +9,7 @@ import org.apache.spark.sql.SparkSession
   * and re-measured without paying the full graded ladder.
   *
   * Usage (same env contract as Bench):
-  *   SPARK_GRAFT_SF_DIR=... SPARK_GRAFT_CPUS=32 \
+  *   SPARK_GRAFT_SF_DIR=... [SPARK_GRAFT_CPUS=n] \
   *     sbt "runMain graft.BenchExtra [--plans <dir>] [--reps N] [--filter csv]"
   *
   *   --plans <dir>  write <dir>/<query>.txt with the formatted physical plan
@@ -17,13 +18,17 @@ import org.apache.spark.sql.SparkSession
   *
   * Timing action is the same as Bench phase 3 (`df.count()`), so numbers are
   * comparable with the BENCH.md per-query table; a full-pipeline untimed
-  * warmup runs first, exactly like Bench.
+  * warmup runs first, exactly like Bench. `SPARK_GRAFT_CPUS` defaults to
+  * the machine's processor count. A query that throws prints as
+  * `name,FAILED,<exception class>`, is left out of `total_min_sec`, and
+  * makes the run exit 1.
   */
 object BenchExtra {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors)
 
     var plansDir: Option[String] = None
     var reps = 1
@@ -74,20 +79,30 @@ object BenchExtra {
 
     val results = qs.map { case (name, fn) =>
       spark.sparkContext.setJobDescription(s"benchextra: $name")
-      val samples = (1 to reps).map { _ =>
+      val samples = Try((1 to reps).map { _ =>
         val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case scala.util.control.NonFatal(_) => -1L }
+        fn(spark, sfDir).count()
         (System.nanoTime() - t0) / 1e9
-      }
+      })
       spark.sparkContext.setJobDescription(null)
       name -> samples
     }
     spark.stop()
 
+    val (timed, failed) = results.partitionMap {
+      case (n, Success(s)) => Left(n -> s)
+      case (n, Failure(e)) => Right(n -> e)
+    }
     println("query,min_sec,samples")
-    results.sortBy(-_._2.min).foreach { case (n, s) =>
+    timed.sortBy(-_._2.min).foreach { case (n, s) =>
       println(f"$n,${s.min}%.3f," + s.map(x => f"$x%.3f").mkString(" "))
     }
-    println(f"[benchextra] total_min_sec=${results.map(_._2.min).sum}%.1f over ${results.size} queries")
+    failed.foreach { case (n, e) =>
+      System.err.println(s"[benchextra] $n failed: $e")
+      println(s"$n,FAILED,${e.getClass.getName}")
+    }
+    println(f"[benchextra] total_min_sec=${timed.map(_._2.min).sum}%.1f over ${timed.size} queries" +
+      (if (failed.isEmpty) "" else s", ${failed.size} failed"))
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

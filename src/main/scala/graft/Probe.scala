@@ -1,16 +1,20 @@
 package graft
 
 import graft.core.Extractor
-import graft.spark.{ExtractPipeline, Transcripts}
-import org.apache.spark.sql.{functions => F, SparkSession}
 
-/** Performance probe (not part of the driver contract) — isolates where the
-  * extraction wall-clock goes so the bench configuration is evidence-based.
+/** The two weather gauges `graft.Bench` launches in a pinned child JVM and
+  * parses from stdout (one line per thread count; keep the format):
   *
-  *   kernel <n>              — single-thread kernel loop over n synthetic turns
-  *   spark <cores> <parts> <mpb> <amplify> [corpusDir]
-  *                           — one timed scan->shuffle->extract->agg pass
-  *   corpus <amplify> <dir>  — materialize the amplified corpus
+  *   kernelmt <t1,t2,...> <n>        — pure-CPU gauge: `Extractor.extractTurn`
+  *                                     over n synthetic turns at each thread
+  *                                     count, no Spark
+  *                                     (`[probe] kernelmt threads=T: ... = X turns/sec`)
+  *   memmt <t1,t2,...> [totalMb]     — DRAM-bandwidth gauge: a streaming sum
+  *                                     over a fixed working set at each
+  *                                     thread count (`[probe] memmt threads=T: ... = X GB/s`)
+  *
+  * All levels run back to back inside one JVM, so they share one weather
+  * window.
   */
 object Probe {
 
@@ -32,41 +36,6 @@ object Probe {
   }
 
   def main(args: Array[String]): Unit = args(0) match {
-    case "kernel" =>
-      val n = args(1).toInt
-      val turns = (0L until n.toLong).map(syntheticTurn)
-      // warmup
-      turns.take(n / 10).foreach { case (c, ti, t, tool) => Extractor.extractTurn(c, ti, t, tool) }
-      val t0 = System.nanoTime()
-      var chars = 0L
-      turns.foreach { case (c, ti, t, tool) =>
-        chars += Extractor.extractTurn(c, ti, t, tool).text.length
-      }
-      val sec = (System.nanoTime() - t0) / 1e9
-      println(f"[probe] kernel: $n turns in $sec%.2f s = ${n / sec}%.0f turns/sec/core (${sec / n * 1e6}%.1f us/turn), chars=$chars")
-
-    case "kernelloop" =>
-      // small distinct set looped `reps` times: distinguishes retained-set
-      // effects (cache/GC) from cumulative-state effects
-      val n = args(1).toInt
-      val reps = args(2).toInt
-      val turns = (0L until n.toLong).map(syntheticTurn).toArray
-      turns.foreach { case (c, ti, t, tool) => Extractor.extractTurn(c, ti, t, tool) }
-      val t0 = System.nanoTime()
-      var acc = 0L
-      var r = 0
-      while (r < reps) {
-        var i = 0
-        while (i < n) {
-          val (c, ti, t, tool) = turns(i)
-          acc += Extractor.extractTurn(c, ti, t, tool).text.length
-          i += 1
-        }
-        r += 1
-      }
-      val sec = (System.nanoTime() - t0) / 1e9
-      println(f"[probe] kernelloop: ${n.toLong * reps} extractions in $sec%.2f s = ${n.toLong * reps / sec}%.0f turns/sec ($acc)")
-
     case "kernelmt" =>
       // multithreaded kernel loop, no Spark: isolates raw CPU scaling.
       // args(1) may be a comma-separated thread-count list: all levels run
@@ -162,89 +131,5 @@ object Probe {
         val gib = totalMb.toDouble * passes / 1024
         println(f"[probe] memmt threads=$t: $gib%.1f GiB in $sec%.2f s = ${gib / sec}%.2f GB/s")
       }
-
-    case "steal" =>
-      val a = scala.io.Source.fromFile("/proc/stat").getLines().next().split("\\s+")
-      println(a.mkString(" "))
-
-    case "corpus" =>
-      val amplify = args(1).toInt
-      val dir = args(2)
-      val files = if (args.length > 3) args(3).toInt else 256
-      val spark = session(32, files, "128m")
-      Transcripts.amplified(spark, "/root/testdata/sf0.1", amplify, parts = files)
-        .write.mode("overwrite").parquet(dir)
-      spark.stop()
-
-    case "scan" =>
-      // scan + agg only: the I/O/decode floor, no kernel, no shuffle
-      val spark = session(args(1).toInt, args(2).toInt, args(3))
-      val t0 = System.nanoTime()
-      val row = spark.read.parquet(args(4))
-        .agg(F.count(F.lit(1)).as("n"),
-          F.sum(F.length(F.col("text")) + F.length(F.col("tool"))).as("chars")).collect()(0)
-      println(f"[probe] scan: ${row.getLong(0)} rows in ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      spark.stop()
-
-    case "narrow" =>
-      // scan -> kernel -> agg WITHOUT the salted repartition (no shuffle)
-      import org.apache.spark.sql.Encoders
-      val spark = session(args(1).toInt, args(2).toInt, args(3))
-      implicit val enc = Encoders.product[ExtractPipeline.Extracted]
-      implicit val encIn = Encoders.product[ExtractPipeline.TurnLite]
-      val t0 = System.nanoTime()
-      val row = spark.read.parquet(args(4))
-        .select(F.col("conv_id"), F.col("turn_idx").cast("int").as("turn_idx"),
-          F.col("text"), F.col("tool"))
-        .as[ExtractPipeline.TurnLite]
-        .mapPartitions { rows =>
-          rows.map { t =>
-            val r = Extractor.extractTurn(t.conv_id, t.turn_idx, t.text, t.tool)
-            ExtractPipeline.Extracted(t.conv_id, t.turn_idx, r.text, r.status, r.engine, 0, 0)
-          }
-        }
-        .agg(F.count(F.lit(1)).as("n"), F.sum(F.length(F.col("text"))).as("chars")).collect()(0)
-      println(f"[probe] narrow: ${row.getLong(0)} rows in ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      spark.stop()
-
-    case "spark" =>
-      val cores = args(1).toInt
-      val parts = args(2).toInt
-      val mpb = args(3)
-      val amplify = args(4).toInt
-      val corpus = if (args.length > 5) Some(args(5)) else None
-      val spark = session(cores, parts, mpb)
-      spark.sparkContext.setLogLevel("WARN")
-      // warmup
-      ExtractPipeline.extract(spark, Transcripts.fromDocuments(spark, "/root/testdata/sf0.1"))
-        .agg(F.count(F.lit(1))).collect()
-      val input = corpus match {
-        case Some(dir) => spark.read.parquet(dir)
-        case None      => Transcripts.amplified(spark, "/root/testdata/sf0.1", amplify)
-      }
-      val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
-        .asInstanceOf[com.sun.management.OperatingSystemMXBean]
-      val c0 = osBean.getProcessCpuTime
-      val t0 = System.nanoTime()
-      val row = ExtractPipeline.extract(spark, input, numPartitions = parts)
-        .agg(F.count(F.lit(1)).as("n"), F.sum(F.length(F.col("text"))).as("chars")).collect()(0)
-      val sec = (System.nanoTime() - t0) / 1e9
-      val cpuSec = (osBean.getProcessCpuTime - c0) / 1e9
-      println(f"[probe] spark cores=$cores parts=$parts mpb=$mpb: ${row.getLong(0)} turns in $sec%.2f s = ${row.getLong(0) / sec}%.0f turns/sec, cpu=$cpuSec%.1f s (${cpuSec * 1e6 / row.getLong(0)}%.1f us/turn)")
-      spark.stop()
-  }
-
-  private def session(cores: Int, parts: Int, mpb: String): SparkSession = {
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s = SparkSession.builder()
-      .master(s"local[$cores]")
-      .config("spark.sql.shuffle.partitions", parts.toString)
-      .config("spark.sql.files.maxPartitionBytes", mpb)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
   }
 }

@@ -44,41 +44,41 @@ object Engines {
     * strings, else an error naming the offending value.
     */
   def parseTesseractArgs(engineArgs: Option[Map[String, JVal]]): Either[String, TesseractArgs] = {
-    val empty = TesseractArgs(Map.empty, "", "")
-    engineArgs match {
-      case None => Right(empty)
-      case Some(args) =>
-        val cv: Either[String, Map[String, String]] = args.get("config_vars") match {
-          case None | Some(JNull) => Right(Map.empty)
-          case Some(JObj(m)) =>
-            m.foldLeft[Either[String, Map[String, String]]](Right(Map.empty)) {
-              case (acc, (k, v)) =>
-                acc.flatMap { mm =>
-                  v match {
-                    case JStr(s) => Right(mm + (k -> s))
-                    case other   => Left(s"could not convert configVar into string: ${goString(other)}")
-                  }
-                }
-            }
-          // the reference type-asserts without `ok` and would panic here
-          // (tesseract_engine.go:38); we degrade to an error row instead.
-          case Some(other) => Left(s"could not convert configVar into string: ${goString(other)}")
+    val args = engineArgs.getOrElse(Map.empty)
+    for {
+      cv <- configVars(args)
+      psm <- stringField(args, "psm", "could not convert psm into string")
+      lang <- stringField(args, "lang", "could not convert lang into string")
+    } yield TesseractArgs(cv, psm, lang)
+  }
+
+  /** `config_vars`, shared by both engines: absent or null -> empty, else a
+    * JSON object of JSON strings; the first other value is the error.
+    */
+  private def configVars(args: Map[String, JVal]): Either[String, Map[String, String]] = {
+    def err(v: JVal) = Left(s"could not convert configVar into string: ${goString(v)}")
+    args.get("config_vars") match {
+      case None | Some(JNull) => Right(Map.empty)
+      case Some(JObj(m)) =>
+        m.foldLeft[Either[String, Map[String, String]]](Right(Map.empty)) {
+          case (acc, (k, JStr(s))) => acc.map(_ + (k -> s))
+          case (acc, (_, other))   => acc.flatMap(_ => err(other))
         }
-        for {
-          configVars <- cv
-          psm <- args.get("psm") match {
-            case None | Some(JNull) => Right("")
-            case Some(JStr(s))      => Right(s)
-            case Some(other)        => Left(s"could not convert psm into string: ${goString(other)}")
-          }
-          lang <- args.get("lang") match {
-            case None | Some(JNull) => Right("")
-            case Some(JStr(s))      => Right(s)
-            case Some(other)        => Left(s"could not convert lang into string: ${goString(other)}")
-          }
-        } yield TesseractArgs(configVars, psm, lang)
+      // the reference type-asserts without `ok` and would panic here
+      // (tesseract_engine.go:38); we degrade to an error row instead.
+      case Some(other) => err(other)
     }
   }
+
+  /** A string-valued arg: absent or null -> "", else a JSON string; any other
+    * value is an error under the reference's `prefix`.
+    */
+  private def stringField(args: Map[String, JVal], key: String, prefix: String): Either[String, String] =
+    args.get(key) match {
+      case None | Some(JNull) => Right("")
+      case Some(JStr(s))      => Right(s)
+      case Some(other)        => Left(s"$prefix: ${goString(other)}")
+    }
 
   /** The tesseract-analog extraction: HTML main-content strip (or plain-text
     * normalization) honoring `config_vars.tessedit_char_whitelist` (character
@@ -132,43 +132,17 @@ object Engines {
 
   /** `/root/reference/sandwich_engine.go:36-104` semantics + error strings. */
   def parseSandwichArgs(engineArgs: Option[Map[String, JVal]]): Either[String, SandwichArgs] = {
-    val empty = SandwichArgs(Map.empty, "", "", resultOptimize = false)
-    engineArgs match {
-      case None => Right(empty)
-      case Some(args) =>
-        val cv: Either[String, Map[String, String]] = args.get("config_vars") match {
-          case None | Some(JNull) => Right(Map.empty)
-          case Some(JObj(m)) =>
-            m.foldLeft[Either[String, Map[String, String]]](Right(Map.empty)) {
-              case (acc, (k, v)) =>
-                acc.flatMap { mm =>
-                  v match {
-                    case JStr(s) => Right(mm + (k -> s))
-                    case other   => Left(s"could not convert configVar into string: ${goString(other)}")
-                  }
-                }
-            }
-          case Some(other) => Left(s"could not convert configVar into string: ${goString(other)}")
-        }
-        for {
-          configVars <- cv
-          lang <- args.get("lang") match {
-            case None | Some(JNull) => Right("")
-            case Some(JStr(s))      => Right(s)
-            case Some(other)        => Left(s"could not convert lang into string: ${goString(other)}")
-          }
-          ocrType <- args.get("ocr_type") match {
-            case None | Some(JNull) => Right("")
-            case Some(JStr(s))      => Right(s)
-            case Some(other)        => Left(s"could not convert into string: ${goString(other)}")
-          }
-          optimize <- args.get("result_optimize") match {
-            case None | Some(JNull) => Right(false)
-            case Some(JBool(b))     => Right(b)
-            case Some(other)        => Left(s"could not convert into boolean: ${goString(other)}")
-          }
-        } yield SandwichArgs(configVars, lang, ocrType, optimize)
-    }
+    val args = engineArgs.getOrElse(Map.empty)
+    for {
+      cv <- configVars(args)
+      lang <- stringField(args, "lang", "could not convert lang into string")
+      ocrType <- stringField(args, "ocr_type", "could not convert into string")
+      optimize <- args.get("result_optimize") match {
+        case None | Some(JNull) => Right(false)
+        case Some(JBool(b))     => Right(b)
+        case Some(other)        => Left(s"could not convert into boolean: ${goString(other)}")
+      }
+    } yield SandwichArgs(cv, lang, ocrType, optimize)
   }
 
   /** TIFF->PDF conversion with converter fallback — the two-attempt semantics

@@ -888,9 +888,8 @@ object Dedup {
     * label — every node has exactly one labels row, so min(prev) over the
     * group recovers it past the sentinel on neighbor rows) materializes
     * alongside `label` so convergence is decided from the SAME aggregation.
-    * Exposed for the plan dossier (`graft.Plans` dumps one round's shape).
     */
-  private[graft] def clusterStep(edges: DataFrame, labels: DataFrame): DataFrame = {
+  private def clusterStep(edges: DataFrame, labels: DataFrame): DataFrame = {
     val viaNeighbor = edges
       .join(labels.select(col("id").as("dst"), col("label")), "dst")
       .select(col("src").as("id"), col("label"))
@@ -952,26 +951,13 @@ object Dedup {
     * [[graft.spark.SimHashKernel.simhash16]] kernel — the HOF form ran one md5
     * `transform` plus SIXTEEN interpreted `filter` traversals of the
     * token-hash array per document. Bit-identical (pinned by a parity spec
-    * against [[simhashHof]] and by the unchanged DuckDB twin).
+    * against the test-only HOF twin and by the unchanged DuckDB twin).
     */
   val simhashBits = 16
 
   def simhash(doc: DataFrame): DataFrame =
     doc.select(col("doc_id"),
       graft.spark.HashFunctions.simHash16(col("text")).as("simhash"))
-
-  /** The interpreted HOF twin of [[simhash]] — kept for the parity spec. */
-  def simhashHof(doc: DataFrame): DataFrame = {
-    val withHashes = doc.select(col("doc_id"),
-      expr("transform(split(text, ' '), t -> CAST(conv(substring(md5(t), 1, 4), 16, 10) AS INT))")
-        .as("hs"))
-    val bitTerms = (0 until simhashBits).map { b =>
-      when(expr(s"size(filter(hs, h -> ((h >> $b) & 1) = 1)) * 2 > size(hs)"), 1 << b)
-        .otherwise(0)
-    }
-    withHashes.select(col("doc_id"),
-      bitTerms.reduce(_ + _).cast("int").as("simhash"))
-  }
 
   /** OR-of-rotations SimHash blocking: [[simhashBandCount]] cyclic 8-bit
     * windows of the 16-bit signature at stride 4 (windows starting at bits

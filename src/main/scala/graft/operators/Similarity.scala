@@ -450,38 +450,10 @@ object Similarity {
     * plan as literals (sub-slices of the SAME 16 collected vectors the IVF
     * quantizer uses — one driver fetch serves both).
     */
-  private def pqDistArr(cents: Array[(Long, Array[Double])], j: Int): Column =
+  private[graft] def pqDistArr(cents: Array[(Long, Array[Double])], j: Int): Column =
     graft.spark.VectorFunctions.pqSubDists(col("embedding"), j * pqSubDim,
       (0 until pqCodes).map(c =>
         cents(c)._2.slice(j * pqSubDim, (j + 1) * pqSubDim).toSeq))
-
-  /** The interpreted expression twin of [[pqDistArr]] — kept for the parity
-    * spec pinning the native [[graft.spark.PqKernel]] to the SQL form (the
-    * expression tree carried 16 branches per subspace, twice per PQ query —
-    * the dominant Catalyst planning/codegen cost of the PQ family).
-    */
-  private[graft] def pqDistArrHof(cents: Array[(Long, Array[Double])], j: Int): Column = {
-    import graft.spark.VectorFunctions.vecDot
-    val xs = pqSubvector(j)
-    val x2 = vecDot(xs, xs)
-    val ds = (0 until pqCodes).map { c =>
-      val cs = cents(c)._2.slice(j * pqSubDim, (j + 1) * pqSubDim)
-      val c2 = cs.foldLeft(0d)((acc, x) => acc + x * x)
-      (x2 - lit(2.0) * vecDot(xs, typedlit(cs.toSeq))) + lit(c2)
-    }
-    array(ds: _*)
-  }
-
-  private def pqSubvector(j: Int): Column =
-    slice(col("embedding"), j * pqSubDim + 1, pqSubDim)
-
-  /** Test hooks for the PqSubDists parity spec. */
-  private[graft] def collectCentroidsForTest(emb: DataFrame): Array[(Long, Array[Double])] =
-    collectCentroids(emb)
-  private[graft] def pqDistArrForTest(cents: Array[(Long, Array[Double])], j: Int): Column =
-    pqDistArr(cents, j)
-  private[graft] def pqDistArrHofForTest(cents: Array[(Long, Array[Double])], j: Int): Column =
-    pqDistArrHof(cents, j)
 
   /** The 8 per-subspace codes of each row as `array<int>` — argmin with
     * first-occurrence (= lowest code) tiebreak, the [[ivfAssignWith]]

@@ -68,7 +68,7 @@ object TextAnalysis {
   /** Winner-take-first language prediction (ties to [[langStopwords]]
     * order; all-zero -> "und") as a reusable Column over `text` — routed
     * through the native one-pass [[graft.spark.LangKernel.langPredict]]
-    * kernel: the HOF form ([[langPredictedHof]], kept for the parity spec)
+    * kernel: the HOF form (its test-only twin lives in `HofRefs`)
     * is built from interpreted `filter(split(...))` lambdas that Catalyst
     * CANNOT subexpression-eliminate (HOFs are CSE-excluded), so every
     * when-branch and every downstream when-chain referencing the alias
@@ -76,21 +76,6 @@ object TextAnalysis {
     * in [[Sampling.upweight]]-shaped consumers.
     */
   def langPredicted: Column = graft.spark.HashFunctions.langPredict(col("text"))
-
-  /** The interpreted when-chain twin of [[langPredicted]] — kept for the
-    * parity spec that pins the native kernel to the SQL-expressible form.
-    * Known difference on NULL text: every score is NULL, no branch holds and
-    * the chain falls through to "fr", while the native kernel gives NULL.
-    * The corpus has no NULL text, so the oracle cannot see this.
-    */
-  def langPredictedHof: Column = {
-    val Seq(en, de, es, fr) = langScores.map(_._2)
-    when(en === 0 && de === 0 && es === 0 && fr === 0, "und")
-      .when(en >= de && en >= es && en >= fr, "en")
-      .when(de >= es && de >= fr, "de")
-      .when(es >= fr, "es")
-      .otherwise("fr")
-  }
 
   /** Language-ID: count stopword hits per language; winner is the first
     * language (in [[langStopwords]] order) with the maximal score; all-zero
@@ -113,16 +98,6 @@ object TextAnalysis {
     */
   def rollingHash(text: Column): Column =
     graft.spark.HashFunctions.rollingHash(text)
-
-  /** The interpreted HOF twin of [[rollingHash]] — kept for the parity spec
-    * that pins the native kernel to the SQL-expressible form.
-    */
-  def rollingHashHof(text: Column): Column =
-    aggregate(
-      transform(sequence(lit(1), length(text)),
-        i => ascii(text.substr(i, lit(1))).cast("bigint")),
-      lit(0L),
-      (h, c) => (h * lit(31L) + c) % lit(2147483647L))
 
   /** Document fingerprint: md5 of the whitespace-normalized text plus the
     * rolling hash (the cheap incremental variant; the shingled form is in
@@ -330,14 +305,6 @@ object TextAnalysis {
   private def blockedTermCount: Column =
     graft.spark.HashFunctions.tokenSetCount(col("text"), blockedTerms)
 
-  /** The interpreted HOF twin of [[blockedTermCount]] — kept for the
-    * parity spec pinning the native kernel to the SQL-expressible form.
-    */
-  private[graft] def blockedTermCountHof: Column = {
-    val inList = blockedTerms.map(t => s"'$t'").mkString(", ")
-    size(expr(s"filter(split(text, ' '), t -> t IN ($inList))"))
-  }
-
   /** The keep predicate over (`source`, a blocked-term count column). */
   private def blocklistKeep(nBlocked: Column): Column =
     !col("source").isInCollection(blockedSources) && nBlocked === 0
@@ -382,19 +349,6 @@ object TextAnalysis {
   private def classifierScoreExpr: Column =
     graft.spark.HashFunctions.classifierScore(col("text"),
       (0 until classifierBuckets).map(classifierWeight(_).toLong))
-
-  /** The interpreted aggregate-HOF twin of [[classifierScoreExpr]] — kept
-    * for the parity spec pinning the native kernel to the SQL form.
-    */
-  private[graft] def classifierScoreExprHof: Column = {
-    val wArr = (0 until classifierBuckets).map(classifierWeight)
-      .mkString("array(", ", ", ")")
-    expr(
-      s"""aggregate(split(text, ' '), 0, (acc, t) ->
-         |  acc + element_at($wArr,
-         |    CAST(pmod(CAST(conv(substring(md5(t), 1, 4), 16, 10) AS INT),
-         |              $classifierBuckets) AS INT) + 1))""".stripMargin)
-  }
 
   def classifierScore(doc: DataFrame): DataFrame = {
     val score = classifierScoreExpr

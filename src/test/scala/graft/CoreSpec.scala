@@ -72,6 +72,8 @@ class CoreSpec extends AnyFunSuite {
     assert(Engines.parseTesseractArgs(
       Some(Map("config_vars" -> JVal.JObj(Map("k" -> JVal.JNum(1)))))) ==
       Left("could not convert configVar into string: 1"))
+    assert(Engines.parseTesseractArgs(Some(Map("config_vars" -> JVal.JStr("k=v")))) ==
+      Left("could not convert configVar into string: k=v"))
   }
 
   // --- sandwich arg parsing (sandwich_engine_test.go:74-86)
@@ -85,6 +87,13 @@ class CoreSpec extends AnyFunSuite {
       Left("could not convert into boolean: yes"))
     assert(Engines.parseSandwichArgs(Some(Map("ocr_type" -> JVal.JNum(1)))) ==
       Left("could not convert into string: 1"))
+    assert(Engines.parseSandwichArgs(Some(Map("lang" -> JVal.JNum(2)))) ==
+      Left("could not convert lang into string: 2"))
+    assert(Engines.parseSandwichArgs(
+      Some(Map("config_vars" -> JVal.JObj(Map("k" -> JVal.JBool(false)))))) ==
+      Left("could not convert configVar into string: false"))
+    assert(Engines.parseSandwichArgs(Some(Map("config_vars" -> JVal.JNum(3)))) ==
+      Left("could not convert configVar into string: 3"))
   }
 
   // --- stroke-width-transform param (stroke_width_transform_test.go:10-30)

@@ -790,13 +790,13 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     import spark.implicits._
     val corpus = Transcripts.documents(spark, sfDir)
     val native = Dedup.simhash(corpus).orderBy("doc_id").collect().toSeq
-    val hof = Dedup.simhashHof(corpus).orderBy("doc_id").collect().toSeq
+    val hof = HofRefs.simhashHof(corpus).orderBy("doc_id").collect().toSeq
     assert(native == hof, "native simhash16 diverged from the HOF form")
     // edge cases: empty text (one empty token), single token, non-ASCII
     val edge = Seq("", "one", "a b a b", "héllo wörld").toDF("text")
       .withColumn("doc_id", monotonically_increasing_id())
     assert(Dedup.simhash(edge).orderBy("doc_id").collect().toSeq ==
-      Dedup.simhashHof(edge).orderBy("doc_id").collect().toSeq)
+      HofRefs.simhashHof(edge).orderBy("doc_id").collect().toSeq)
     // participates in whole-stage codegen
     val plan = Dedup.simhash(corpus).queryExecution.executedPlan.toString
     assert(plan.contains("*("), s"no codegen stage in:\n$plan")
@@ -862,7 +862,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     import spark.implicits._
     val corpus = Transcripts.documents(spark, sfDir)
       .select(TextAnalysis.rollingHash(col("text")).as("native"),
-        TextAnalysis.rollingHashHof(col("text")).as("hof"))
+        HofRefs.rollingHashHof(col("text")).as("hof"))
       .filter(col("native") =!= col("hof"))
     assert(corpus.count() == 0, "native rolling hash diverged from the HOF fold on the corpus")
     // edge cases: empty string, non-ASCII (Spark 4's ascii() = first code
@@ -871,7 +871,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val edge = Seq("", "héllo wörld", "a", "x" * 5000, "emoji 😀 tail")
       .toDF("text")
       .select(TextAnalysis.rollingHash(col("text")).as("native"),
-        TextAnalysis.rollingHashHof(col("text")).as("hof"))
+        HofRefs.rollingHashHof(col("text")).as("hof"))
       .collect()
     edge.foreach(r => assert(r.getLong(0) == r.getLong(1), s"edge mismatch: $r"))
     // participates in whole-stage codegen
@@ -2089,7 +2089,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       .select((Seq(
         graft.spark.HashFunctions.langScores4(col("text")).as("sc"),
         TextAnalysis.langPredicted.as("native_pred"),
-        TextAnalysis.langPredictedHof.as("hof_pred")) ++ scoreCols): _*)
+        HofRefs.langPredictedHof.as("hof_pred")) ++ scoreCols): _*)
     val diff = d.filter(
       element_at(col("sc"), 1) =!= col("hof_en")
         || element_at(col("sc"), 2) =!= col("hof_de")
@@ -2108,7 +2108,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val nul = Seq(Option.empty[String]).toDF("text")
       .select(TextAnalysis.langPredicted.as("p"),
         graft.spark.HashFunctions.langScores4(col("text")).as("sc"),
-        TextAnalysis.langPredictedHof.as("hof"))
+        HofRefs.langPredictedHof.as("hof"))
       .head
     assert(nul.isNullAt(0) && nul.isNullAt(1))
     assert(nul.getString(2) == "fr")
@@ -2152,14 +2152,14 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val tsc = d.select(
       graft.spark.HashFunctions.tokenSetCount(col("text"), TextAnalysis.blockedTerms)
         .as("native"),
-      TextAnalysis.blockedTermCountHof.as("hof"))
+      HofRefs.blockedTermCountHof.as("hof"))
     assert(tsc.filter(col("native") =!= col("hof")).count() == 0)
     // classifier_score (untrained weight table) vs the aggregate-HOF chain
     val cs = d.select(
       graft.spark.HashFunctions.classifierScore(col("text"),
         (0 until TextAnalysis.classifierBuckets).map(TextAnalysis.classifierWeight(_).toLong))
         .cast("int").as("native"),
-      TextAnalysis.classifierScoreExprHof.cast("int").as("hof"))
+      HofRefs.classifierScoreExprHof.cast("int").as("hof"))
     assert(cs.filter(col("native") =!= col("hof")).count() == 0)
     // text_char_pairs vs the two-generate HOF multiset (count per pair)
     val hofPairs = d.select(explode(split(col("text"), " ")).as("w"))
@@ -2184,10 +2184,10 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("pq_sub_dists: native distance table identical to the expression form") {
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-    val cents = Similarity.collectCentroidsForTest(emb)
+    val cents = Similarity.collectCentroids(emb)
     val checks = (0 until 8).map { j =>
-      (Similarity.pqDistArrForTest(cents, j).as(s"n$j"),
-        Similarity.pqDistArrHofForTest(cents, j).as(s"h$j"))
+      (Similarity.pqDistArr(cents, j).as(s"n$j"),
+        HofRefs.pqDistArrHof(cents, j).as(s"h$j"))
     }
     val d = emb.select(checks.flatMap(t => Seq(t._1, t._2)): _*)
     val mismatch = (0 until 8).map(j => col(s"n$j") =!= col(s"h$j")).reduce(_ || _)
