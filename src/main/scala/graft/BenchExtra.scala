@@ -42,6 +42,7 @@ object BenchExtra {
         case other => sys.error(s"unknown arg: $other")
       }
     }
+    require(reps >= 1, s"--reps must be at least 1, got $reps")
 
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
