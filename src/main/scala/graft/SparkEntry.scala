@@ -345,16 +345,15 @@ object SparkEntry {
         .orderBy("canonical")
     }),
 
-    // O20 postback as an actual side output: foreachBatch delivery table
-    // recording attempts/delivered/backoff per row via
+    // O20 postback as an actual side output: a batchId-scoped delivery
+    // table recording attempts/delivered/backoff per row via
     // Delivery.postbackOutcome (ocr_postback_client.go:27-78).
     "o20_postback_sink" -> ((s, dir) => {
       val base = graft.spark.TmpDirs.create("graft_postback_")
       val in = graft.spark.Staged.transcripts(s, dir) // staged once per process
       graft.streaming.StreamPipeline.runPostbackSink(
         s, in, s"$base/delivery", s"$base/cp")
-      // batchId-scoped subdirs (b0, b1, ...) — not k=v partition dirs
-      s.read.option("recursiveFileLookup", "true").parquet(s"$base/delivery")
+      graft.streaming.OneShot.readBatchDirs(s, s"$base/delivery")
         .orderBy("conv_id", "turn_idx")
     }),
 

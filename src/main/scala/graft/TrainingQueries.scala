@@ -564,8 +564,8 @@ object TrainingQueries {
 
     // STREAMING span ingest: the same rewrite as dedup_span_incremental
     // but incoming docs arrive as an AvailableNow stream checked per
-    // micro-batch against the static block artifact (foreachBatch; the
-    // artifacts ARE the state)
+    // micro-batch against the static block artifact (batchId-scoped
+    // overwrite dirs; the artifacts ARE the state)
     "dedup_span_stream" -> ((s, dir) =>
       Dedup.runStreamingSpanIncremental(s, dir).orderBy("doc_id")),
 

@@ -1,7 +1,9 @@
 package graft.operators
 
+import graft.streaming.OneShot
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType, TimestampType}
 
 import org.apache.spark.sql.SparkSession
 
@@ -572,6 +574,12 @@ object Dedup {
       .unionAll(survivors.select(outCols.map(col): _*))
   }
 
+  /** The streamed documents' columns (the staged inputs of the streaming
+    * dedup queries, [[graft.spark.Staged]]).
+    */
+  private val docSchema = StructType(Seq(
+    StructField("doc_id", LongType), StructField("text", StringType)))
+
   /** STREAMING incremental dedup — [[incrementalDedup]] as the continual-
     * ingestion stream it models: INCOMING documents arrive as a stream and
     * are checked against the EXISTING corpus's materialized artifacts (the
@@ -585,7 +593,8 @@ object Dedup {
     * re-aggregation (a streaming groupBy would need watermarked state for
     * what five marker joins answer statelessly). Docs too short to shingle
     * carry null bands, match no bucket, and survive the near check by
-    * construction — the batch operator's behavior exactly.
+    * construction — the batch operator's behavior exactly. Returns the
+    * finished query.
     */
   private[graft] def streamingIncrementalQuery(
       spark: org.apache.spark.sql.SparkSession,
@@ -595,8 +604,6 @@ object Dedup {
       cp: String,
       maxFilesPerTrigger: Option[Int] = None
   ): org.apache.spark.sql.streaming.StreamingQuery = {
-    import org.apache.spark.sql.streaming.Trigger
-    import org.apache.spark.sql.types._
     // the existing corpus's materialized artifacts (static sides): ONE
     // scan via corpusArtifacts feeds the hash table and all band buckets
     val art = corpusArtifacts(existing)
@@ -606,12 +613,7 @@ object Dedup {
         .filter(col(s"sband$b").isNotNull)
         .distinct().withColumn(s"hit$b", lit(1))
     }
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("text", StringType)))
-    val reader = spark.readStream.schema(schema)
-    val stream = maxFilesPerTrigger
-      .fold(reader)(n => reader.option("maxFilesPerTrigger", n.toString))
-      .parquet(in)
+    val stream = OneShot.source(spark, docSchema, in, maxFilesPerTrigger)
     // narrow signature on the stream: the same guarded hashAndBands
     // projection as the artifact build — short docs get GENUINELY NULL
     // bands (null never equi-joins -> no near match; the guard matters
@@ -624,17 +626,13 @@ object Dedup {
         acc.join(broadcast(bk), col(s"band$b") === col(s"sband$b"), "left_outer")
           .drop(s"sband$b")
     }
-    checked
-      .filter(col("hit_exact").isNull &&
-        (0 until minhashBandCount)
-          .map(b => col(s"hit$b").isNull).reduce(_ && _))
-      .select(col("doc_id"), length(col("text")).cast("int").as("n_chars"))
-      .writeStream
-      .format("parquet")
-      .option("path", out)
-      .option("checkpointLocation", cp)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    OneShot.toParquet(
+      checked
+        .filter(col("hit_exact").isNull &&
+          (0 until minhashBandCount)
+            .map(b => col(s"hit$b").isNull).reduce(_ && _))
+        .select(col("doc_id"), length(col("text")).cast("int").as("n_chars")),
+      out, cp)
   }
 
   /** Driver query for [[streamingIncrementalQuery]]: the same
@@ -649,13 +647,13 @@ object Dedup {
   def runStreamingIncremental(
       spark: org.apache.spark.sql.SparkSession, sfDir: String): DataFrame = {
     val base = graft.spark.TmpDirs.create("graft_sincr_")
-    val out = s"$base/out"; val cp = s"$base/cp"
+    val out = s"$base/out"
     val existing = graft.spark.Transcripts.documents(spark, sfDir)
       .select(col("doc_id"), col("text"))
       .filter(pmod(col("doc_id"), lit(3)) =!= 0)
     val in = graft.spark.Staged.incomingDocs(spark, sfDir)
-    Events.withShufflePartitions(spark, Events.stateShards) {
-      streamingIncrementalQuery(spark, existing, in, out, cp).awaitTermination()
+    OneShot.withShufflePartitions(spark, OneShot.stateShards) {
+      streamingIncrementalQuery(spark, existing, in, out, s"$base/cp")
     }
     spark.read.parquet(out)
   }
@@ -677,10 +675,10 @@ object Dedup {
   def runStreamingNearDup(
       spark: org.apache.spark.sql.SparkSession, sfDir: String): DataFrame = {
     val base = graft.spark.TmpDirs.create("graft_sneardup_")
-    val out = s"$base/out"; val cp = s"$base/cp"
+    val out = s"$base/out"
     val in = graft.spark.Staged.docsWithDups(spark, sfDir)
-    Events.withShufflePartitions(spark, Events.stateShards) {
-      streamingNearDupQuery(spark, in, out, cp).awaitTermination()
+    OneShot.withShufflePartitions(spark, OneShot.stateShards) {
+      streamingNearDupQuery(spark, in, out, s"$base/cp")
     }
     spark.read.parquet(out).agg(
       count(lit(1)).cast("long").as("n_survivors"),
@@ -691,7 +689,8 @@ object Dedup {
     * and `maxFilesPerTrigger` — exposed so the spec can force MULTIPLE
     * AvailableNow micro-batches and pin the cross-batch state path (a
     * band-0 bucket claimed in batch 1 must still suppress a duplicate
-    * arriving in batch 2 while the watermark covers both).
+    * arriving in batch 2 while the watermark covers both). Returns the
+    * finished query.
     */
   private[graft] def streamingNearDupQuery(
       spark: org.apache.spark.sql.SparkSession,
@@ -700,16 +699,8 @@ object Dedup {
       cp: String,
       maxFilesPerTrigger: Option[Int] = None
   ): org.apache.spark.sql.streaming.StreamingQuery = {
-    import org.apache.spark.sql.streaming.Trigger
-    import org.apache.spark.sql.types._
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("text", StringType),
-      StructField("ts", TimestampType)))
-    val reader = spark.readStream.schema(schema)
-    val stream = maxFilesPerTrigger
-      .fold(reader)(n => reader.option("maxFilesPerTrigger", n.toString))
-      .parquet(in)
-    val sig = stream
+    val sig = OneShot.source(spark, docSchema.add("ts", TimestampType), in,
+      maxFilesPerTrigger)
       .filter(size(split(col("text"), " ")) >= 3)
       .select(col("doc_id"), col("ts"),
         graft.spark.HashFunctions.minHash16(shingles(col("text"))).as("mh"))
@@ -717,15 +708,9 @@ object Dedup {
         (0 until minhashRowsPerBand)
           .map(r => element_at(col("mh"), r + 1).cast("string")): _*)))
       .select(col("doc_id"), col("ts"), col("band0"))
-    sig
-      .withWatermark("ts", "3650 days")
-      .dropDuplicatesWithinWatermark("band0")
-      .writeStream
-      .format("parquet")
-      .option("path", out)
-      .option("checkpointLocation", cp)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    OneShot.toParquet(
+      sig.withWatermark("ts", "3650 days").dropDuplicatesWithinWatermark("band0"),
+      out, cp)
   }
 
   /** The canonical two-stage MinHash pipeline: candidate pairs from the LSH
@@ -1329,33 +1314,33 @@ object Dedup {
     * stream over the same incoming construction as
     * `dedup_incremental_stream` (shared staged input, shared injection):
     * each micro-batch rewrites its documents against the STATIC block
-    * artifact via `foreachBatch` (the O20 delivery-sink precedent). The
-    * corpus artifacts ARE the state — no watermark, no state store — and
-    * the rewrite is correct under ANY batch split because one document
+    * artifact into its own batchId-scoped directory
+    * ([[graft.streaming.OneShot.toBatchDirs]], the O20 delivery-sink
+    * precedent: a checkpoint-replayed batch rewrites, never duplicates).
+    * The corpus artifacts ARE the state — no watermark, no state store —
+    * and the rewrite is correct under ANY batch split because one document
     * is one input row: its explode, artifact join, and reassembly all
-    * happen inside the batch that carries it. Each batch OVERWRITES its
-    * own batchId-scoped directory (the O20 delivery-sink idempotency
-    * rule: a checkpoint-replayed batch rewrites, never duplicates).
+    * happen inside the batch that carries it.
     * Stream == batch equality is spec-pinned.
     */
   def runStreamingSpanIncremental(
       spark: org.apache.spark.sql.SparkSession, sfDir: String): DataFrame = {
     val base = graft.spark.TmpDirs.create("graft_sspan_")
-    val out = s"$base/out"; val cp = s"$base/cp"
+    val out = s"$base/out"
     val existing = graft.spark.Transcripts.documents(spark, sfDir)
       .select(col("doc_id"), col("text"))
       .filter(pmod(col("doc_id"), lit(3)) =!= 0)
     val art = spanArtifacts(existing)
     val in = graft.spark.Staged.incomingDocs(spark, sfDir)
-    spanStreamQuery(spark, art, in, out, cp).awaitTermination()
-    spark.read.option("recursiveFileLookup", "true").parquet(out)
+    spanStreamQuery(spark, art, in, out, s"$base/cp")
+    OneShot.readBatchDirs(spark, out)
   }
 
   /** The streaming span-ingest query itself, parameterized on
     * `maxFilesPerTrigger` — exposed so the spec can force MULTIPLE
     * AvailableNow micro-batches and pin per-batch independence (each doc
     * is rewritten in exactly the batch that carries its row, whatever
-    * the split).
+    * the split). Returns the finished query.
     */
   private[graft] def spanStreamQuery(
       spark: org.apache.spark.sql.SparkSession,
@@ -1364,25 +1349,10 @@ object Dedup {
       out: String,
       cp: String,
       maxFilesPerTrigger: Option[Int] = None
-  ): org.apache.spark.sql.streaming.StreamingQuery = {
-    import org.apache.spark.sql.streaming.Trigger
-    import org.apache.spark.sql.types._
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("text", StringType)))
-    val reader = spark.readStream.schema(schema)
-    maxFilesPerTrigger
-      .fold(reader)(n => reader.option("maxFilesPerTrigger", n.toString))
-      .parquet(in)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        spanDedupIncremental(art, batch)
-          .write.mode("overwrite").parquet(s"$out/b$batchId")
-        ()
-      }
-      .option("checkpointLocation", cp)
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+  ): org.apache.spark.sql.streaming.StreamingQuery =
+    OneShot.toBatchDirs(OneShot.source(spark, docSchema, in, maxFilesPerTrigger), out, cp) {
+      (batch, _) => spanDedupIncremental(art, batch)
+    }
 
   /** Stop-gram document-frequency cap for [[containmentPairs]] — a
     * shingle appearing in more documents than this is boilerplate and

@@ -1,9 +1,11 @@
 package graft.operators
 
+import graft.spark.{Staged, TmpDirs}
+import graft.streaming.OneShot
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 
 /** Event-stream operators over the driver's `events` table — the
@@ -29,23 +31,6 @@ object Events {
   def events(spark: SparkSession, sfDir: String): DataFrame =
     spark.read.parquet(s"$sfDir/events.parquet")
 
-  /** State-store shard count for the STATEFUL streaming runs. Spark creates
-    * one state store (directory of delta/commit files per micro-batch) per
-    * shuffle partition: shards must be sized to STATE, not to input — these
-    * harness queries hold a few thousand windows/keys, where 32 shards'
-    * per-batch file commits dominate wall time (measured 2x: windowed
-    * 3.2 -> 1.7 s, dedup 3.3 -> 1.3 s at 8 shards). At 10^12-event scale
-    * the same knob goes UP with state size; the point is that it is an
-    * explicit, state-sized choice, scoped to the stream run.
-    */
-  val stateShards = 8
-
-  private[operators] def withShufflePartitions[T](spark: SparkSession, n: Int)(body: => T): T = {
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", n.toString)
-    try body finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-  }
-
   /** Hourly event-time windows per event_type under a 10-minute watermark. */
   def windowedCounts(stream: DataFrame): DataFrame =
     stream
@@ -62,18 +47,12 @@ object Events {
     * encodes exactly that contract.
     */
   def runWindowedStream(spark: SparkSession, sfDir: String): DataFrame = {
-    val base = graft.spark.TmpDirs.create("graft_events_")
-    val out = s"$base/out"; val cp = s"$base/cp"
-    val in = graft.spark.Staged.events(spark, sfDir) // staged once per process
-    val stream = spark.readStream.schema(eventSchema).parquet(in)
-    withShufflePartitions(spark, stateShards) {
-      val q = windowedCounts(stream).writeStream
-        .format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", cp)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+    val base = TmpDirs.create("graft_events_")
+    val out = s"$base/out"
+    val in = Staged.events(spark, sfDir) // staged once per process
+    OneShot.withShufflePartitions(spark, OneShot.stateShards) {
+      OneShot.toParquet(windowedCounts(OneShot.source(spark, eventSchema, in)),
+        out, s"$base/cp")
     }
     spark.read.parquet(out)
       .select(
@@ -100,11 +79,11 @@ object Events {
     * operator's contract: dedup-within-horizon, not dedup-forever.
     */
   def runStreamingDedup(spark: SparkSession, sfDir: String): DataFrame = {
-    val base = graft.spark.TmpDirs.create("graft_sdedup_")
-    val out = s"$base/out"; val cp = s"$base/cp"
-    val in = graft.spark.Staged.eventsWithDups(spark, sfDir)
-    withShufflePartitions(spark, stateShards) {
-      streamingDedupQuery(spark, in, out, cp).awaitTermination()
+    val base = TmpDirs.create("graft_sdedup_")
+    val out = s"$base/out"
+    val in = Staged.eventsWithDups(spark, sfDir)
+    OneShot.withShufflePartitions(spark, OneShot.stateShards) {
+      streamingDedupQuery(spark, in, out, s"$base/cp")
     }
     spark.read.parquet(out)
       .groupBy("event_type")
@@ -118,6 +97,7 @@ object Events {
     * input) and pin that the dedup guarantee holds across the state-store
     * boundary, not just inside one batch (the harness oracle input is one
     * file = one batch, which makes the contract structural there).
+    * Returns the finished query.
     */
   private[graft] def streamingDedupQuery(
       spark: SparkSession,
@@ -125,21 +105,12 @@ object Events {
       out: String,
       cp: String,
       maxFilesPerTrigger: Option[Int] = None
-  ): org.apache.spark.sql.streaming.StreamingQuery = {
-    val reader = spark.readStream.schema(eventSchema)
-    val stream = maxFilesPerTrigger
-      .fold(reader)(n => reader.option("maxFilesPerTrigger", n.toString))
-      .parquet(in)
-    stream
-      .withWatermark("ts", "3650 days") // >= the table's event-time span
-      .dropDuplicatesWithinWatermark("event_id")
-      .writeStream
-      .format("parquet")
-      .option("path", out)
-      .option("checkpointLocation", cp)
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+  ): StreamingQuery =
+    OneShot.toParquet(
+      OneShot.source(spark, eventSchema, in, maxFilesPerTrigger)
+        .withWatermark("ts", "3650 days") // >= the table's event-time span
+        .dropDuplicatesWithinWatermark("event_id"),
+      out, cp)
 
   final case class EventLite(user_id: Long, event_id: Long, ts: java.sql.Timestamp)
   final case class SessionState(lastEpochSec: Long, nEvents: Long, nSessions: Long)

@@ -3,16 +3,16 @@ package graft.streaming
 import graft.spark.ExtractPipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
 /** Structured-Streaming form of the extraction pipeline. The reference IS a
   * streaming system (unbounded RabbitMQ queue, prefetch flow control,
   * at-least-once ack — SURVEY.md §2.10); this is the same fused typed stage
-  * dropped into `readStream -> mapPartitions -> writeStream` with
-  * checkpointing standing in for the ack/requeue machinery. Per-record
+  * dropped into a one-shot stream ([[OneShot]]) with checkpointing
+  * standing in for the ack/requeue machinery. Per-record
   * processing is stateless, exactly like the reference; watermarked windowed
-  * counts stand in for the Prometheus rate metrics (O22).
+  * counts ([[graft.operators.Events.windowedCounts]]) stand in for the
+  * Prometheus rate metrics (O22).
   */
 object StreamPipeline {
 
@@ -24,10 +24,10 @@ object StreamPipeline {
     StructField("tool", StringType),
     StructField("ts", TimestampType)))
 
-  /** One-shot (Trigger.AvailableNow) streaming extraction over a parquet
-    * directory: drains everything available, checkpoints, stops. Restarting
-    * with the same checkpoint skips processed files — the streaming twin of
-    * [[graft.spark.Lineage]].
+  /** One-shot streaming extraction over a parquet directory
+    * ([[OneShot.toParquet]]): drains everything available, checkpoints,
+    * stops. Restarting with the same checkpoint skips processed files — the
+    * streaming twin of [[graft.spark.Lineage]].
     */
   def runAvailableNow(
       spark: SparkSession,
@@ -35,28 +35,18 @@ object StreamPipeline {
       outDir: String,
       checkpointDir: String
   ): Unit = {
-    val stream = spark.readStream.schema(transcriptSchema).parquet(inputDir)
-    val extracted = ExtractPipeline.extract(spark, stream)
-    val q = extracted.writeStream
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    val extracted = ExtractPipeline.extract(spark,
+      OneShot.source(spark, transcriptSchema, inputDir))
+    OneShot.toParquet(extracted, outDir, checkpointDir)
   }
 
   /** O20 postback as an ACTUAL side output
     * (`/root/reference/ocr_postback_client.go:27-78`, retry loop
     * `ocr_rpc_client.go:232-277`): each micro-batch's extraction results are
     * "posted back" through [[graft.core.Delivery.postbackOutcome]] and the
-    * per-row attempt/outcome is recorded in a delivery table via
-    * `foreachBatch`. The write is IDEMPOTENT under restart: each micro-batch
-    * OVERWRITES its own batchId-scoped directory (`deliveryDir/b<batchId>`),
-    * so a crash after the write but before the checkpoint commit makes the
-    * retried batch rewrite — not duplicate — its rows (a plain `append`
-    * would be at-least-once). Read the table back with
-    * `recursiveFileLookup` (the subdirs are not k=v partition dirs).
+    * per-row attempt/outcome is recorded in a delivery table of
+    * batchId-scoped directories ([[OneShot.toBatchDirs]], idempotent under
+    * restart; read it back with [[OneShot.readBatchDirs]]).
     * Failure counts are simulated deterministically (turn_idx % 5) so the
     * delivery table is oracle-checkable; a real deployment would substitute
     * the HTTP POST and record the observed outcome in the same table.
@@ -67,41 +57,22 @@ object StreamPipeline {
       deliveryDir: String,
       checkpointDir: String
   ): Unit = {
-    val stream = spark.readStream.schema(transcriptSchema).parquet(inputDir)
-    val extracted = ExtractPipeline.extract(spark, stream)
-    val q = extracted.writeStream
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[ExtractPipeline.Extracted], batchId: Long) =>
-          val s = batch.sparkSession
-          import s.implicits._
-          batch
-            .map { e =>
-              val failures = ((e.turn_idx % 5) + 5) % 5
-              val (attempts, delivered, backoff) =
-                graft.core.Delivery.postbackOutcome(failures)
-              (e.conv_id, e.turn_idx, e.status, attempts, delivered, backoff,
-                "X-open-ocr-reply-type: json")
-            }
-            .toDF("conv_id", "turn_idx", "status", "attempts", "delivered",
-              "backoff_s", "reply_header")
-            .write.mode("overwrite").parquet(s"$deliveryDir/b$batchId")
-          ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    import spark.implicits._
+    val extracted = ExtractPipeline.extract(spark,
+      OneShot.source(spark, transcriptSchema, inputDir))
+    OneShot.toBatchDirs(extracted, deliveryDir, checkpointDir) { (batch, _) =>
+      batch
+        .map { e =>
+          val failures = ((e.turn_idx % 5) + 5) % 5
+          val (attempts, delivered, backoff) =
+            graft.core.Delivery.postbackOutcome(failures)
+          (e.conv_id, e.turn_idx, e.status, attempts, delivered, backoff,
+            "X-open-ocr-reply-type: json")
+        }
+        .toDF("conv_id", "turn_idx", "status", "attempts", "delivered",
+          "backoff_s", "reply_header")
+    }
   }
-
-  /** Watermarked per-minute turn counts by role — the event-time metrics
-    * window the reference lacks (its histograms are processing-time only,
-    * `prometheus_metrics.go:25-32`).
-    */
-  def windowedCounts(transcriptStream: DataFrame): DataFrame =
-    transcriptStream
-      .withWatermark("ts", "10 minutes")
-      .groupBy(window(col("ts"), "1 minute"), col("role"))
-      .agg(count(lit(1)).as("n_turns"))
 
   final case class TurnLite(conv_id: String, turn_idx: Int, role: String, text: String)
   final case class ConvState(turns: List[(Int, String, String)])
@@ -147,45 +118,29 @@ object StreamPipeline {
       }
   }
 
-  /** Driver runner for [[renderWithState]]: stages the raw turns as ONE
-    * file, drains an AvailableNow stream through the stateful render,
-    * writes each batch's emissions to a batchId-scoped directory
-    * (idempotent under checkpoint replay), and returns the LAST emission
+  /** Driver runner for [[renderWithState]]: drains the raw turns (staged
+    * once per process as ONE file, [[graft.spark.Staged.rawTurns]]) through
+    * the stateful render into batchId-scoped directories
+    * ([[OneShot.toBatchDirs]], update mode), and returns the LAST emission
     * per conversation.
     */
   def runStreamingRender(spark: SparkSession, sfDir: String,
       maxFilesPerTrigger: Option[Int] = None,
       stagedIn: Option[String] = None): DataFrame = {
     val base = graft.spark.TmpDirs.create("graft_srender_")
-    val out = s"$base/out"; val cp = s"$base/cp"
-    val in = stagedIn.getOrElse {
-      val p = s"$base/in"
-      graft.spark.Transcripts.rawTurns(spark, sfDir)
-        .coalesce(1).write.parquet(p)
-      p
-    }
+    val out = s"$base/out"
+    val in = stagedIn.getOrElse(graft.spark.Staged.rawTurns(spark, sfDir))
     val schema = StructType(Seq(
       StructField("conv_id", StringType), StructField("turn_idx", IntegerType),
       StructField("role", StringType), StructField("text", StringType)))
-    val reader = spark.readStream.schema(schema)
-    val q = maxFilesPerTrigger
-      .fold(reader)(n => reader.option("maxFilesPerTrigger", n.toString))
-      .parquet(in)
-      .transform(s => renderWithState(spark, s).toDF())
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite").parquet(s"$out/b$batchId")
-        ()
-      }
-      .outputMode("update")
-      .option("checkpointLocation", cp)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    val rendered = renderWithState(spark,
+      OneShot.source(spark, schema, in, maxFilesPerTrigger)).toDF()
+    OneShot.toBatchDirs(rendered, out, s"$base/cp", "update") { (batch, batchId) =>
+      batch.withColumn("batch_id", lit(batchId))
+    }
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("conv_id").orderBy(col("batch_id").desc)
-    spark.read.option("recursiveFileLookup", "true").parquet(out)
+    OneShot.readBatchDirs(spark, out)
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1)
       .drop("rn", "batch_id")

@@ -116,7 +116,7 @@ class KernelSpec extends AnyFunSuite with BeforeAndAfterAll {
       StructField("ms", ArrayType(StructType(Seq(
         StructField("doc_id", LongType), StructField("simhash", IntegerType)))))))
     val rows = texts.zipWithIndex.map { case (t, i) => Row(i, t, grams(t), block(t)) }
-    val dir = java.nio.file.Files.createTempDirectory("graft_kernels_").toString + "/in"
+    val dir = graft.spark.TmpDirs.create("graft_kernels_") + "/in"
     spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
       .write.parquet(dir)
     spark.read.parquet(dir)
@@ -226,7 +226,7 @@ class KernelSpec extends AnyFunSuite with BeforeAndAfterAll {
       (text, i) <- Seq(null, "", "héllo wörld", s"ab${pua}cd x$pua").zipWithIndex
       (tool, j) <- tools.zipWithIndex
     } yield (if (i + j == 1) null else s"c$i", i * tools.size + j, text, tool)
-    val dir = java.nio.file.Files.createTempDirectory("graft_extract_").toString + "/in"
+    val dir = graft.spark.TmpDirs.create("graft_extract_") + "/in"
     import spark.implicits._
     rows.toDF("conv_id", "turn_idx", "text", "tool").coalesce(1).write.parquet(dir)
     spark.read.parquet(dir).createOrReplaceTempView("extract_in")
