@@ -570,8 +570,8 @@ object Bench {
            |read ~half on unchanged code; the graded pair stays on the small
            |corpus so rounds are cheap enough to sample many weather
            |windows). Timed job: parquet scan -> salted repartition
-           |(full-width xxhash64 key, one shuffle) -> fused
-           |parse/chain/engine typed mapPartitions -> agg forcing full text
+           |(full-width xxhash64 key, one shuffle) -> one
+           |parse/chain/engine kernel call per turn -> agg forcing full text
            |materialization.
            |
            |One PERSISTENT pinned child JVM per ladder level (taskset -c

@@ -1,9 +1,9 @@
 package graft
 
-import graft.core.{Delivery, Engines, Extractor, Multipart, Payload, Pdf, Preprocessors}
+import graft.core.{Delivery, Engines, Multipart, Payload, Pdf, Preprocessors}
 import graft.functions.GraftFunctions
-import graft.spark.{ExtractPipeline, Transcripts}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.spark.{ExtractPipeline, ExtractTextKernel, Transcripts}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
@@ -21,7 +21,7 @@ object SparkEntry {
     e2eExtract(spark, "/root/testdata/sf0.001")
 
   /** Full pipeline: documents -> transcript derivation -> salted repartition
-    * -> fused parse/chain/engine map -> stable order.
+    * -> one parse/chain/engine kernel call per turn -> stable order.
     */
   private def e2eExtract(spark: SparkSession, sfDir: String): DataFrame = {
     val transcripts = Transcripts.fromDocuments(spark, sfDir)
@@ -29,6 +29,12 @@ object SparkEntry {
       .extract(spark, transcripts)
       .select("conv_id", "turn_idx", "text", "status", "engine")
       .orderBy("conv_id", "turn_idx")
+  }
+
+  /** One extraction per document under conv_id "c", turn_idx = doc_id. */
+  private def kernelRows(docs: DataFrame, text: Column, tool: Column): DataFrame = {
+    val r = ExtractTextKernel(lit("c"), col("doc_id").cast("int"), text, tool, Engines.CoreConfig())
+    docs.select(col("doc_id"), r("text").as("text"), r("status").as("status")).orderBy("doc_id")
   }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = baseQueries ++
@@ -207,17 +213,8 @@ object SparkEntry {
         .orderBy("doc_id")
     }),
 
-    "o10_mock_engine" -> ((s, dir) => {
-      import s.implicits._
-      Transcripts.documents(s, dir)
-        .select(col("doc_id")).as[Long]
-        .map { id =>
-          val r = Extractor.extractTurn("c", id.toInt, "ignored", """{"engine":"mock"}""")
-          (id, r.text, r.status)
-        }
-        .toDF("doc_id", "text", "status")
-        .orderBy("doc_id")
-    }),
+    "o10_mock_engine" -> ((s, dir) =>
+      kernelRows(Transcripts.documents(s, dir), lit("ignored"), lit("""{"engine":"mock"}"""))),
 
     "o14_priority" -> ((s, dir) => {
       Transcripts.documents(s, dir)
@@ -417,9 +414,9 @@ object SparkEntry {
         .select(col("doc_id"), col("text")).as[(Long, String)]
         .map { case (id, text) =>
           val payload = (id % 3) match {
-            case 0 => Payload.bytes("II* " + text)
-            case 1 => Payload.bytes("MM *" + text)
-            case _ => Payload.bytes("II* ") // 4 bytes: both converters fail
+            case 0 => Payload.bytes("II*\u0000" + text)
+            case 1 => Payload.bytes("MM\u0000*" + text)
+            case _ => Payload.bytes("II*\u0000") // 4 bytes: both converters fail
           }
           Engines.tiffToPdfTrace(payload, primary = "convert") match {
             case Left(e) => (id, "none", false, e)
@@ -524,9 +521,10 @@ object SparkEntry {
         .orderBy("doc_id")
     }),
 
-    // SQL surface: the kernel as a registered native Catalyst expression
-    // (ExtractTurnField, codegen'd via doGenCode — no UDF). Same per-turn
-    // semantics as the typed pipeline, driven entirely from SQL.
+    // SQL surface: the per-turn kernel through its registered SQL functions
+    // (two field reads of one ExtractTextKernel call, codegen'd as a static
+    // call — no UDF). Same per-turn semantics as the pipeline, driven
+    // entirely from SQL.
     "sql_extract_text" -> ((s, dir) => {
       graft.spark.GraftExtensions.register(s)
       Transcripts.fromDocuments(s, dir).createOrReplaceTempView("transcripts_v")
@@ -541,22 +539,11 @@ object SparkEntry {
     // O24: inplace short-circuit — inplace_decode=true runs the engine
     // directly and the preprocessor chain (routed by the RPC client) never
     // executes (ocr_http_handler.go:109-146).
-    "o24_inplace" -> ((s, dir) => {
-      import s.implicits._
-      Transcripts.documents(s, dir)
-        .select(col("doc_id"), col("text")).as[(Long, String)]
-        .map { case (id, text) =>
-          val inplace = id % 2 == 1
-          val tool = "{\"engine\":\"tesseract\"," +
-            "\"preprocessors\":[\"stroke-width-transform\"]," +
-            "\"preprocessor-args\":{\"stroke-width-transform\":\"0\"}," +
-            s"""\"inplace_decode\":$inplace}"""
-          val r = Extractor.extractTurn("c", id.toInt, text, tool)
-          (id, r.text, r.status)
-        }
-        .toDF("doc_id", "text", "status")
-        .orderBy("doc_id")
-    })
+    "o24_inplace" -> ((s, dir) =>
+      kernelRows(Transcripts.documents(s, dir), col("text"), concat(
+        lit("""{"engine":"tesseract","preprocessors":["stroke-width-transform"],""" +
+          """"preprocessor-args":{"stroke-width-transform":"0"},"inplace_decode":"""),
+        when(col("doc_id") % 2 === 1, "true").otherwise("false"), lit("}"))))
   )
 
   def oracleSql: Map[String, String] =

@@ -531,9 +531,8 @@ object TrainingQueries {
     // injected borrowers quote an 11-token run from an existing doc
     "dedup_window_incremental" -> ((s, dir) => {
       val run = Dedup.windowTokens + Dedup.windowStride - 1
-      val base = Transcripts.documents(s, dir).select(col("doc_id"), col("text"))
-      val existing = base.filter(pmod(col("doc_id"), lit(3)) =!= 0)
-      val incoming = base.filter(pmod(col("doc_id"), lit(3)) === 0)
+      val Dedup.IngestSplit(existing, fresh) = Dedup.ingestSplit(Transcripts.documents(s, dir))
+      val incoming = fresh
         .unionAll(existing.filter(pmod(col("doc_id"), lit(5)) === 0)
           .select((col("doc_id") + 7000000L).as("doc_id"),
             concat(
@@ -549,9 +548,8 @@ object TrainingQueries {
     // drop the blocks the existing corpus already holds and reassemble;
     // injected borrowers quote an existing doc's lede + novel tail
     "dedup_span_incremental" -> ((s, dir) => {
-      val base = Transcripts.documents(s, dir).select(col("doc_id"), col("text"))
-      val existing = base.filter(pmod(col("doc_id"), lit(3)) =!= 0)
-      val incoming = base.filter(pmod(col("doc_id"), lit(3)) === 0)
+      val Dedup.IngestSplit(existing, fresh) = Dedup.ingestSplit(Transcripts.documents(s, dir))
+      val incoming = fresh
         .unionAll(existing.filter(pmod(col("doc_id"), lit(5)) === 0)
           .select((col("doc_id") + 4000000L).as("doc_id"),
             concat(
@@ -596,12 +594,8 @@ object TrainingQueries {
     // the existing corpus by content hash OR any minhash band bucket —
     // three equi-joins against the corpus's materialized artifacts
     "dedup_incremental" -> ((s, dir) => {
-      val base = Transcripts.documents(s, dir).select(col("doc_id"), col("text"))
-      val existing = base.filter(pmod(col("doc_id"), lit(3)) =!= 0)
-      val incoming = base.filter(pmod(col("doc_id"), lit(3)) === 0)
-        .unionAll(existing.filter(pmod(col("doc_id"), lit(5)) === 0)
-          .select((col("doc_id") + 2000000L).as("doc_id"), col("text")))
-      Dedup.incrementalDedup(existing, incoming)
+      val docs = Dedup.ingestSplit(Transcripts.documents(s, dir))
+      Dedup.incrementalDedup(docs.existing, docs.incoming)
         .select(col("doc_id"), length(col("text")).cast("int").as("n_chars"))
         .orderBy("doc_id")
     }),
@@ -610,12 +604,8 @@ object TrainingQueries {
     // dedup_incremental by construction (no false negatives; candidates
     // exact-confirmed) — most incoming docs bypass every join
     "dedup_incremental_bloom" -> ((s, dir) => {
-      val base = Transcripts.documents(s, dir).select(col("doc_id"), col("text"))
-      val existing = base.filter(pmod(col("doc_id"), lit(3)) =!= 0)
-      val incoming = base.filter(pmod(col("doc_id"), lit(3)) === 0)
-        .unionAll(existing.filter(pmod(col("doc_id"), lit(5)) === 0)
-          .select((col("doc_id") + 2000000L).as("doc_id"), col("text")))
-      Dedup.incrementalDedupBloom(Dedup.corpusArtifacts(existing), incoming)
+      val docs = Dedup.ingestSplit(Transcripts.documents(s, dir))
+      Dedup.incrementalDedupBloom(Dedup.corpusArtifacts(docs.existing), docs.incoming)
         .select(col("doc_id"), length(col("text")).cast("int").as("n_chars"))
         .orderBy("doc_id")
     }),

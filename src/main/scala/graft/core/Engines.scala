@@ -8,7 +8,7 @@ import graft.model.JVal._
   * `sandwich_engine.go`). Pure JVM functions: every reference subprocess call
   * (tesseract / pdfsandwich / gs / pdftk / pdftotext) becomes a deterministic
   * in-process transform, keeping the per-turn path inside one
-  * whole-stage-friendly typed map.
+  * whole-stage-codegen kernel call.
   */
 object Engines {
 

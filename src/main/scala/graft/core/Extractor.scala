@@ -7,8 +7,8 @@ import graft.model._
   * wrapping. This is the whole reference request lifecycle
   * (`/root/reference/ocr_rpc_client.go:43-195` +
   * `/root/reference/ocr_rpc_worker.go:165-247`) collapsed into one pure
-  * function, so Spark can run it inside a single narrow `mapPartitions`
-  * stage with no per-hop shuffle.
+  * function, so Spark can call it from one narrow whole-stage-codegen
+  * projection (`graft.spark.ExtractTextKernel`) with no per-hop shuffle.
   */
 object Extractor {
 

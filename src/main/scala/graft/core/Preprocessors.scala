@@ -10,7 +10,7 @@ import graft.model.{ExtractRequest, JVal}
   * element as the next routing key.
   *
   * In the reference every hop crosses the broker; here the whole chain is
-  * fused into the single typed map stage (no per-hop shuffle — the hops exist
+  * fused into the single per-turn kernel call (no per-hop shuffle — the hops exist
   * only for horizontal scaling, which Spark partitions already give us).
   */
 object Preprocessors {

@@ -91,6 +91,23 @@ object Dedup {
         .select((col("doc_id") + 1000000L).as("doc_id"), col("text")))
   }
 
+  /** The existing/incoming split of the incremental-dedup queries, one
+    * definition for the batch queries and their streaming twins: `existing`
+    * is every (doc_id, text) with `doc_id % 3 != 0`, `fresh` the rest, and
+    * `incoming` is `fresh` plus every 5th existing doc re-ingested under
+    * `doc_id + 2000000` (guaranteed duplicates).
+    */
+  final case class IngestSplit(existing: DataFrame, fresh: DataFrame) {
+    def incoming: DataFrame = fresh.unionAll(existing.filter(pmod(col("doc_id"), lit(5)) === 0)
+      .select((col("doc_id") + 2000000L).as("doc_id"), col("text")))
+  }
+
+  def ingestSplit(doc: DataFrame): IngestSplit = {
+    val base = doc.select(col("doc_id"), col("text"))
+    IngestSplit(base.filter(pmod(col("doc_id"), lit(3)) =!= 0),
+      base.filter(pmod(col("doc_id"), lit(3)) === 0))
+  }
+
   /** Exact dedup: group by content hash, keep the smallest id. */
   def exact(doc: DataFrame): DataFrame =
     withInjectedDups(doc)
@@ -648,9 +665,7 @@ object Dedup {
       spark: org.apache.spark.sql.SparkSession, sfDir: String): DataFrame = {
     val base = graft.spark.TmpDirs.create("graft_sincr_")
     val out = s"$base/out"
-    val existing = graft.spark.Transcripts.documents(spark, sfDir)
-      .select(col("doc_id"), col("text"))
-      .filter(pmod(col("doc_id"), lit(3)) =!= 0)
+    val existing = ingestSplit(graft.spark.Transcripts.documents(spark, sfDir)).existing
     val in = graft.spark.Staged.incomingDocs(spark, sfDir)
     OneShot.withShufflePartitions(spark, OneShot.stateShards) {
       streamingIncrementalQuery(spark, existing, in, out, s"$base/cp")
@@ -1327,9 +1342,7 @@ object Dedup {
       spark: org.apache.spark.sql.SparkSession, sfDir: String): DataFrame = {
     val base = graft.spark.TmpDirs.create("graft_sspan_")
     val out = s"$base/out"
-    val existing = graft.spark.Transcripts.documents(spark, sfDir)
-      .select(col("doc_id"), col("text"))
-      .filter(pmod(col("doc_id"), lit(3)) =!= 0)
+    val existing = ingestSplit(graft.spark.Transcripts.documents(spark, sfDir)).existing
     val art = spanArtifacts(existing)
     val in = graft.spark.Staged.incomingDocs(spark, sfDir)
     spanStreamQuery(spark, art, in, out, s"$base/cp")

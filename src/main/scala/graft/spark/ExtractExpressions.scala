@@ -1,34 +1,61 @@
 package graft.spark
 
-import graft.core.Extractor
-import org.apache.spark.sql.{GraftColumnBridge, SparkSessionExtensions}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
-import org.apache.spark.sql.types.{IntegerType, StringType}
+import graft.core.{Engines, Extractor}
+import org.apache.spark.sql.{Column, Encoders, GraftColumnBridge, SparkSessionExtensions}
+import org.apache.spark.sql.catalyst.{FunctionIdentifier, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, GenericInternalRow,
+  GetStructField, Literal}
+import org.apache.spark.sql.catalyst.expressions.objects.AssertNotNull
+import org.apache.spark.sql.types.{IntegerType, ObjectType, StringType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** The per-turn extraction kernel as two SQL scalar functions,
-  * `extract_text` and `extract_status(conv_id, turn_idx, text, tool)`,
-  * declared as [[GraftColumnBridge.StaticKernel]]s like every other native
-  * kernel: whole-stage codegen emits a direct static call into this object,
-  * NULL in any argument gives NULL out, and the input types are checked (with
-  * implicit casts) at analysis.
+/** The per-turn extraction kernel, declared once: `turn(conv_id, turn_idx,
+  * text, tool, config)` runs [[Extractor.extractTurn]] and returns one
+  * [[ExtractPipeline.Extracted]] row as a struct (`conv_id`/`turn_idx`
+  * echoed, so the output's nullability is the encoder's whatever the
+  * input's; char counts are UTF-16 lengths). NULL `conv_id`, `text` or
+  * `tool` reach the kernel as they are (`propagateNull = false`); a NULL
+  * `turn_idx` is rejected, as the encoder rejects it. `ExtractPipeline.extract`
+  * expands the struct; SQL `extract_text`/`extract_status(conv_id, turn_idx,
+  * text, tool)` read one field each of the same expression, so a query using
+  * both makes one subexpression-eliminated call per row.
   */
 object ExtractTextKernel {
-  private def run(convId: UTF8String, turnIdx: Int, text: UTF8String, tool: UTF8String) =
-    Extractor.extractTurn(convId.toString, turnIdx, text.toString, tool.toString)
+  val resultType: StructType = Encoders.product[ExtractPipeline.Extracted].schema
 
-  def evalText(convId: UTF8String, turnIdx: Int, text: UTF8String, tool: UTF8String): UTF8String =
-    UTF8String.fromString(run(convId, turnIdx, text, tool).text)
+  private def str(s: UTF8String) = if (s == null) null else s.toString
+  private def len(s: String) = if (s == null) 0 else s.length
 
-  def evalStatus(convId: UTF8String, turnIdx: Int, text: UTF8String, tool: UTF8String): UTF8String =
-    UTF8String.fromString(run(convId, turnIdx, text, tool).status)
+  def turn(convId: UTF8String, turnIdx: Int, text: UTF8String, tool: UTF8String,
+      config: Engines.CoreConfig): InternalRow = {
+    val (in, t) = (str(text), str(tool))
+    val r = Extractor.extractTurn(str(convId), turnIdx, in, t, config)
+    new GenericInternalRow(Array[Any](convId, turnIdx, UTF8String.fromString(r.text),
+      UTF8String.fromString(r.status), UTF8String.fromString(r.engine),
+      len(in) + len(t), len(r.text)))
+  }
 
-  private val inputTypes = Seq(StringType, IntegerType, StringType, StringType)
-  private[graft] val textKernel =
-    GraftColumnBridge.StaticKernel("extract_text", this, "evalText", StringType, inputTypes)
-  private[graft] val statusKernel =
-    GraftColumnBridge.StaticKernel("extract_status", this, "evalStatus", StringType, inputTypes)
+  private val configType = ObjectType(classOf[Engines.CoreConfig])
+  private val kernel = GraftColumnBridge.StaticKernel("extract_turn", this, "turn", resultType,
+    Seq(StringType, IntegerType, StringType, StringType, configType), propagateNull = false)
+
+  /** `config` is a literal argument: a case class, so equal builds are `semanticEquals`. */
+  private def expr(args: Seq[Expression], config: Engines.CoreConfig): Expression = {
+    require(args.length == 4, s"the extraction kernel takes 4 arguments, got ${args.length}")
+    kernel.expr(Seq(args(0), AssertNotNull(args(1)), args(2), args(3),
+      Literal(config, configType)))
+  }
+
+  def apply(convId: Column, turnIdx: Column, text: Column, tool: Column,
+      config: Engines.CoreConfig): Column = GraftColumnBridge.column(
+    expr(Seq(convId, turnIdx, text, tool).map(GraftColumnBridge.expression), config))
+
+  /** One field each, under the default config. */
+  private[graft] val sqlFunctions =
+    Seq("extract_text" -> "text", "extract_status" -> "status").map { case (name, field) =>
+      kernel.copy(name = name).sqlFunction(args =>
+        GetStructField(expr(args, Engines.CoreConfig()), resultType.fieldIndex(field)))
+    }
 }
 
 /** SQL registration. Two deployment paths:
@@ -60,9 +87,8 @@ object GraftExtensions {
     * column builder, so its width is an int literal with the same
     * positive-width guard.
     */
-  val functions = Seq(vecDotFn) ++
-    Seq(ExtractTextKernel.textKernel, ExtractTextKernel.statusKernel, shingles3Kernel,
-      minHash16Kernel, rollingHashKernel, simHash16Kernel,
+  val functions = Seq(vecDotFn) ++ ExtractTextKernel.sqlFunctions ++
+    Seq(shingles3Kernel, minHash16Kernel, rollingHashKernel, simHash16Kernel,
       urlCanonicalKernel).map(_.sqlFunction()) :+
     spanBlocksKernel.sqlFunction {
       case Seq(text, Literal(w: Int, IntegerType)) =>

@@ -6,10 +6,10 @@ import org.apache.spark.sql.functions._
 
 /** The Spark-native extraction pipeline — the whole reference request
   * lifecycle (`/root/reference/ocr_rpc_client.go` + `ocr_rpc_worker.go` +
-  * the preprocessor workers) as ONE fused typed stage:
+  * the preprocessor workers) as ONE whole-stage-codegen projection:
   *
   *   scan -> salted repartition (replaces the RabbitMQ work queue, O16) ->
-  *   mapPartitions(parse + chain + engine, O5-O15/O17) -> write (O18).
+  *   [[ExtractTextKernel]] (parse + chain + engine, O5-O15/O17) -> write (O18).
   *
   * Scale design notes (100 TB / 10^12 turns):
   *   - The per-turn path is a NARROW map: exactly one shuffle (the salted
@@ -24,11 +24,6 @@ import org.apache.spark.sql.functions._
   *     result join needed.
   */
 object ExtractPipeline {
-
-  /** Input projection of the transcript table (only the columns the kernel
-    * needs — lets Parquet prune `role`/`ts`).
-    */
-  final case class TurnLite(conv_id: String, turn_idx: Int, text: String, tool: String)
 
   /** Output row + per-row micro-metrics (O22 analog). */
   final case class Extracted(
@@ -71,7 +66,7 @@ object ExtractPipeline {
 
   /** Run the extraction over a transcript-shaped DataFrame: one salted
     * repartition on [[saltColumn]] (the reference's work queue, O16), then
-    * the fused per-turn kernel.
+    * one [[ExtractTextKernel]] call per turn (a NULL `turn_idx` raises).
     *
     * O14 with an actual SCHEDULING effect (the reference publishes each
     * message with a priority 0-9 onto an `x-max-priority` queue so
@@ -108,18 +103,10 @@ object ExtractPipeline {
         prepared.sortWithinPartitions(prio.desc)
       }
     ordered
-      .as[TurnLite]
-      .mapPartitions { rows =>
-        // one fused iterator: deserialize once, run chain+engine, serialize
-        // once (SURVEY.md §4 whole-stage note)
-        rows.map { t =>
-          val r = Extractor.extractTurn(t.conv_id, t.turn_idx, t.text, t.tool, config)
-          Extracted(
-            t.conv_id, t.turn_idx, r.text, r.status, r.engine,
-            (if (t.text == null) 0 else t.text.length) + (if (t.tool == null) 0 else t.tool.length),
-            if (r.text == null) 0 else r.text.length)
-        }
-      }
+      .select(ExtractTextKernel(col("conv_id"), col("turn_idx"), col("text"), col("tool"),
+        config).as("r"))
+      .select("r.*")
+      .as[Extracted]
   }
 
   /** O14's CROSS-JOB half — the reference's `x-max-priority` queue also

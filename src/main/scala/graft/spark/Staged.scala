@@ -65,19 +65,12 @@ object Staged {
         .withColumn("ts", (lit(1767225600L) + col("doc_id")).cast("timestamp"))
         .coalesce(1))
 
-  /** The INCOMING side of the incremental-dedup queries (docs not in the
-    * existing corpus plus re-ingested copies of every 5th existing doc
-    * under shifted ids — the batch `dedup_incremental` construction
-    * exactly), staged once per sfDir. ONE file (single-micro-batch
+  /** The INCOMING side of the incremental-dedup queries
+    * ([[graft.operators.Dedup.IngestSplit.incoming]], the batch
+    * `dedup_incremental` input exactly), staged once per sfDir. ONE file (single-micro-batch
     * guarantee); the streaming spec stages its own multi-file variant.
     */
   def incomingDocs(spark: SparkSession, sfDir: String): String =
-    stage(s"incoming:$sfDir", "graft_staged_in_") {
-      val base = Transcripts.documents(spark, sfDir).select(col("doc_id"), col("text"))
-      val existing = base.filter(pmod(col("doc_id"), lit(3)) =!= 0)
-      base.filter(pmod(col("doc_id"), lit(3)) === 0)
-        .unionAll(existing.filter(pmod(col("doc_id"), lit(5)) === 0)
-          .select((col("doc_id") + 2000000L).as("doc_id"), col("text")))
-        .coalesce(1)
-    }
+    stage(s"incoming:$sfDir", "graft_staged_in_")(
+      graft.operators.Dedup.ingestSplit(Transcripts.documents(spark, sfDir)).incoming.coalesce(1))
 }

@@ -7,7 +7,7 @@ import org.apache.spark.sql.types._
 
 /** Structured-Streaming form of the extraction pipeline. The reference IS a
   * streaming system (unbounded RabbitMQ queue, prefetch flow control,
-  * at-least-once ack — SURVEY.md §2.10); this is the same fused typed stage
+  * at-least-once ack — SURVEY.md §2.10); this is the same per-turn kernel
   * dropped into a one-shot stream ([[OneShot]]) with checkpointing
   * standing in for the ack/requeue machinery. Per-record
   * processing is stateless, exactly like the reference; watermarked windowed

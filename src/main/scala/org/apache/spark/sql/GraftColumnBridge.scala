@@ -17,12 +17,13 @@ object GraftColumnBridge {
 
   /** One static kernel method, declared once: `kernel`'s `method` (a Scala
     * `object`'s method, reached through its static forwarder), its result
-    * type, its argument types and whether a non-NULL input can still give a
-    * NULL result. Built as Spark's own `StaticInvoke`: whole-stage codegen
-    * emits a direct call `graft.spark.XKernel.method(...)`, the interpreted
-    * path finds the same method by reflection, NULL in any argument gives
-    * NULL out, and `inputTypes` type-checks (with implicit casts) at
-    * analysis. Parameters a caller fixes (widths, word sets, weights) are
+    * type, its argument types, whether a non-NULL input can still give a
+    * NULL result and whether NULL in any argument gives NULL out
+    * (`propagateNull`; when false the kernel is called with the NULLs).
+    * Built as Spark's own `StaticInvoke`: whole-stage codegen emits a direct
+    * call `graft.spark.XKernel.method(...)`, the interpreted path finds the
+    * same method by reflection, and `inputTypes` type-checks (with implicit
+    * casts) at analysis. Parameters a caller fixes (widths, word sets, weights) are
     * literal arguments; they must compare by value so that two equal builds
     * are `semanticEquals` and share one subexpression-eliminated call.
     */
@@ -32,13 +33,14 @@ object GraftColumnBridge {
       method: String,
       dataType: DataType,
       inputTypes: Seq[DataType],
-      returnNullable: Boolean = false) {
+      returnNullable: Boolean = false,
+      propagateNull: Boolean = true) {
 
     def expr(args: Seq[Expression]): Expression = {
       require(args.length == inputTypes.length,
         s"$name takes ${inputTypes.length} argument(s), got ${args.length}")
       StaticInvoke(kernel.getClass, dataType, method, args, inputTypes,
-        returnNullable = returnNullable)
+        propagateNull = propagateNull, returnNullable = returnNullable)
     }
 
     def apply(args: Column*): Column = column(expr(args.map(expression)))

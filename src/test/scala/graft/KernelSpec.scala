@@ -230,13 +230,11 @@ class KernelSpec extends AnyFunSuite with BeforeAndAfterAll {
     import spark.implicits._
     rows.toDF("conv_id", "turn_idx", "text", "tool").coalesce(1).write.parquet(dir)
     spark.read.parquet(dir).createOrReplaceTempView("extract_in")
-    // NULL in any argument gives NULL out; otherwise the kernel itself
+    // NULL conv_id, text or tool go into the kernel as they are (the
+    // pipeline's rule): every row is the kernel's own result
     val want = rows.map { case (c, i, text, tool) =>
-      if (c == null || text == null || tool == null) (i, null, null)
-      else {
-        val r = graft.core.Extractor.extractTurn(c, i, text, tool)
-        (i, r.text, r.status)
-      }
+      val r = graft.core.Extractor.extractTurn(c, i, text, tool)
+      (i, r.text, r.status)
     }
     assert(want.exists(_._3 == "error") && want.exists(_._3 == "done") &&
       want.exists(_._3 == ""), "inputs cover error, done and mock status")
@@ -248,9 +246,13 @@ class KernelSpec extends AnyFunSuite with BeforeAndAfterAll {
     def run() = spark.sql(sql).collect().toSeq
       .map(r => (r.getInt(0), r.getString(1), r.getString(2))).sortBy(_._1)
     val codegen = plan()
-    for (m <- Seq("evalText(", "evalStatus("))
-      assert(codegen.linesIterator.exists(l => l.contains("*(") &&
-        l.contains(s"graft.spark.ExtractTextKernel.$m")), s"no codegen stage around $m in:\n$codegen")
+    assert(codegen.linesIterator.exists(l => l.contains("*(") &&
+      l.contains("graft.spark.ExtractTextKernel.turn(")), s"no codegen stage around the kernel in:\n$codegen")
+    // both fields read one subexpression-eliminated kernel call
+    val generated = org.apache.spark.sql.execution.debug
+      .codegenStringSeq(spark.sql(sql).queryExecution.executedPlan).map(_._2).mkString("\n")
+    assert("graft\\.spark\\.ExtractTextKernel\\.turn\\(".r.findAllMatchIn(generated).size == 1,
+      generated)
     assert(run() == want, "codegen")
     val interpreted = withConf(
         "spark.sql.codegen.wholeStage" -> "false",

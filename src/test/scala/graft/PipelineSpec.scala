@@ -118,6 +118,51 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert("\\blength\\(".r.findFirstIn(exchange.head).isEmpty, exchange.head)
   }
 
+  test("plan: extract runs the kernel inside a codegen stage, one call per row, no object round trip") {
+    val ds = ExtractPipeline.extract(spark, Transcripts.fromDocuments(spark, sfDir))
+    ds.collect()
+    // the final (AQE) plan, after the action
+    val plan = ds.queryExecution.executedPlan
+    val text = plan.toString
+    for (node <- Seq("DeserializeToObject", "MapPartitions", "SerializeFromObject"))
+      assert(!text.contains(node), s"$node in:\n$text")
+    assert(text.linesIterator.exists(l => l.contains("*(") &&
+      l.contains("graft.spark.ExtractTextKernel.turn(")), s"no codegen stage around the kernel in:\n$text")
+    val generated = org.apache.spark.sql.execution.debug.codegenStringSeq(plan)
+      .map(_._2).mkString("\n")
+    assert("graft\\.spark\\.ExtractTextKernel\\.turn\\(".r.findAllMatchIn(generated).size == 1,
+      generated)
+  }
+
+  test("extract: the schema is the Extracted encoder's, nullability included") {
+    val want = org.apache.spark.sql.Encoders.product[ExtractPipeline.Extracted].schema
+    // a non-nullable input does not leak its nullability into the output
+    val nonNull = spark.range(3).select(lit("c").as("conv_id"), col("id").as("turn_idx"),
+      lit("t").as("text"), lit("{}").as("tool"))
+    for (t <- Seq(Transcripts.fromDocuments(spark, sfDir), nonNull))
+      assert(ExtractPipeline.extract(spark, t).schema == want)
+  }
+
+  test("extract: a NULL turn_idx raises in codegen and interpreted mode") {
+    import spark.implicits._
+    val df = Seq(("c", Option.empty[Int], "text", """{"engine":"mock"}"""))
+      .toDF("conv_id", "turn_idx", "text", "tool")
+    def run() = intercept[Exception](ExtractPipeline.extract(spark, df).collect())
+    def check(e: Throwable) = assert(
+      Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+        .exists(t => String.valueOf(t.getMessage).toLowerCase.contains("non-nullable field")), e)
+    check(run())
+    val keys = Seq("spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+    val saved = keys.map { case (k, _) => k -> spark.conf.getOption(k) }
+    keys.foreach { case (k, v) => spark.conf.set(k, v) }
+    try check(run())
+    finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   test("tmpdirs: created directories are registered and deleted recursively") {
     val dir = graft.spark.TmpDirs.create("graft_tmpdirs_spec_")
     val nested = java.nio.file.Paths.get(dir, "a", "b")
@@ -2151,6 +2196,41 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       .select(size(graft.spark.HashFunctions.winnowFps(col("text"), w, s)).as("n"))
       .collect().map(_.getInt(0)).toSeq
     assert(short == Seq(0, 1))
+  }
+
+  test("lang_predict / token_set_count / classifier_score: native == HOF forms on arbitrary text") {
+    import graft.operators.TextAnalysis
+    import org.scalacheck.Gen
+    // a fixed-seed batch: NULL, empty, multi-byte, PUA and whitespace runs,
+    // mixed with stopwords and blocked terms so every count and score moves
+    val words = TextAnalysis.langStopwords.flatMap(_._2) ++ TextAnalysis.blockedTerms
+    val piece = Gen.frequency(
+      4 -> Gen.alphaNumChar.map(_.toString),
+      4 -> Gen.oneOf(words),
+      3 -> Gen.oneOf(" ", "  ", "   ", "\t", "\n", " \t ", "\u00a0", "\u3000"),
+      2 -> Gen.oneOf("é", "ß", "中", "ñ", "\ud83d\ude00"),
+      1 -> Gen.oneOf(TextAnalysis.bpeSymbol(1), "\ue000", "\uf8ff"))
+    val textGen = Gen.frequency(1 -> Gen.const(null: String), 1 -> Gen.const(""),
+      1 -> Gen.const("   "), 12 -> Gen.listOf(piece).map(_.mkString))
+    val texts = Gen.listOfN(400, textGen)
+      .pureApply(Gen.Parameters.default.withSize(40), org.scalacheck.rng.Seed(20261019L))
+    import spark.implicits._
+    val weights = (0 until TextAnalysis.classifierBuckets).map(TextAnalysis.classifierWeight(_).toLong)
+    // one job for the whole batch
+    val rows = texts.toDF("text").select(col("text"),
+      TextAnalysis.langPredicted.as("lang"), HofRefs.langPredictedHof.as("lang_hof"),
+      graft.spark.HashFunctions.tokenSetCount(col("text"), TextAnalysis.blockedTerms).as("tsc"),
+      HofRefs.blockedTermCountHof.as("tsc_hof"),
+      graft.spark.HashFunctions.classifierScore(col("text"), weights).cast("int").as("cs"),
+      HofRefs.classifierScoreExprHof.cast("int").as("cs_hof")).collect().toSeq
+    assert(rows.count(_.isNullAt(0)) > 0 && rows.map(_.getString(1)).distinct.size > 2 &&
+      rows.exists(r => !r.isNullAt(3) && r.getInt(3) > 0), "the batch covers NULL, languages, terms")
+    for ((native, twin) <- Seq(1 -> 2, 3 -> 4, 5 -> 6)) {
+      // NULL text: lang_predict's known difference (HofRefs), NULL == NULL otherwise
+      val diff = rows.filter(r => !r.isNullAt(0) || native != 1)
+        .filter(r => r.get(native) != r.get(twin))
+      assert(diff.isEmpty, s"${rows.head.schema(native).name}: ${diff.take(3)}")
+    }
   }
 
   test("token_set_count / classifier_score / text_char_pairs: native == HOF forms") {
