@@ -21,7 +21,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * both makes one subexpression-eliminated call per row.
   */
 object ExtractTextKernel {
-  val resultType: StructType = Encoders.product[ExtractPipeline.Extracted].schema
+  private val resultType: StructType = Encoders.product[ExtractPipeline.Extracted].schema
 
   private def str(s: UTF8String) = if (s == null) null else s.toString
   private def len(s: String) = if (s == null) 0 else s.length

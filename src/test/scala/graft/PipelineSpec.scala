@@ -2215,7 +2215,8 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val texts = Gen.listOfN(400, textGen)
       .pureApply(Gen.Parameters.default.withSize(40), org.scalacheck.rng.Seed(20261019L))
     import spark.implicits._
-    val weights = (0 until TextAnalysis.classifierBuckets).map(TextAnalysis.classifierWeight(_).toLong)
+    val weights =
+      (0 until TextAnalysis.classifierBuckets).map(TextAnalysis.classifierWeight(_).toLong)
     // one job for the whole batch
     val rows = texts.toDF("text").select(col("text"),
       TextAnalysis.langPredicted.as("lang"), HofRefs.langPredictedHof.as("lang_hof"),
