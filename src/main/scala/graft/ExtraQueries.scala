@@ -88,70 +88,36 @@ object ExtraQueries {
       .orderBy("status")
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "o16_salt_invariance" -> ((s, dir) => saltInvariance(s, dir)),
-    "o19_lineage" -> ((s, dir) => lineageRun(s, dir)),
-    "o19_lineage_table" -> ((s, dir) => lineageTableRun(s, dir)),
-    "streaming_extract" -> ((s, dir) => streamingExtract(s, dir)),
-
-    // event-time windowed agg under a 10-min watermark (Structured
-    // Streaming, append mode): the oracle encodes the append-mode emission
-    // contract window.end <= max(ts) - watermark.
-    "events_windowed_stream" -> ((s, dir) =>
-      graft.operators.Events.runWindowedStream(s, dir)
-        .orderBy("hour_start", "event_type")),
-
-    // analytic-window sessionization (30-min gap) over the events table
-    "events_sessionize" -> ((s, dir) =>
-      graft.operators.Events.sessionize(graft.operators.Events.events(s, dir))
-        .orderBy("user_id")),
-
-    // streaming exact dedup: dropDuplicatesWithinWatermark over a stream
-    // with injected duplicate events — survivors = distinct event_ids
-    "events_stream_dedup" -> ((s, dir) =>
-      graft.operators.Events.runStreamingDedup(s, dir)
-        .orderBy("event_type")),
-
-    // third sessionization form: Spark's NATIVE session_window (merging
-    // [ts, ts+gap) intervals; a new session starts when the exact-time gap
-    // is >= 30 min — boundary-exclusive, unlike the lag-based sessionize's
-    // second-truncated strict->). One shuffle on (user_id, merged window).
-    "events_session_window" -> ((s, dir) =>
-      graft.operators.Events.events(s, dir)
-        .groupBy(col("user_id"),
-          session_window(col("ts"), "30 minutes").as("w"))
-        .agg(count(lit(1)).as("n"))
-        .groupBy("user_id")
-        .agg(count(lit(1)).cast("long").as("n_sessions"),
-          sum(col("n")).cast("long").as("n_events"))
-        .orderBy("user_id"))
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "o16_salt_invariance" ->
+  def queries: Seq[Query] = Seq(
+    Query("o16_salt_invariance", (s, dir) => saltInvariance(s, dir),
       """SELECT CAST(count(*) AS BIGINT) AS n_total, CAST(0 AS BIGINT) AS n_mismatch
-        |FROM documents""".stripMargin,
+        |FROM documents""".stripMargin),
 
-    // o19_lineage: bucket membership depends on xxhash64 (Spark-internal), so
-    // the per-bucket split has no SQL twin — but the totals do.
-    "o19_lineage" ->
+    Query("o19_lineage", (s, dir) => lineageRun(s, dir),
+      // o19_lineage: bucket membership depends on xxhash64 (Spark-internal), so
+      // the per-bucket split has no SQL twin — but the totals do.
       """SELECT 'done' AS status, CAST(8 AS BIGINT) AS n_buckets,
         |  CAST(count(*) AS BIGINT) AS n_rows
-        |FROM documents""".stripMargin,
+        |FROM documents""".stripMargin),
 
-    "o19_lineage_table" ->
+    Query("o19_lineage_table", (s, dir) => lineageTableRun(s, dir),
       """SELECT 'done' AS status, CAST(8 AS BIGINT) AS n_buckets,
         |  CAST(count(*) AS BIGINT) AS n_rows
-        |FROM documents""".stripMargin,
+        |FROM documents""".stripMargin),
 
-    "streaming_extract" ->
+    Query("streaming_extract", (s, dir) => streamingExtract(s, dir),
       """SELECT
         |  CASE WHEN doc_id % 10 IN (3, 9) THEN 'error'
         |       WHEN doc_id % 10 IN (4, 5) THEN '' ELSE 'done' END AS status,
         |  count(*) AS n_rows
-        |FROM documents GROUP BY 1 ORDER BY status""".stripMargin,
+        |FROM documents GROUP BY 1 ORDER BY status""".stripMargin),
 
-    "events_windowed_stream" ->
+    // event-time windowed agg under a 10-min watermark (Structured
+    // Streaming, append mode): the oracle encodes the append-mode emission
+    // contract window.end <= max(ts) - watermark.
+    Query("events_windowed_stream", (s, dir) =>
+        graft.operators.Events.runWindowedStream(s, dir)
+          .orderBy("hour_start", "event_type"),
       """WITH m AS (SELECT max(ts) AS mx FROM events),
         |w AS (
         |  SELECT date_trunc('hour', ts) AS h, event_type,
@@ -163,29 +129,12 @@ object ExtraQueries {
         |  CAST(value_cents AS BIGINT) AS value_cents
         |FROM w, m
         |WHERE h + INTERVAL 70 MINUTE <= m.mx
-        |ORDER BY hour_start, event_type""".stripMargin,
+        |ORDER BY hour_start, event_type""".stripMargin),
 
-    "events_stream_dedup" ->
-      """SELECT event_type,
-        |  CAST(count(DISTINCT event_id) AS BIGINT) AS n_events,
-        |  CAST(count(DISTINCT event_id) AS BIGINT) AS n_distinct
-        |FROM events GROUP BY 1 ORDER BY event_type""".stripMargin,
-
-    // exact-microsecond gap compare, boundary-exclusive (>= gap starts a
-    // new session) — session_window's merge rule as a lag scan
-    "events_session_window" ->
-      """WITH g AS (
-        |  SELECT user_id, event_id, ts,
-        |    lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts
-        |  FROM events)
-        |SELECT user_id,
-        |  CAST(sum(CASE WHEN prev_ts IS NULL
-        |                  OR epoch_us(ts) - epoch_us(prev_ts) >= 1800000000
-        |                THEN 1 ELSE 0 END) AS BIGINT) AS n_sessions,
-        |  CAST(count(*) AS BIGINT) AS n_events
-        |FROM g GROUP BY 1 ORDER BY user_id""".stripMargin,
-
-    "events_sessionize" ->
+    // analytic-window sessionization (30-min gap) over the events table
+    Query("events_sessionize", (s, dir) =>
+        graft.operators.Events.sessionize(graft.operators.Events.events(s, dir))
+          .orderBy("user_id"),
       """WITH g AS (
         |  SELECT user_id, event_id, ts,
         |    lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts
@@ -195,6 +144,42 @@ object ExtraQueries {
         |  CAST(sum(CASE WHEN prev_ts IS NULL
         |                  OR date_diff('second', prev_ts, ts) > 1800
         |                THEN 1 ELSE 0 END) AS BIGINT) AS n_sessions
-        |FROM g GROUP BY 1 ORDER BY user_id""".stripMargin
+        |FROM g GROUP BY 1 ORDER BY user_id""".stripMargin),
+
+    // streaming exact dedup: dropDuplicatesWithinWatermark over a stream
+    // with injected duplicate events — survivors = distinct event_ids
+    Query("events_stream_dedup", (s, dir) =>
+        graft.operators.Events.runStreamingDedup(s, dir)
+          .orderBy("event_type"),
+      """SELECT event_type,
+        |  CAST(count(DISTINCT event_id) AS BIGINT) AS n_events,
+        |  CAST(count(DISTINCT event_id) AS BIGINT) AS n_distinct
+        |FROM events GROUP BY 1 ORDER BY event_type""".stripMargin),
+
+    // third sessionization form: Spark's NATIVE session_window (merging
+    // [ts, ts+gap) intervals; a new session starts when the exact-time gap
+    // is >= 30 min — boundary-exclusive, unlike the lag-based sessionize's
+    // second-truncated strict->). One shuffle on (user_id, merged window).
+    Query("events_session_window", (s, dir) =>
+        graft.operators.Events.events(s, dir)
+          .groupBy(col("user_id"),
+            session_window(col("ts"), "30 minutes").as("w"))
+          .agg(count(lit(1)).as("n"))
+          .groupBy("user_id")
+          .agg(count(lit(1)).cast("long").as("n_sessions"),
+            sum(col("n")).cast("long").as("n_events"))
+          .orderBy("user_id"),
+      // exact-microsecond gap compare, boundary-exclusive (>= gap starts a
+      // new session) — session_window's merge rule as a lag scan
+      """WITH g AS (
+        |  SELECT user_id, event_id, ts,
+        |    lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts
+        |  FROM events)
+        |SELECT user_id,
+        |  CAST(sum(CASE WHEN prev_ts IS NULL
+        |                  OR epoch_us(ts) - epoch_us(prev_ts) >= 1800000000
+        |                THEN 1 ELSE 0 END) AS BIGINT) AS n_sessions,
+        |  CAST(count(*) AS BIGINT) AS n_events
+        |FROM g GROUP BY 1 ORDER BY user_id""".stripMargin)
   )
 }

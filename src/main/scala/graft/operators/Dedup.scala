@@ -429,27 +429,13 @@ object Dedup {
     keepFrom.join(exactDups.unionAll(nearDups).distinct(), Seq("doc_id"), "left_anti")
   }
 
-  /** Expected distinct-item sizing for [[corpusBloom]] (~1.2 MB of filter
-    * at the default 8 bits/item — the driver/broadcast footprint class of
-    * Spark's own runtime bloom joins; raise with corpus size, capped by
-    * `spark.sql.optimizer.runtime.bloomFilter.maxNumItems`).
+  /** Floor of [[incrementalDedupBloom]]'s filter sizing (~1.2 MB of
+    * filter at the default 8 bits/item — the driver/broadcast footprint
+    * class of Spark's own runtime bloom joins; larger corpora size up,
+    * capped by `spark.sql.optimizer.runtime.bloomFilter.maxNumItems`).
     */
   val bloomExpectedItems = 1000000L
 
-  /** ONE compact BLOOM fingerprint of the existing corpus's dedup
-    * artifacts — the content hashes AND all non-null band keys inserted
-    * into a single filter (their value spaces may collide bit patterns;
-    * harmless in a pre-filter whose positives are exact-confirmed) —
-    * built in ONE pass over the artifact table with Spark's own
-    * `BloomFilterAggregate` (the sketch the optimizer's runtime row-level
-    * filtering injects; applied here deliberately at the operator level).
-    * Values are guarded BEFORE hashing: `xxhash64(NULL)` is the seed
-    * constant, not NULL, so an unguarded short-doc band would poison the
-    * filter with one shared value. Size `expectedItems` to
-    * ~(1 + bands) × existing docs. Returned as a driver-held byte array;
-    * at 100 TB this is a maintained corpus artifact refreshed per ingest
-    * epoch, exactly like the hash/band tables it summarizes.
-    */
   /** The guarded insert/probe values over a [[hashAndBands]]-shaped row —
     * ONE definition shared by [[corpusBloom]] (insert side) and
     * [[bloomCandidate]] (probe side): the two must produce bit-identical
@@ -464,38 +450,24 @@ object Dedup {
         when(c.isNotNull, xxhash64(c))
       }
 
-  def corpusBloom(
-      artifacts: DataFrame,
-      expectedItems: Long = bloomExpectedItems): Array[Byte] = {
-    import org.apache.spark.sql.GraftColumnBridge
-    import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
-    def bloomAgg(c: Column): Column = GraftColumnBridge.column(
-      new BloomFilterAggregate(GraftColumnBridge.expression(c), expectedItems)
-        .toAggregateExpression())
-    artifacts
-      .select(explode(array(bloomProbes: _*)).as("v"))
-      .agg(bloomAgg(col("v")).as("bloom"))
-      .head().getAs[Array[Byte]]("bloom")
-  }
-
-  /** [[incrementalDedupWith]] behind a BLOOM pre-filter — the 100 TB
-    * ingest shape: most incoming documents are NOT duplicates, so before
-    * any shuffle the batch is screened against [[corpusBloom]]'s compact
-    * fingerprints (inlined as plan literals — the broadcast-a-sketch move
-    * Spark's runtime bloom-filter join optimization makes, under operator
-    * control). A doc with NO bloom hit on its content hash or any band
-    * key is DEFINITELY new (Bloom filters have no false negatives) and
-    * bypasses every join; only bloom CANDIDATES run the exact hash/band
-    * equi-joins, which also discharge the false positives — so results
-    * are identical to [[incrementalDedupWith]] by construction (spec-
-    * pinned, with the `might_contain` screen pinned in the plan). The
-    * flagged batch is eagerly checkpointed so the clean/candidate split
-    * costs ONE signature evaluation of the incoming side. Size
-    * `expectedItems` to ~(1 + bands) × existing docs: an undersized
-    * filter saturates and silently stops screening — results stay
-    * correct (the exact joins still discharge every candidate) but the
-    * bypass the operator exists for disappears.
+  /** ONE compact BLOOM fingerprint of the existing corpus's dedup
+    * artifacts — the content hashes AND all non-null band keys inserted
+    * into a single filter (their value spaces may collide bit patterns;
+    * harmless in a pre-filter whose positives are exact-confirmed) —
+    * built in ONE pass over the artifact table with Spark's own
+    * `BloomFilterAggregate` (the sketch the optimizer's runtime row-level
+    * filtering injects; applied here deliberately at the operator level).
+    * Values are guarded BEFORE hashing: `xxhash64(NULL)` is the seed
+    * constant, not NULL, so an unguarded short-doc band would poison the
+    * filter with one shared value. [[incrementalDedupBloom]] sizes
+    * `expectedItems` to (1 + bands) × artifact rows. Returned as a
+    * driver-held byte array; at 100 TB this is a maintained corpus
+    * artifact refreshed per ingest epoch, exactly like the hash/band
+    * tables it summarizes.
     */
+  def corpusBloom(artifacts: DataFrame, expectedItems: Long): Array[Byte] =
+    Bloom.build(artifacts.select(explode(array(bloomProbes: _*)).as("v")), col("v"), expectedItems)
+
   /** Semantic ARTIFACT of the existing corpus — its scored cell assignment
     * `(vec_id, embedding, na, cell, centroid_cos)`, eagerly materialized:
     * at 100 TB this is the persisted table the corpus maintains per ingest
@@ -555,34 +527,31 @@ object Dedup {
     * single `might_contain` — inlining a literal per probe column would
     * ship (1 + bands) copies of the filter in every task binary.
     */
-  private[graft] def bloomCandidate(bloom: Array[Byte]): Column = {
-    import org.apache.spark.sql.GraftColumnBridge
-    import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
-    import org.apache.spark.sql.types.BinaryType
-    coalesce(
-      exists(array(bloomProbes: _*), v => GraftColumnBridge.column(
-        BloomFilterMightContain(
-          Literal(bloom, BinaryType), GraftColumnBridge.expression(v)))),
-      lit(false))
-  }
+  private[graft] def bloomCandidate(bloom: Array[Byte]): Column =
+    exists(array(bloomProbes: _*), v => Bloom.mightContain(bloom, v))
 
-  def incrementalDedupBloom(
-      artifacts: DataFrame,
-      incoming: DataFrame,
-      expectedItems: Long = 0L): DataFrame = {
+  /** [[incrementalDedupWith]] behind a BLOOM pre-filter — the 100 TB
+    * ingest shape: most incoming documents are NOT duplicates, so before
+    * any shuffle the batch is screened against [[corpusBloom]]'s compact
+    * fingerprints (inlined as plan literals — the broadcast-a-sketch move
+    * Spark's runtime bloom-filter join optimization makes, under operator
+    * control). A doc with NO bloom hit on its content hash or any band
+    * key is DEFINITELY new (Bloom filters have no false negatives) and
+    * bypasses every join; only bloom CANDIDATES run the exact hash/band
+    * equi-joins, which also discharge the false positives — so results
+    * are identical to [[incrementalDedupWith]] by construction (spec-
+    * pinned, with the `might_contain` screen pinned in the plan). The
+    * flagged batch is eagerly checkpointed so the clean/candidate split
+    * costs ONE signature evaluation of the incoming side. The filter is
+    * sized from the artifact itself: (1 + bands) values per row, floored
+    * at [[bloomExpectedItems]] ([[Bloom.expectedItems]]).
+    */
+  def incrementalDedupBloom(artifacts: DataFrame, incoming: DataFrame): DataFrame = {
     val outCols = incoming.columns.toSeq
-    // expectedItems <= 0 (the default) sizes the filter from the ARTIFACT
-    // itself: (1 + bands) values per row, as the corpusBloom scaladoc
-    // prescribes, floored at bloomExpectedItems. The artifact is eagerly
-    // checkpointed, so the count is a cheap in-memory scan (catalog-table
-    // metadata at 100 TB); a fixed default saturates silently once the
-    // corpus outgrows it — correct verdicts, but every incoming doc flags
-    // as a candidate and the join bypass disappears.
-    val sized =
-      if (expectedItems > 0) expectedItems
-      else math.max((1L + minhashBandCount) * artifacts.count(), bloomExpectedItems)
+    val bloom = corpusBloom(artifacts,
+      Bloom.expectedItems(artifacts, 1L + minhashBandCount, bloomExpectedItems))
     val flagged = hashAndBands(incoming, outCols.map(col))
-      .withColumn("bloom_cand", bloomCandidate(corpusBloom(artifacts, sized)))
+      .withColumn("bloom_cand", bloomCandidate(bloom))
       .localCheckpoint(true)
     val clean = flagged.filter(!col("bloom_cand"))
     val suspects = flagged.filter(col("bloom_cand"))

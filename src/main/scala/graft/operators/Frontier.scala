@@ -20,8 +20,8 @@ import org.apache.spark.sql.functions._
   * bloom-less form BY CONSTRUCTION (the [[Dedup.incrementalDedupBloom]]
   * argument, so the DuckDB twin is the bloom-less SQL). The host cap is
   * decided map-side off a broadcast rate table. At 10^10 frontier keys
-  * the artifact is a persisted catalog table and `expectedItems` sizes
-  * the filter to it.
+  * the artifact is a persisted catalog table and the filter is sized
+  * from its cardinality.
   */
 object Frontier {
 
@@ -46,29 +46,10 @@ object Frontier {
 
   /** Compact Bloom fingerprint of the frontier artifact's canonical keys
     * (xxhash64 probes — the [[Dedup.corpusBloom]] construction on one
-    * column). Undersizing saturates the filter: verdicts stay correct
-    * (the exact join discharges candidates) but the bypass disappears.
+    * column).
     */
-  def frontierBloom(art: DataFrame,
-      expectedItems: Long = frontierBloomItems): Array[Byte] = {
-    import org.apache.spark.sql.GraftColumnBridge
-    import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
-    def bloomAgg(c: Column): Column = GraftColumnBridge.column(
-      new BloomFilterAggregate(GraftColumnBridge.expression(c), expectedItems)
-        .toAggregateExpression())
-    art.agg(bloomAgg(xxhash64(col("canonical"))).as("bloom"))
-      .head().getAs[Array[Byte]]("bloom")
-  }
-
-  private def mightContain(bloom: Array[Byte], v: Column): Column = {
-    import org.apache.spark.sql.GraftColumnBridge
-    import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
-    import org.apache.spark.sql.types.BinaryType
-    coalesce(GraftColumnBridge.column(
-      BloomFilterMightContain(
-        Literal(bloom, BinaryType),
-        GraftColumnBridge.expression(xxhash64(v)))), lit(false))
-  }
+  def frontierBloom(art: DataFrame, expectedItems: Long): Array[Byte] =
+    Bloom.build(art, xxhash64(col("canonical")), expectedItems)
 
   /** Frontier ingest verdict for a `(url_id, url)` batch against the
     * crawled artifact: one row per url —
@@ -78,17 +59,11 @@ object Frontier {
     */
   def frontierIngest(art: DataFrame, incoming: DataFrame,
       cap: Long = Sampling.domainCapDocs): DataFrame = {
-    // Size the filter from the artifact's own cardinality (the artifact is
-    // eagerly checkpointed, so the count is a cheap in-memory scan; at
-    // 10^10 keys it comes from catalog-table metadata). A fixed default
-    // stays CORRECT when the artifact outgrows it — the exact join
-    // discharges candidates — but a saturated filter flags everything,
-    // silently losing the join bypass this operator exists for.
-    val bloom = frontierBloom(art, math.max(art.count(), frontierBloomItems))
+    val bloom = frontierBloom(art, Bloom.expectedItems(art, 1L, frontierBloomItems))
     val inc = incoming
       .select(col("url_id"), canonical(col("url")).as("canonical"))
       .withColumn("host", regexp_extract(col("canonical"), hostPattern, 1))
-      .withColumn("cand", mightContain(bloom, col("canonical")))
+      .withColumn("cand", Bloom.mightContain(bloom, xxhash64(col("canonical"))))
       .localCheckpoint(true)
     val dups = inc.filter(col("cand"))
       .join(art, Seq("canonical"), "left_semi")

@@ -160,9 +160,6 @@ object Similarity {
     * tiebreak, i.e. the `row_number` ordering of the oracle). Still zero
     * Exchange.
     */
-  def ivfAssignProbe2(emb: DataFrame): DataFrame =
-    ivfAssignProbe2With(emb, collectCentroids(emb))
-
   def ivfAssignProbe2With(emb: DataFrame, cents: Array[(Long, Array[Double])]): DataFrame = {
     val (withScores, ids) = cellScores(cents)
     withScores(emb)

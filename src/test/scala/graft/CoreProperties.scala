@@ -2,6 +2,7 @@ package graft
 
 import graft.core._
 import org.scalacheck.{Arbitrary, Gen, Prop, Properties}
+import org.scalacheck.util.Pretty
 import org.scalacheck.Prop.forAll
 
 /** ScalaCheck properties for the pure kernel (FIXTURES.md §"property tests"):
@@ -9,6 +10,18 @@ import org.scalacheck.Prop.forAll
   * for ARBITRARY inputs, not just the fixture corpus.
   */
 object CoreProperties extends Properties("core") {
+
+  /** Counterexamples print every non-ASCII or control code unit as
+    * `\uXXXX`: a lone surrogate (which [[anyText]] generates) printed raw
+    * crashes sbt's forked-test JUnit XML listener
+    * (`MalformedInputException`), and the falsified input is lost.
+    * Declared first: every `forAll` below takes it when the object is built.
+    */
+  private implicit val escapedString: String => Pretty = s => Pretty { _ =>
+    if (s == null) "null"
+    else s.toCharArray.map(c => if (c < ' ' || c > '~') f"\\u${c.toInt}%04x" else c.toString)
+      .mkString("\"", "", "\"")
+  }
 
   private val textGen: Gen[String] = Gen.oneOf(
     Gen.asciiPrintableStr,

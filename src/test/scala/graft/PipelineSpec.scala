@@ -757,7 +757,8 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       .select(col("query_id"), col("cos").as("cos2"))
     // probing a superset of cells can only improve the best hit
     assert(p1.join(p2, Seq("query_id")).filter(col("cos2") < col("cos1")).count() == 0)
-    val plan = Similarity.ivfAssignProbe2(emb).queryExecution.executedPlan.toString
+    val plan = Similarity.ivfAssignProbe2With(emb, Similarity.collectCentroids(emb))
+      .queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange") && !plan.contains("Window"), s"plan:\n$plan")
   }
 
@@ -1995,6 +1996,12 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val o = SparkEntry.oracleSql.keySet
     assert((o -- q).isEmpty, s"orphan oracles: ${(o -- q).mkString(", ")}")
     assert((q -- o).isEmpty, s"queries without oracle: ${(q -- o).mkString(", ")}")
+    // a Map keeps the last of two equal keys silently: the declared list
+    // itself must name each query once, and the projection keeps them all
+    val names = SparkEntry.registry.map(_.name)
+    val dups = names.diff(names.distinct)
+    assert(dups.isEmpty, s"duplicate query names: ${dups.mkString(", ")}")
+    assert(names.size == q.size, s"${names.size} declared, ${q.size} in SparkEntry.queries")
   }
 
   test("web_prep_e2e: per-host funnel is monotone and conserves the corpus") {
