@@ -16,6 +16,8 @@ object CoreProperties extends Properties("core") {
     * crashes sbt's forked-test JUnit XML listener
     * (`MalformedInputException`), and the falsified input is lost.
     * Declared first: every `forAll` below takes it when the object is built.
+    * It is also an implicit view here, and `Pretty` has `map`/`flatMap`:
+    * call those on a `String` through `toCharArray` or `augmentString`.
     */
   private implicit val escapedString: String => Pretty = s => Pretty { _ =>
     if (s == null) "null"
