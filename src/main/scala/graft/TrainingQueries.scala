@@ -1708,7 +1708,7 @@ object TrainingQueries {
 
     Query("dedup_embedding", (s, dir) =>
         s.read.parquet(s"$dir/embeddings.parquet")
-          .transform(e => Dedup.embeddingNearDup(e, minCos = 0.8))
+          .transform(Dedup.embeddingNearDup)
           .orderBy("a_id", "b_id"),
       {
         // content-derived LSH bands over the double[64] emb — the constant
@@ -1747,7 +1747,7 @@ object TrainingQueries {
 
     Query("dedup_semantic", (s, dir) =>
         s.read.parquet(s"$dir/embeddings.parquet")
-          .transform(e => Dedup.semanticDedup(e, minCos = 0.8))
+          .transform(Dedup.semanticDedup)
           .orderBy("vec_id"),
       {
         // SemDeDup twin: the injected-dup base (as dedup_embedding), the
@@ -1870,7 +1870,7 @@ object TrainingQueries {
     // iterations over the same dup-injected base) as the quantizer
     Query("dedup_semantic_trained", (s, dir) =>
         s.read.parquet(s"$dir/embeddings.parquet")
-          .transform(e => Dedup.semanticDedupTrained(e, minCos = 0.8, iters = 2))
+          .transform(Dedup.semanticDedupTrained)
           .orderBy("vec_id"),
       {
         // the dedup_semantic twin with the quantizer swapped for TRAINED
@@ -2009,7 +2009,7 @@ object TrainingQueries {
     // the loop kmeansStep exists for (empty cells keep their previous
     // centroid; bit-reproducible under any partitioning)
     Query("ann_kmeans_train", (s, dir) =>
-        Similarity.kmeansTrain(s.read.parquet(s"$dir/embeddings.parquet"), iters = 2)
+        Similarity.kmeansTrain(s.read.parquet(s"$dir/embeddings.parquet"))
           .orderBy("cell", "dim"),
       // two chained Lloyd iterations (duckKmeansIters) -> the trained
       // centroid table in long format; bit-exact because every iteration's

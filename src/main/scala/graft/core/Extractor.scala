@@ -50,7 +50,6 @@ object Extractor {
   def acquirePayload(req: ExtractRequest, textColumn: String): Either[String, Array[Byte]] =
     if (req.imgBase64.nonEmpty) Payload.decodeBase64(req.imgBase64)
     else if (req.imgUrl.nonEmpty) Left("url payload acquisition is disabled (inline payloads only)")
-    else if (req.imgBytes != null) Right(req.imgBytes)
     else Right(Payload.bytes(if (textColumn == null) "" else textColumn))
 
   /** Run one request end-to-end. `textColumn` is the turn's `text` column —

@@ -1,5 +1,6 @@
 package graft.functions
 
+import graft.core.Extractor.DefaultTimeoutSeconds
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
@@ -49,8 +50,8 @@ object GraftFunctions {
   }
 
   /** O15 column variant of the timeout clamp (`ocr_rpc_client.go:87-89`). */
-  def clampTimeout(timeOut: Column, defaultSeconds: Long = 28800L): Column =
-    when(timeOut >= defaultSeconds || timeOut <= 0, defaultSeconds)
+  def clampTimeout(timeOut: Column): Column =
+    when(timeOut >= DefaultTimeoutSeconds || timeOut <= 0, DefaultTimeoutSeconds)
       .otherwise(timeOut).cast("long")
 
   /** O21 column variant of the admission gate

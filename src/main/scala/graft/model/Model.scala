@@ -62,10 +62,10 @@ object Engine {
 }
 
 /** One extraction request — the analog of `OcrRequest`
-  * (`/root/reference/ocr_request.go:8-26`). Payload is normalized to
-  * `imgBytes` before the extraction stage runs, exactly like the reference
-  * client normalizes url/base64/bytes before enqueue
-  * (`/root/reference/ocr_rpc_client.go:146-164`).
+  * (`ocr_request.go:8-26`). The payload is `imgBase64` when set, else the
+  * turn's `text` column; `Extractor.acquirePayload` turns it into bytes
+  * before the preprocessor chain runs, as the reference client normalizes
+  * url/base64/bytes before enqueue (`ocr_rpc_client.go:146-164`).
   *
   * `engineArgs` / `preprocessorArgs` stay as raw JSON trees (rendered to a
   * small AST) because the reference validates them lazily *inside* each
@@ -78,7 +78,6 @@ final case class ExtractRequest(
     id: String, // conv_id#turn_idx — deterministic replacement for ksuid
     imgUrl: String,
     imgBase64: String,
-    imgBytes: Array[Byte],
     engine: Engine,
     preprocessorChain: List[String], // consumed from the TAIL, ocr_request.go:30-40
     preprocessorArgs: Map[String, JVal],

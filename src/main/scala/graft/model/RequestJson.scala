@@ -42,7 +42,6 @@ object RequestJson {
       id = id,
       imgUrl = "",
       imgBase64 = "",
-      imgBytes = null,
       engine = Engine.Tesseract, // Go zero value = EngineTesseract
       preprocessorChain = Nil,
       preprocessorArgs = Map.empty,

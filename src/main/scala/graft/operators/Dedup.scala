@@ -431,8 +431,9 @@ object Dedup {
 
   /** Floor of [[incrementalDedupBloom]]'s filter sizing (~1.2 MB of
     * filter at the default 8 bits/item — the driver/broadcast footprint
-    * class of Spark's own runtime bloom joins; larger corpora size up,
-    * capped by `spark.sql.optimizer.runtime.bloomFilter.maxNumItems`).
+    * class of Spark's own runtime bloom joins). Larger corpora size up to
+    * the session's `spark.sql.optimizer.runtime.bloomFilter.maxNumItems`,
+    * where [[Bloom.expectedItems]] caps the size and logs a warning.
     */
   val bloomExpectedItems = 1000000L
 
@@ -482,7 +483,7 @@ object Dedup {
     * family ([[incrementalDedup]] checks content hashes and minhash bands;
     * this checks semantic duplicates the same way): drop every INCOMING
     * embedding whose cosine with ANY existing member of its assigned cell
-    * is >= `minCos`. The quantizer is the EXISTING corpus's (centroids
+    * is >= [[nearDupCos]]. The quantizer is the EXISTING corpus's (centroids
     * collected once), so assignment is stable as the corpus grows;
     * incoming-vs-incoming pairs are out of scope by the incremental
     * contract (each batch joins the corpus before the next arrives).
@@ -497,7 +498,7 @@ object Dedup {
     * incoming vector `(vec_id, cell, centroid_cos, dropped)`.
     */
   def semanticDedupIncremental(
-      existing: DataFrame, incoming: DataFrame, minCos: Double = 0.8): DataFrame = {
+      existing: DataFrame, incoming: DataFrame): DataFrame = {
     import graft.spark.VectorFunctions.vecDot
     val cents = Similarity.collectCentroids(existing)
     val art = semanticArtifacts(existing, cents)
@@ -512,7 +513,7 @@ object Dedup {
       .join(artOk.select(col("cell"), col("embedding").as("e_emb"),
         col("na").as("e_na")), Seq("cell"))
       .filter(round(vecDot(col("embedding"), col("e_emb")) /
-        sqrt(col("na") * col("e_na")), 6) >= minCos)
+        sqrt(col("na") * col("e_na")), 6) >= nearDupCos)
       .select("vec_id").distinct()
     inc.select(col("vec_id"), col("cell"), col("centroid_cos"))
       .join(hits.withColumn("d", lit(true)), Seq("vec_id"), "left")
@@ -544,7 +545,8 @@ object Dedup {
     * flagged batch is eagerly checkpointed so the clean/candidate split
     * costs ONE signature evaluation of the incoming side. The filter is
     * sized from the artifact itself: (1 + bands) values per row, floored
-    * at [[bloomExpectedItems]] ([[Bloom.expectedItems]]).
+    * at [[bloomExpectedItems]] and capped at the session's Bloom item
+    * limit ([[Bloom.expectedItems]]).
     */
   def incrementalDedupBloom(artifacts: DataFrame, incoming: DataFrame): DataFrame = {
     val outCols = incoming.columns.toSeq
@@ -714,7 +716,7 @@ object Dedup {
     * with [[clustersFromPairs]], the checkpointed blocks are released by
     * the ContextCleaner when the returned DataFrame is dropped.
     */
-  def minhashJaccard(doc: DataFrame, minJaccard: Double = 0.5): DataFrame = {
+  def minhashJaccard(doc: DataFrame): DataFrame = {
     val g = shingleTable(withInjectedDups(doc)).localCheckpoint(true)
     val pairs = bandsToPairs(signatureFromGrams(g))
     val inter = size(array_intersect(col("a_grams"), col("b_grams"))).cast("double")
@@ -724,8 +726,11 @@ object Dedup {
       .join(g.select(col("doc_id").as("a_id"), col("grams").as("a_grams")), Seq("a_id"))
       .join(g.select(col("doc_id").as("b_id"), col("grams").as("b_grams")), Seq("b_id"))
       .select(col("a_id"), col("b_id"), round(jac, 4).as("jaccard"))
-      .filter(col("jaccard") >= minJaccard)
+      .filter(col("jaccard") >= minhashMinJaccard)
   }
+
+  /** Floor of a verified [[minhashJaccard]] pair's 4-digit rounded Jaccard. */
+  val minhashMinJaccard = 0.5
 
   /** Iteration cap for [[clustersFromPairs]]: min-label propagation
     * converges in O(component diameter) rounds, and LSH-verified near-dup
@@ -743,8 +748,8 @@ object Dedup {
     * dedup to ONE survivor. Pipeline: [[minhashJaccard]] candidates →
     * connected components → cluster_id = min doc_id of the component.
     */
-  def dupClusters(doc: DataFrame, minJaccard: Double = 0.5): DataFrame =
-    clustersFromPairs(minhashJaccard(doc, minJaccard).select(col("a_id"), col("b_id")))
+  def dupClusters(doc: DataFrame): DataFrame =
+    clustersFromPairs(minhashJaccard(doc).select(col("a_id"), col("b_id")))
 
   /** Source priority for [[clusterKeep]]: a deterministic stand-in rank
     * derived from the source name (real deployments supply a curated >
@@ -963,23 +968,26 @@ object Dedup {
     */
   val simhashMaxBlock = 10000
 
+  /** Largest signature hamming distance [[simhashPairs]] reports. */
+  val simhashMaxHamming = 3
+
   /** SimHash near-dup PAIRS (the signature alone dedups nothing): banded
     * rotation blocking ([[simhashRotBlock]]), hamming distance <=
-    * `maxHamming` inside each block via `bit_count(xor)`. ONE shuffle total:
-    * signatures explode on (band_idx, band_val), each block collects its
-    * (doc_id, simhash) structs once, and sorted in-block pairs are generated
-    * with an array expression — no self-join (the signature map is computed
+    * [[simhashMaxHamming]] inside each block via `bit_count(xor)`. ONE
+    * shuffle total: signatures explode on (band_idx, band_val), each block
+    * collects its (doc_id, simhash) structs once, and sorted in-block pairs
+    * are generated with an array expression — no self-join (the signature map is computed
     * exactly once). Runs over the dup-injected corpus so exact duplicates
     * (hamming 0) are guaranteed positives.
     */
-  def simhashPairs(doc: DataFrame, maxHamming: Int = 3): DataFrame =
-    simhashPairsFromSig(simhash(withInjectedDups(doc)), maxHamming)
+  def simhashPairs(doc: DataFrame): DataFrame =
+    simhashPairsFromSig(simhash(withInjectedDups(doc)))
 
   /** Pairing stage over a prebuilt (doc_id, simhash) table — exposed so the
     * rotation-vs-prefix recall property can be unit-tested on synthetic
     * signatures.
     */
-  def simhashPairsFromSig(sig: DataFrame, maxHamming: Int = 3): DataFrame = {
+  def simhashPairsFromSig(sig: DataFrame): DataFrame = {
     val bands = array((0 until simhashBandCount).map(b =>
       simhashRotBlock(col("simhash"), b)): _*)
     val blocks = sig
@@ -990,12 +998,12 @@ object Dedup {
     observeCapDrops(blocks, "simhash", size(col("ms")), simhashMaxBlock)
       .filter(size(col("ms")) > 1 && size(col("ms")) <= simhashMaxBlock)
       // in-block quadratic comparison via the native one-pass
-      // [[graft.spark.SimHashPairsKernel.pairs]] kernel: only pairs within maxHamming
+      // [[graft.spark.SimHashPairsKernel.pairs]] kernel: only pairs within the distance
       // are ever materialized (the HOF form built EVERY in-block pair as an
       // interpreted struct before the filter — blocks cluster to ~700 docs
       // on natural-language signatures, so that was millions of structs)
       .select(explode(
-        graft.spark.HashFunctions.simHashPairs(col("ms"), maxHamming)).as("p"))
+        graft.spark.HashFunctions.simHashPairs(col("ms"), simhashMaxHamming)).as("p"))
       .select(col("p.a_id").as("a_id"), col("p.b_id").as("b_id"),
         col("p.hamming").as("hamming"))
       .distinct()
@@ -1135,8 +1143,13 @@ object Dedup {
     * near-zero plane bit is the expected LSH recall trade-off (mitigated in
     * production by multiple band tables, as in [[minhashBands]]).
     */
-  def embeddingNearDup(emb: DataFrame, minCos: Double = 0.8): DataFrame =
-    nearDupPairs(withInjectedNearDups(emb), minCos)
+  def embeddingNearDup(emb: DataFrame): DataFrame =
+    nearDupPairs(withInjectedNearDups(emb), nearDupCos)
+
+  /** Floor of a near-duplicate pair's 6-digit rounded cosine, for
+    * [[embeddingNearDup]] and every `semanticDedup*` operator.
+    */
+  val nearDupCos = 0.8
 
   /** Degenerate-cell guard for [[semanticDedup]] (the [[minhashMaxBucket]]
     * pattern): in-cell pairing is quadratic, so a collapsed cluster (e.g.
@@ -1174,10 +1187,10 @@ object Dedup {
     * centroid cosine loses; ties lose on the larger vec_id. Output: one
     * row per vector `(vec_id, cell, centroid_cos, dropped)`.
     */
-  def semanticDedup(emb: DataFrame, minCos: Double = 0.8): DataFrame = {
+  def semanticDedup(emb: DataFrame): DataFrame = {
     val base = withInjectedNearDups(emb)
       .select(col("vec_id"), col("emb").as("embedding"))
-    semanticDedupFrom(base, Similarity.collectCentroids(base), minCos)
+    semanticDedupFrom(base, Similarity.collectCentroids(base))
   }
 
   /** [[semanticDedup]] over an ALREADY-PREPARED `(vec_id, embedding
@@ -1186,8 +1199,8 @@ object Dedup {
     * means, where "duplicates" are real group-level redundancy, not
     * injected fixtures). Identical plan family to [[semanticDedup]].
     */
-  def semanticDedupOn(base: DataFrame, minCos: Double = 0.8): DataFrame =
-    semanticDedupFrom(base, Similarity.collectCentroids(base), minCos)
+  def semanticDedupOn(base: DataFrame): DataFrame =
+    semanticDedupFrom(base, Similarity.collectCentroids(base))
 
   /** [[semanticDedup]] with TRAINED k-means centroids — the quantizer swap
     * its scaladoc promises: [[Similarity.trainCentroids]] iterates the
@@ -1195,20 +1208,21 @@ object Dedup {
     * trained table drops in as the collected centroid argument. Tighter
     * clusters concentrate the true near-dups into shared cells (SemDeDup's
     * premise: the clustering quality IS the recall dial), with the plan
-    * shape unchanged — training adds `iters` (assignment map + O(cells)
-    * shuffle) rounds up front, nothing downstream.
+    * shape unchanged — training adds [[Similarity.kmeansIters]]
+    * (assignment map + O(cells) shuffle) rounds up front, nothing
+    * downstream.
     */
-  def semanticDedupTrained(emb: DataFrame, minCos: Double = 0.8, iters: Int = 2): DataFrame = {
+  def semanticDedupTrained(emb: DataFrame): DataFrame = {
     val base = withInjectedNearDups(emb)
       .select(col("vec_id"), col("emb").as("embedding"))
-    semanticDedupFrom(base, Similarity.trainCentroids(base, iters), minCos)
+    semanticDedupFrom(base, Similarity.trainCentroids(base, Similarity.kmeansIters))
   }
 
   /** The SemDeDup core over a prebuilt `(vec_id, embedding)` base and an
     * already-collected centroid table (first-K or trained).
     */
   private def semanticDedupFrom(
-      base: DataFrame, cents: Array[(Long, Array[Double])], minCos: Double): DataFrame = {
+      base: DataFrame, cents: Array[(Long, Array[Double])]): DataFrame = {
     import graft.spark.VectorFunctions.vecDot
     val cells = Similarity.ivfAssignScoredWith(base, cents)
       .groupBy("cell")
@@ -1230,7 +1244,7 @@ object Dedup {
       .select(col("a.vec_id").as("a_id"), col("b.vec_id").as("b_id"),
         col("a.centroid_cos").as("ac"), col("b.centroid_cos").as("bc"),
         round(dot / sqrt(col("a.na") * col("b.na")), 6).as("cos"))
-      .filter(col("cos") >= minCos)
+      .filter(col("cos") >= nearDupCos)
       // a_id < b_id always holds (pairs come from a vec_id-sorted array),
       // so "ties lose on the larger vec_id" IS the otherwise branch
       .select(when(col("ac") > col("bc"), col("a_id"))
@@ -1343,13 +1357,16 @@ object Dedup {
     */
   val containmentMaxDf = 100
 
+  /** Floor of a [[containmentPairs]] pair's larger rounded containment. */
+  val containmentMin = 0.5
+
   /** Asymmetric CONTAINMENT dedup — the doc-inside-doc detector the
     * Jaccard family is blind to: a short document quoted whole inside a
     * long page has Jaccard ≈ |A|/|B| ≈ 0 (so MinHash bands rarely fire)
     * but containment C(A,B) = |A∩B| / |A| = 1.0. Real pipelines run this
     * alongside near-dup (quote farms, syndicated excerpts, scraped
     * aggregators). Reports both directions plus the shared-shingle count;
-    * pairs below `minContainment` in BOTH directions are suppressed.
+    * pairs below [[containmentMin]] in BOTH directions are suppressed.
     *
     * Plan shape — the inverted-index (posting-list) join, all equi-keyed:
     * ONE shingle pass (eager localCheckpoint feeds postings AND sizes),
@@ -1361,7 +1378,7 @@ object Dedup {
     * No all-pairs anywhere: pair work is O(sum of bucket² over RARE
     * shingles), the same bound the band family lives under.
     */
-  def containmentPairs(doc: DataFrame, minContainment: Double = 0.5): DataFrame = {
+  def containmentPairs(doc: DataFrame): DataFrame = {
     val g = doc.filter(size(split(col("text"), " ")) >= 3)
       .select(col("doc_id"), shingles(col("text")).as("grams"))
       .localCheckpoint(true)
@@ -1380,7 +1397,7 @@ object Dedup {
       .select(col("a_id"), col("b_id"), col("n_shared"),
         round(col("n_shared").cast("double") / col("na").cast("double"), 6).as("c_a_in_b"),
         round(col("n_shared").cast("double") / col("nb").cast("double"), 6).as("c_b_in_a"))
-      .filter(greatest(col("c_a_in_b"), col("c_b_in_a")) >= minContainment)
+      .filter(greatest(col("c_a_in_b"), col("c_b_in_a")) >= containmentMin)
   }
 
   /** Block width (in whitespace tokens) for [[spanDedup]]. */

@@ -120,20 +120,19 @@ object Events {
     * (the `KeyValueGroupedDataset` custom-state path of SURVEY.md §2.10;
     * state-per-user ≙ the reference's in-flight request map O19, upgraded to
     * event-time session logic). Gap semantics match [[sessionize]] exactly:
-    * epoch-second truncation, strict `> gap`. Assumes per-user event-time
-    * order across micro-batches — the deployment contract is TIME-BUCKETED
+    * [[sessionGapMinutes]], epoch-second truncation, strict `> gap`.
+    * Assumes per-user event-time order across micro-batches — the deployment contract is TIME-BUCKETED
     * input (each batch a closed time range), which is spec-pinned both
     * single-batch and with a two-batch median-split input carrying state
     * across the boundary.
     */
   def sessionizeWithState(
       spark: SparkSession,
-      stream: DataFrame,
-      gapMinutes: Int = 30
+      stream: DataFrame
   ): org.apache.spark.sql.Dataset[UserSessions] = {
     import spark.implicits._
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val gapSec = gapMinutes * 60L
+    val gapSec = sessionGapMinutes * 60L
     stream
       .select(col("user_id"), col("event_id"), col("ts"))
       .as[EventLite]
@@ -153,12 +152,18 @@ object Events {
       }
   }
 
-  /** Batch sessionization: a session breaks when the gap to the user's
-    * previous event exceeds 30 minutes (lag over an analytic window).
+  /** Idle minutes after which a user's next event opens a new session, in
+    * [[sessionize]] and its stream twin [[sessionizeWithState]].
     */
-  def sessionize(events: DataFrame, gapMinutes: Int = 30): DataFrame = {
+  val sessionGapMinutes = 30
+
+  /** Batch sessionization: a session breaks when the gap to the user's
+    * previous event exceeds [[sessionGapMinutes]] (lag over an analytic
+    * window).
+    */
+  def sessionize(events: DataFrame): DataFrame = {
     val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-    val gapSec = gapMinutes * 60L
+    val gapSec = sessionGapMinutes * 60L
     events
       .withColumn("prev_ts", lag(col("ts"), 1).over(w))
       .withColumn("new_session",

@@ -57,8 +57,7 @@ object Frontier {
     * crawled (exact, bloom-prescreened) and `kept` = new AND surviving
     * the per-host rate cap. `kept` implies `!dup`.
     */
-  def frontierIngest(art: DataFrame, incoming: DataFrame,
-      cap: Long = Sampling.domainCapDocs): DataFrame = {
+  def frontierIngest(art: DataFrame, incoming: DataFrame): DataFrame = {
     val bloom = frontierBloom(art, Bloom.expectedItems(art, 1L, frontierBloomItems))
     val inc = incoming
       .select(col("url_id"), canonical(col("url")).as("canonical"))
@@ -72,7 +71,7 @@ object Frontier {
       .withColumn("dup", coalesce(col("dup"), lit(false)))
     val capped = Sampling.domainCap(
         flagged.filter(!col("dup"))
-          .select(col("url_id").as("doc_id"), col("host")), cap)
+          .select(col("url_id").as("doc_id"), col("host")), Sampling.domainCapDocs)
       .select(col("doc_id").as("url_id"), col("kept"))
     flagged.join(capped, Seq("url_id"), "left")
       .select(col("url_id"), col("canonical"), col("host"), col("dup"),

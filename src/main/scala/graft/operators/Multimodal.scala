@@ -78,17 +78,20 @@ object Multimodal {
       resized: Array[Byte]
   )
 
+  /** Output size [[resize]] aims at, in bytes. */
+  val resizeTargetBytes = 64
+
   /** Resize pass (stub codec): deterministic every-k-th-byte downsample to
-    * ~`targetBytes` — binary in, binary out, one batched iterator per
-    * partition. A real deployment swaps the sampling loop for an image
+    * ~[[resizeTargetBytes]] — binary in, binary out, one batched iterator
+    * per partition. A real deployment swaps the sampling loop for an image
     * scaler; schema/batching/partitioning are the production shape.
     */
-  def resize(spark: SparkSession, media: Dataset[MediaRow], targetBytes: Int = 64): Dataset[ResizedMedia] = {
+  def resize(spark: SparkSession, media: Dataset[MediaRow]): Dataset[ResizedMedia] = {
     import spark.implicits._
     media.mapPartitions { rows =>
       rows.map { r =>
         val n = r.media.length
-        val k = math.max(1, n / targetBytes)
+        val k = math.max(1, n / resizeTargetBytes)
         val out = Array.ofDim[Byte]((n + k - 1) / k)
         var i = 0
         var j = 0
@@ -133,16 +136,19 @@ object Multimodal {
     }
   }
 
-  /** Frame-sample stub: split the payload into up to `n` fixed-stride chunks
-    * (the partition/batch plumbing of video frame sampling; the decode of
-    * each frame is the same stub boundary).
+  /** Frames [[frameSample]] cuts each payload into, at most. */
+  val sampledFrames = 4
+
+  /** Frame-sample stub: split the payload into up to [[sampledFrames]]
+    * fixed-stride chunks (the partition/batch plumbing of video frame
+    * sampling; the decode of each frame is the same stub boundary).
     */
-  def frameSample(spark: SparkSession, media: Dataset[MediaRow], n: Int = 4): DataFrame = {
+  def frameSample(spark: SparkSession, media: Dataset[MediaRow]): DataFrame = {
     import spark.implicits._
     media
       .flatMap { r =>
-        val stride = math.max(1, r.media.length / n)
-        (0 until math.min(n, r.media.length)).map { i =>
+        val stride = math.max(1, r.media.length / sampledFrames)
+        (0 until math.min(sampledFrames, r.media.length)).map { i =>
           val from = i * stride
           val until = math.min(r.media.length, from + stride)
           if (from < r.media.length)

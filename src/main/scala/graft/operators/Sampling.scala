@@ -173,6 +173,9 @@ object Sampling {
   val splitTrain = 0.90
   val splitVal = 0.95
 
+  /** Salt of [[trainSplit]]'s uniform. */
+  val splitSalt = "graft-split"
+
   /** Deterministic train/validation/test assignment — the hash-split every
     * training corpus needs before anything is trained on it: the SAME
     * salted uniform as [[stratifiedSample]] thresholded at
@@ -186,8 +189,8 @@ object Sampling {
     *
     * Scale shape: a PURE NARROW map (no shuffle, no state, plan-pinned).
     */
-  def trainSplit(doc: DataFrame, salt: String = "graft-split"): DataFrame = {
-    val u = uniformHash(salt, col("doc_id"))
+  def trainSplit(doc: DataFrame): DataFrame = {
+    val u = uniformHash(splitSalt, col("doc_id"))
     doc.select(
       col("doc_id"),
       TextAnalysis.langPredicted.as("predicted"),
@@ -300,8 +303,7 @@ object Sampling {
     * corpus-sized. Output: one row per doc
     * `(doc_id, n_shingles, n_hits, contamination, flagged)`.
     */
-  def contaminationScore(doc: DataFrame, evalDocs: DataFrame,
-      threshold: Double = contaminationThreshold): DataFrame = {
+  def contaminationScore(doc: DataFrame, evalDocs: DataFrame): DataFrame = {
     val evalShingles = evalDocs
       .filter(size(split(col("text"), " ")) >= 3)
       .select(explode(Dedup.shingles(col("text"))).as("shingle"))
@@ -318,7 +320,7 @@ object Sampling {
         when(col("n_shingles") > 0,
           round(col("n_hits").cast("double") / col("n_shingles").cast("double"), 6))
           .otherwise(lit(0.0)).as("contamination"))
-      .withColumn("flagged", col("contamination") >= threshold)
+      .withColumn("flagged", col("contamination") >= contaminationThreshold)
   }
 
   /** Shard count for [[shuffleOrder]] — at 10^12 docs this rises to

@@ -24,6 +24,15 @@ object Similarity {
   val dims = 64
   val planes = 8
 
+  /** Query set of the top-k operators: the vectors with `vec_id` below this. */
+  val annQueries = 10
+
+  /** Neighbors per query of the LSH and IVF rankings, and of [[annRecall]]. */
+  val annK = 3
+
+  /** Neighbors per query of [[pqTopK]], [[exactL2TopK]] and [[pqRecall]]. */
+  val pqK = 5
+
   /** Plane-j dot product via the native [[graft.spark.VecDot]] expression
     * (same sequential double-sum order as the DuckDB twin); the ±1 signs of
     * the `(n*(j+3)) % 7` family are materialized as a literal array.
@@ -43,7 +52,7 @@ object Similarity {
   }
 
   /** Exact cosine top-k for a small query set (vec_id < nQueries). */
-  def bruteForceTopK(emb: DataFrame, nQueries: Int = 10, k: Int = 5): DataFrame = {
+  def bruteForceTopK(emb: DataFrame, nQueries: Int = annQueries, k: Int = 5): DataFrame = {
     val q = emb.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
     val c = emb.select(col("vec_id").as("neighbor_id"), col("embedding").as("ce"))
@@ -179,7 +188,7 @@ object Similarity {
     * needed. Strictly better recall than [[ivfTopK]] at 2x the candidate
     * fan-in — the standard IVF quality/cost dial.
     */
-  def ivfTopKProbe2(emb: DataFrame, nQueries: Int = 10, k: Int = 3): DataFrame = {
+  def ivfTopKProbe2(emb: DataFrame, nQueries: Int = annQueries, k: Int = annK): DataFrame = {
     // ONE centroid collect shared by the candidate and probing sides
     val cents = collectCentroids(emb)
     ivfTopKProbe2From(ivfAssignWith(emb, cents), ivfAssignProbe2With(emb, cents),
@@ -209,7 +218,7 @@ object Similarity {
   }
 
   /** IVF top-k: candidates restricted to the query's cell (nprobe=1). */
-  def ivfTopK(emb: DataFrame, nQueries: Int = 10, k: Int = 3): DataFrame =
+  def ivfTopK(emb: DataFrame, nQueries: Int = annQueries, k: Int = annK): DataFrame =
     ivfTopKFrom(ivfAssign(emb), nQueries, k)
 
   private def ivfTopKFrom(assigned: DataFrame, nQueries: Int, k: Int): DataFrame = {
@@ -235,7 +244,7 @@ object Similarity {
     * Output: one row per (method, query) with n_hit of n_true exact
     * neighbors recovered. All inputs are the deterministic rankings above
     * (cos rounded to 6, neighbor-id tiebreak), so recall itself is
-    * oracle-exact. Plan shape: the truth table is tiny (nQueries*k rows);
+    * oracle-exact. Plan shape: the truth table is tiny (annQueries*annK rows);
     * each method joins it once — broadcast-grade at any corpus size. The
     * IVF methods share ONE centroid collect and ONE assigned candidates
     * table (the earlier from-scratch composition collected the centroids
@@ -257,15 +266,15 @@ object Similarity {
         round(col("n_hit").cast("double") / col("n_true").cast("double"), 4)
           .as("recall"))
 
-  def annRecall(emb: DataFrame, nQueries: Int = 10, k: Int = 3): DataFrame = {
+  def annRecall(emb: DataFrame): DataFrame = {
     val cents = collectCentroids(emb)
     val assigned = ivfAssignWith(emb, cents)
-    val recallOf = recallAgainst(bruteForceTopK(emb, nQueries, k)
+    val recallOf = recallAgainst(bruteForceTopK(emb, annQueries, annK)
       .select(col("query_id"), col("neighbor_id"))) _
-    recallOf("lsh", lshTopK(emb, nQueries, k))
-      .unionByName(recallOf("ivf", ivfTopKFrom(assigned, nQueries, k)))
+    recallOf("lsh", lshTopK(emb, annQueries, annK))
+      .unionByName(recallOf("ivf", ivfTopKFrom(assigned, annQueries, annK)))
       .unionByName(recallOf("ivf_probe2", ivfTopKProbe2From(assigned,
-        ivfAssignProbe2With(emb, cents), nQueries, k)))
+        ivfAssignProbe2With(emb, cents), annQueries, annK)))
   }
 
   /** Exact squared-L2 top-k — the ground truth for the metric PQ
@@ -275,9 +284,9 @@ object Similarity {
     * [[bruteForceTopK]]; the `(x2 - 2*dot) + c2` expansion mirrors
     * [[pqDistArr]] and the DuckDB twin op-for-op.
     */
-  def exactL2TopK(emb: DataFrame, nQueries: Int = 10, k: Int = 5): DataFrame = {
+  def exactL2TopK(emb: DataFrame): DataFrame = {
     import graft.spark.VectorFunctions.vecDot
-    val q = emb.filter(col("vec_id") < nQueries)
+    val q = emb.filter(col("vec_id") < annQueries)
       .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
     val c = emb.select(col("vec_id").as("neighbor_id"), col("embedding").as("ce"))
     val scored = q.join(broadcast(c), col("neighbor_id") =!= col("query_id"))
@@ -286,7 +295,7 @@ object Similarity {
           + vecDot(col("ce"), col("ce"))).as("l2"))
     val w = Window.partitionBy(col("query_id")).orderBy(col("l2"), col("neighbor_id"))
     scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+      .filter(col("rank") <= pqK)
       .select(col("query_id"), col("rank").cast("int").as("rank"),
         col("neighbor_id"), col("l2"))
   }
@@ -297,10 +306,10 @@ object Similarity {
     * heavily; the OPERATOR is the deliverable, the measured recall is its
     * honest output).
     */
-  def pqRecall(emb: DataFrame, nQueries: Int = 10, k: Int = 5): DataFrame =
-    recallAgainst(exactL2TopK(emb, nQueries, k)
+  def pqRecall(emb: DataFrame): DataFrame =
+    recallAgainst(exactL2TopK(emb)
       .select(col("query_id"), col("neighbor_id")))(
-      "pq_adc", pqTopK(emb, nQueries, k))
+      "pq_adc", pqTopK(emb))
 
   /** Fixed-point scale for [[kmeansStep]]'s centroid accumulation: each
     * embedding dimension is quantized to `floor(x * 2^20)` (a BIGINT)
@@ -416,14 +425,17 @@ object Similarity {
     cents
   }
 
+  /** Lloyd rounds of [[kmeansTrain]] and [[Dedup.semanticDedupTrained]]. */
+  val kmeansIters = 2
+
   /** The trained centroid table as a DataFrame `(cell, dim, mean)` — the
     * queryable artifact of [[trainCentroids]] (driver-built: cells×dims
     * rows, the size of one collected step output).
     */
-  def kmeansTrain(emb: DataFrame, iters: Int = 2): DataFrame = {
+  def kmeansTrain(emb: DataFrame): DataFrame = {
     val spark = emb.sparkSession
     import spark.implicits._
-    trainCentroids(emb, iters)
+    trainCentroids(emb, kmeansIters)
       .flatMap { case (cell, arr) =>
         arr.iterator.zipWithIndex.map { case (m, i) => (cell, i + 1, m) }
       }.toSeq.toDF("cell", "dim", "mean")
@@ -500,7 +512,7 @@ object Similarity {
     * IVF cell equi-join ([[ivfTopK]]) at 10^12 vectors; here the full scan
     * IS the correctness harness (same shape as [[bruteForceTopK]]).
     */
-  def pqTopK(emb: DataFrame, nQueries: Int = 10, k: Int = 5): DataFrame = {
+  def pqTopK(emb: DataFrame): DataFrame = {
     import graft.spark.VectorFunctions.vecDot
     val cents = collectCentroids(emb)
     require(cents.length >= pqCodes,
@@ -508,7 +520,7 @@ object Similarity {
     val enc = pqEncodeWith(emb, cents)
       .select(col("vec_id").as("neighbor_id"), col("codes"))
     val luts = (0 until pqSubspaces).map(j => pqDistArr(cents, j))
-    val q = emb.filter(col("vec_id") < nQueries)
+    val q = emb.filter(col("vec_id") < annQueries)
       .select(col("vec_id").as("query_id"), array(luts: _*).as("lut"))
     val adist = (0 until pqSubspaces).map { j =>
       element_at(element_at(col("lut"), j + 1), element_at(col("codes"), j + 1) + 1)
@@ -518,7 +530,7 @@ object Similarity {
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("adist"), col("neighbor_id"))
     scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+      .filter(col("rank") <= pqK)
       .select(col("query_id"), col("rank").cast("int").as("rank"),
         col("neighbor_id"), col("adist"))
   }
@@ -526,7 +538,7 @@ object Similarity {
   /** LSH-bucketed top-k: same ranking but candidates restricted to the
     * query's bucket (equi-join on bucket — the 100 TB shape).
     */
-  def lshTopK(emb: DataFrame, nQueries: Int = 10, k: Int = 3): DataFrame = {
+  def lshTopK(emb: DataFrame, nQueries: Int = annQueries, k: Int = annK): DataFrame = {
     val b = lshBuckets(emb)
     val q = b.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), col("embedding").as("qe"), col("bucket"))

@@ -452,13 +452,13 @@ object TextAnalysis {
     * ~|alphabet|² rows per task regardless of corpus size. The final
     * rank runs on the collapsed count table.
     */
-  def bpePairStats(doc: DataFrame, topK: Int = bpeTopK): DataFrame = {
+  def bpePairStats(doc: DataFrame): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .orderBy(col("n").desc, col("pair").asc)
     doc.select(explode(graft.spark.HashFunctions.textCharPairs(col("text"))).as("pair"))
       .groupBy("pair").agg(count(lit(1)).as("n"))
       .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= topK)
+      .filter(col("rank") <= bpeTopK)
       .select(col("rank").cast("int").as("rank"), col("pair"),
         col("n").cast("long").as("n"))
   }
@@ -523,8 +523,8 @@ object TextAnalysis {
     * occurrence count; `encoded_fp` pins the full encoded content
     * byte-for-byte against the twin.
     */
-  def bpeApply(doc: DataFrame, rounds: Int = bpeTrainRounds): DataFrame = {
-    val encoded = trainBpeMerges(doc, rounds).foldLeft(col("text")) {
+  def bpeApply(doc: DataFrame): DataFrame = {
+    val encoded = trainBpeMerges(doc).foldLeft(col("text")) {
       case (t, (r, pair, _)) => replace(t, lit(pair), lit(bpeSymbol(r)))
     }
     doc.select(col("doc_id"),

@@ -158,28 +158,20 @@ object Transcripts {
           col("turn_idx"), lit("tool").as("role")))
   }
 
-  /** Conversation-level curation — the follow-on [[convStats]] exists for:
-    *   1. drop SINGLE-TURN conversations (< `minTurns` turns carry no
-    *      conversational signal);
-    *   2. drop runaway AGENT LOOPS (tool share above `maxToolShare`: a
-    *      conversation that is almost all tool traffic is an agent stuck
-    *      in a call loop, not dialogue);
-    *   3. STRATIFY survivors by tool share (`low` < 0.25 <= `mid` < 0.5
-    *      <= `high`) — the mixture key downstream samplers balance on.
-    * Plan shape: ONE partial-agg groupBy(conv_id) builds the per-conv
-    * keep-set (tiny: one row per conversation), then one equi-join back
-    * to the turns — the semi-join-with-payload form; no window, no
-    * second corpus shuffle. At 10^12 turns the keep-set is O(convs) and
-    * the join shuffles on the same conv_id key the stats did.
-    */
   /** Turn cap for runaway conversations in [[convCap]]. */
   val convCapTurns = 4
 
+  /** Tool share above which a conversation is a runaway agent loop. */
+  val runawayToolShare = 0.8
+
+  /** Fewest turns a conversation needs to survive [[convFilter]]. */
+  val convMinTurns = 2
+
   /** Runaway-loop CAPPING — the gentler sibling of [[convFilter]]'s drop
     * rule (the third verb in [[convStats]]' charter: drop / CAP /
-    * stratify): a conversation whose tool share exceeds `maxToolShare`
+    * stratify): a conversation whose tool share exceeds [[runawayToolShare]]
     * is an agent stuck in a call loop — instead of losing it entirely,
-    * keep its FIRST `capTurns` turns (by turn_idx: the pre-loop context
+    * keep its FIRST [[convCapTurns]] turns (by turn_idx: the pre-loop context
     * is the valuable part) and mark it `runaway`. Healthy conversations
     * pass through untouched. Plan: one partial-agg groupBy(conv_id)
     * builds the tiny verdict table, which BROADCASTS back onto the turns
@@ -188,20 +180,19 @@ object Transcripts {
     * needs — and a conversation's turns always fit one partition, at
     * 10^12 turns as here.
     */
-  def convCap(t: DataFrame, maxToolShare: Double = 0.8,
-      capTurns: Int = convCapTurns): DataFrame = {
+  def convCap(t: DataFrame): DataFrame = {
     val verdict = t.groupBy("conv_id")
       .agg(count(lit(1)).as("n_turns"),
         sum(when(col("role") === "tool", 1L).otherwise(0L)).as("n_tool"))
       .select(col("conv_id"),
         (col("n_tool").cast("double") / col("n_turns").cast("double")
-          > maxToolShare).as("runaway"))
+          > runawayToolShare).as("runaway"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("conv_id").orderBy(col("turn_idx"), col("role"))
     t.select(col("conv_id"), col("turn_idx"), col("role"))
       .join(verdict, Seq("conv_id"))
       .withColumn("rn", row_number().over(w))
-      .filter(!col("runaway") || col("rn") <= capTurns)
+      .filter(!col("runaway") || col("rn") <= convCapTurns)
       .drop("rn")
   }
 
@@ -300,7 +291,7 @@ object Transcripts {
     * context's supervised fraction. Two Exchanges total: the render's
     * groupBy(conv_id) and the shard repartition the window needs.
     */
-  def convSftPack(t: DataFrame, budget: Long = sftCharBudget): DataFrame = {
+  def convSftPack(t: DataFrame): DataFrame = {
     val shard = pmod(
       expr("CAST(conv(substring(md5(conv_id), 1, 2), 16, 10) AS INT)"),
       lit(sftShards)).cast("int")
@@ -313,8 +304,8 @@ object Transcripts {
       .withColumn("prev_cum", coalesce(sum(col("total_chars")).over(w), lit(0L)))
       .select(col("conv_id"), col("shard"), col("total_chars"),
         col("trainable_chars"),
-        expr(s"prev_cum div $budget").cast("long").as("pack_id"),
-        (col("prev_cum") % lit(budget)).cast("long").as("pack_offset"))
+        expr(s"prev_cum div $sftCharBudget").cast("long").as("pack_id"),
+        (col("prev_cum") % lit(sftCharBudget)).cast("long").as("pack_offset"))
   }
 
   /** Chat-PROTOCOL validation — the fourth verb of the conv-curation
@@ -352,13 +343,27 @@ object Transcripts {
         col("starts_user") && col("ends_assistant") && col("n_role_repeats") === 0L)
   }
 
-  def convFilter(t: DataFrame, minTurns: Int = 2, maxToolShare: Double = 0.8): DataFrame = {
+  /** Conversation-level curation — the follow-on [[convStats]] exists for:
+    *   1. drop SINGLE-TURN conversations (< [[convMinTurns]] turns carry
+    *      no conversational signal);
+    *   2. drop runaway AGENT LOOPS (tool share above `maxToolShare`,
+    *      by default [[runawayToolShare]]: a conversation that is almost
+    *      all tool traffic is an agent stuck in a call loop, not dialogue);
+    *   3. STRATIFY survivors by tool share (`low` < 0.25 <= `mid` < 0.5
+    *      <= `high`) — the mixture key downstream samplers balance on.
+    * Plan shape: ONE partial-agg groupBy(conv_id) builds the per-conv
+    * keep-set (tiny: one row per conversation), then one equi-join back
+    * to the turns — the semi-join-with-payload form; no window, no
+    * second corpus shuffle. At 10^12 turns the keep-set is O(convs) and
+    * the join shuffles on the same conv_id key the stats did.
+    */
+  def convFilter(t: DataFrame, maxToolShare: Double = runawayToolShare): DataFrame = {
     val keep = t.groupBy("conv_id")
       .agg(count(lit(1)).as("n_turns"),
         sum(when(col("role") === "tool", 1L).otherwise(0L)).as("n_tool"))
       .withColumn("tool_share",
         col("n_tool").cast("double") / col("n_turns").cast("double"))
-      .filter(col("n_turns") >= minTurns && col("tool_share") <= maxToolShare)
+      .filter(col("n_turns") >= convMinTurns && col("tool_share") <= maxToolShare)
       .select(col("conv_id"),
         when(col("tool_share") < 0.25, "low")
           .when(col("tool_share") < 0.5, "mid")

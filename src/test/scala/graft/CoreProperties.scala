@@ -1,6 +1,7 @@
 package graft
 
 import graft.core._
+import org.apache.spark.unsafe.types.UTF8String
 import org.scalacheck.{Arbitrary, Gen, Prop, Properties}
 import org.scalacheck.util.Pretty
 import org.scalacheck.Prop.forAll
@@ -58,8 +59,7 @@ object CoreProperties extends Properties("core") {
   property("decodeEntities is identity without ampersands") =
     forAll(textGen.map(_.filter(_ != '&'))) { s => Html.decodeEntities(s) == s }
 
-  private def utf8(s: String) =
-    org.apache.spark.unsafe.types.UTF8String.fromString(s)
+  private def utf8(s: String) = UTF8String.fromString(s)
 
   property("rollingHash kernel equals the code-point fold for arbitrary text") =
     forAll(textGen) { s =>
@@ -287,22 +287,54 @@ object CoreProperties extends Properties("core") {
       }
     }
 
+  /** Raw UTF-8 byte strings, well-formed or not: lone continuation bytes,
+    * the overlong `C0 80`, the encoded surrogate `ED A0 80`, the
+    * out-of-range `F4 90 80 80` and truncated multi-byte sequences, among
+    * ASCII and well-formed 2-, 3- and 4-byte sequences.
+    */
+  private val rawUtf8: Gen[Array[Byte]] = {
+    def b(xs: Int*) = Gen.const(xs.map(_.toByte).toArray)
+    val piece = Gen.frequency(
+      4 -> Gen.alphaNumChar.map(c => Array(c.toByte)),
+      1 -> Gen.oneOf(" ", "\"", "{", "}", ":", "\\").map(Payload.bytes),
+      3 -> Gen.oneOf(b(0x80), b(0xbf), b(0xc0, 0x80), b(0xed, 0xa0, 0x80),
+        b(0xf4, 0x90, 0x80, 0x80), b(0xc3), b(0xe4, 0xb8), b(0xf0, 0x9f, 0x98)),
+      2 -> Gen.oneOf(b(0xc3, 0xa9), b(0xe4, 0xb8, 0xad), b(0xf0, 0x9f, 0x98, 0x80)))
+    Gen.oneOf(Gen.listOf(piece).map(_.flatten.toArray),
+      Gen.listOf(Arbitrary.arbitrary[Byte]).map(_.toArray))
+  }
+
+  /** A raw-byte counterexample prints as hex: decoded, its invalid bytes
+    * would all read as U+FFFD.
+    */
+  private implicit val utf8Bytes: UTF8String => Pretty = u => Pretty { _ =>
+    if (u == null) "null" else u.getBytes.map(x => f"${x & 0xff}%02x").mkString("utf8[", " ", "]")
+  }
+
   property("extraction kernel equals extractTurn on every field, chars counted in UTF-16") = {
     val value = Gen.frequency(1 -> Gen.const(null: String), 6 -> anyText)
-    val tool = Gen.frequency(4 -> value, 1 -> Gen.oneOf("""{"engine":"mock"}""",
-      """{"engine":"tesseract"}""", """{"engine":"mock","""))
-    forAll(value, Gen.chooseNum(0, 1000), value, tool) { (conv, idx, text, tl) =>
-      // strings cross Spark as UTF-8 (a lone surrogate becomes '?'): the twin
-      // reads and writes the same decoded values; counts are of the Java strings
-      def decoded(s: String) = Option(utf8(s)).map(_.toString).orNull
-      val (c, in, t) = (decoded(conv), decoded(text), decoded(tl))
-      val row = graft.spark.ExtractTextKernel.turn(utf8(conv), idx, utf8(text), utf8(tl),
+    // text and tool also arrive as raw bytes, invalid UTF-8 included, bare
+    // or inside a JSON string of an otherwise valid request
+    val raw = rawUtf8.map(UTF8String.fromBytes)
+    val text = Gen.frequency(6 -> value.map(utf8), 2 -> raw)
+    val tool = Gen.frequency(8 -> value.map(utf8), 2 -> Gen.oneOf("""{"engine":"mock"}""",
+      """{"engine":"tesseract"}""", """{"engine":"mock",""").map(utf8), 1 -> raw,
+      1 -> rawUtf8.map(bs => UTF8String.fromBytes(
+        Payload.bytes("""{"engine":"mock","id":"""") ++ bs ++ Payload.bytes("\"}"))))
+    forAll(value, Gen.chooseNum(0, 1000), text, tool) { (conv, idx, text, tl) =>
+      // a Java string crosses Spark as UTF-8 (a lone surrogate becomes '?')
+      // and bytes decode by `toString`: the twin reads and writes the same
+      // decoded values; counts are of the Java strings
+      def decoded(u: UTF8String) = Option(u).map(_.toString).orNull
+      val (c, in, t) = (decoded(utf8(conv)), decoded(text), decoded(tl))
+      val row = graft.spark.ExtractTextKernel.turn(utf8(conv), idx, text, tl,
         Engines.CoreConfig())
       val r = Extractor.extractTurn(c, idx, in, t)
       def str(i: Int) = Option(row.getUTF8String(i)).map(_.toString).orNull
       def len(s: String) = if (s == null) 0 else s.length
-      str(0) == c && row.getInt(1) == idx && str(2) == decoded(r.text) && str(3) == r.status &&
-        str(4) == r.engine && row.getInt(5) == len(in) + len(t) && row.getInt(6) == len(r.text)
+      str(0) == c && row.getInt(1) == idx && str(2) == decoded(utf8(r.text)) &&
+        str(3) == r.status && str(4) == r.engine && row.getInt(5) == len(in) + len(t) &&
+        row.getInt(6) == len(r.text)
     }
   }
 

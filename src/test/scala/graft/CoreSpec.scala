@@ -134,7 +134,7 @@ class CoreSpec extends AnyFunSuite {
     val req2 = parse(
       """{"engine":"mock", "preprocessors":["stroke-width-transform","convert-pdf"],
          "preprocessor-args":{"stroke-width-transform":"0"}}""")
-    val out2 = Preprocessors.runChain(req2.copy(imgBytes = pdf), pdf).map(Payload.utf8)
+    val out2 = Preprocessors.runChain(req2, pdf).map(Payload.utf8)
     // swt runs second: inverts case AND strips the \f page terminator (control noise)
     assert(out2 == Right("pAYLOAD tEXT\n"))
     // [convert-pdf, swt(0)]: swt runs FIRST and corrupts the PDF header ->

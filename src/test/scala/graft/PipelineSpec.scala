@@ -738,7 +738,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(t2.length == Similarity.ivfCells &&
       t2.forall(_._2.length == Similarity.dims))
     // kmeansTrain is the same table in long format
-    val df = Similarity.kmeansTrain(emb, 2).orderBy("cell", "dim").collect()
+    val df = Similarity.kmeansTrain(emb).orderBy("cell", "dim").collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getDouble(2))).toSeq
     assert(df == t2.toSeq.sortBy(_._1).flatMap { case (c, a) =>
       a.zipWithIndex.map { case (m, i) => (c, i + 1, m) } })
@@ -886,7 +886,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     // blocking can never compare them; rotation window b=0 (bits 0-7 = 0x34)
     // agrees, so banded blocking pairs them at hamming 1
     val sig = Seq((1L, 0x1234), (2L, 0x9234)).toDF("doc_id", "simhash")
-    val pairs = Dedup.simhashPairsFromSig(sig, maxHamming = 3).collect()
+    val pairs = Dedup.simhashPairsFromSig(sig).collect()
     assert(pairs.length == 1)
     assert(pairs(0).getLong(0) == 1L && pairs(0).getLong(1) == 2L)
     assert(pairs(0).getInt(2) == 1)
@@ -937,7 +937,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("dedup: injected near-dup embeddings found via content blocking") {
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-    val pairs = Dedup.embeddingNearDup(emb, minCos = 0.8).cache()
+    val pairs = Dedup.embeddingNearDup(emb).cache()
     // blocking is CONTENT-based (LSH bucket), not id-based: an injected twin
     // is only missed when its +0.5 dim-1 shift flips a near-zero plane bit —
     // the standard single-table LSH recall trade-off. Require high recall.
@@ -971,7 +971,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val clone = emb.filter(col("vec_id") === 100L)
       .select(lit(600L).as("vec_id"), col("embedding"))
     val out = Dedup.semanticDedup(
-      emb.select("vec_id", "embedding").unionByName(clone), minCos = 0.8).cache()
+      emb.select("vec_id", "embedding").unionByName(clone)).cache()
     // one row per base + injected vector
     assert(out.count() == (emb.count() + 1) * 2)
     val by = out.filter(col("vec_id").isin(100L, 600L))
@@ -2348,6 +2348,17 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     // default: fresh docs overwhelmingly bypass the exact joins
     val derived = (1L + Dedup.minhashBandCount) * art.count()
     assert(candidateFraction(math.max(derived, Dedup.bloomExpectedItems)) < 0.2)
+    // a session item cap below the floor: the size is the cap, and the
+    // Bloom-screened query's rows do not move
+    val capKey = "spark.sql.optimizer.runtime.bloomFilter.maxNumItems"
+    val query = SparkEntry.queries("dedup_incremental_bloom")
+    val rows = query(spark, sfDir).collect().toSeq
+    spark.conf.set(capKey, 1000L)
+    try {
+      assert(graft.operators.Bloom.expectedItems(
+        art, 1L + Dedup.minhashBandCount, Dedup.bloomExpectedItems) == 1000L)
+      assert(query(spark, sfDir).collect().toSeq == rows)
+    } finally spark.conf.unset(capKey)
   }
 
   test("vec_sum_quant: aggregate equals the 64-column quantized-sum form") {

@@ -5,7 +5,7 @@
 #   tools/perf_ab.sh [-b BASE] [-n SEEDS] [-f FIRST_SEED] [-t TRACE]
 #                    [-o OUTDIR] [WORKLOAD...]
 #
-#   -b  base ref (default HEAD~1)      -n  seeds per workload (default 3)
+#   -b  base ref (default HEAD~1)      -n  seeds per workload (default 10)
 #   -f  first seed (default 1)         -t  --trace 0|1 (default 0)
 #   -o  where the result lines go (default: a new directory under $TMPDIR)
 #   WORKLOAD...  default: the workloads BENCHMARK.json lists
@@ -21,14 +21,23 @@
 # metrics BENCHMARK.json declares, how many pairs the head won by its
 # `better` direction (ties count for neither side), plus `failed`; run with
 # `-t 1 -n 1` for one traced pair of per-layer metrics. Run from the repo.
+#
+# For each end-to-end metric BENCHMARK.json gates, one verdict line:
+#   gain          the head wins at least 9/10 of at least 10 pairs, and the
+#                 medians differ, head better, by more than the base IQR;
+#   regressed     the head median is worse than the base median by more
+#                 than the metric's `bound` (a fraction of the base median);
+#   unresolved    the base IQR exceeds `bound` x base median, unless every
+#                 head run beats every base run;
+#   within bound  otherwise.
 set -euo pipefail
 
-base=HEAD~1 head=HEAD seeds=3 first=1 trace=0 out=""
+base=HEAD~1 head=HEAD seeds=10 first=1 trace=0 out=""
 while getopts "b:n:f:t:o:" opt; do
   case $opt in
     b) base=$OPTARG ;; n) seeds=$OPTARG ;; f) first=$OPTARG ;;
     t) trace=$OPTARG ;; o) out=$OPTARG ;;
-    *) sed -n '2,23p' "$0"; exit 2 ;;
+    *) sed -n '2,32p' "$0"; exit 2 ;;
   esac
 done
 shift $((OPTIND - 1))
@@ -73,6 +82,7 @@ bench, out, trace = json.load(open(sys.argv[1])), sys.argv[2], sys.argv[3]
 first, n, workloads = int(sys.argv[4]), int(sys.argv[5]), sys.argv[6:]
 lead = ["setup_s", "ops_per_s", "cpu_us_per_op"]
 better = {m["name"]: m["better"] for m in bench["end_to_end"] + bench["per_layer"]}
+bound = {m["name"]: m["bound"] for m in bench["end_to_end"]}
 
 def load(side, w, seed):
     try:
@@ -107,6 +117,27 @@ def wins(m, bs, hs):  # pairs the head won, of the pairs with both values
     sign = 1 if better[m] == "higher" else -1
     return f", head wins {sum(sign * (y - x) > 0 for x, y in both)}/{len(both)}"
 
+def verdict(m, bs, hs):  # the rules in the header, for one gated metric
+    both = [(x, y) for x, y in zip(bs, hs) if x is not None and y is not None]
+    if not both:
+        return "no data"
+    bs, hs = [x for x, _ in both], [y for _, y in both]
+    sign = 1 if better[m] == "higher" else -1
+    mb, mh, spread = median(bs), median(hs), iqr(bs) or 0.0
+    won = sum(sign * (y - x) > 0 for x, y in both)
+    rel = sign * (mh - mb) / mb if mb else 0.0  # > 0: the head is better
+    facts = (f"head median {rel * 100:+.1f} % (+ is better), bound {bound[m] * 100:.0f} %, "
+             f"base IQR/median {spread / mb * 100 if mb else 0:.1f} %, "
+             f"head wins {won}/{len(both)}")
+    if len(both) >= 10 and won >= 0.9 * len(both) and sign * (mh - mb) > spread:
+        return f"gain ({facts})"
+    if rel < -bound[m]:
+        return f"regressed ({facts})"
+    if mb and spread / abs(mb) > bound[m] and \
+            not all(sign * (y - x) > 0 for x in bs for y in hs):
+        return f"unresolved ({facts})"
+    return f"within bound ({facts})"
+
 for w in workloads:
     pairs = [(s, load("base", w, s), load("head", w, s)) for s in range(first, first + n)]
     names = sorted({m for _, b, h in pairs for r in (b, h) for m in r.get("metrics", {})},
@@ -123,5 +154,9 @@ for w in workloads:
         per = "  ".join(f"{fmt(x)}->{fmt(y)}" for x, y in zip(bs, hs))
         print(f"  {m:28s} median {fmt(mb)} -> {fmt(mh)}{rel}, base IQR {fmt(iqr(bs))}"
               f"{wins(m, bs, hs)}   pairs: {per}")
+    for m in bound:
+        bs = [value(b, m) for _, b, _ in pairs]
+        hs = [value(h, m) for _, _, h in pairs]
+        print(f"  verdict {m}: {verdict(m, bs, hs)}")
 print(f"[perf_ab] result lines in {out}", file=sys.stderr)
 EOF
