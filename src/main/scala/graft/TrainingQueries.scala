@@ -13,7 +13,8 @@ import org.apache.spark.sql.functions._
 object TrainingQueries {
 
   /** Shared DuckDB fragment: explicit sequential-double cosine between two
-    * FLOAT[64] lists `a` and `b` (matches Dedup.cosineExpr op-for-op).
+    * FLOAT[64] lists `a` and `b` (the unrounded `dot / sqrt(na * nb)` of
+    * Similarity.roundedCos, op-for-op).
     */
   private def duckCosine(a: String, b: String): String = {
     def sum(e: String) = s"list_sum(list_transform(range(1, 65), i -> $e))"

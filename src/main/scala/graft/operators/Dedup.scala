@@ -226,21 +226,31 @@ object Dedup {
       .select(col("doc_id"), posexplode(bands).as(Seq("band_idx", "band_val")))
       .groupBy("band_idx", "band_val")
       .agg(array_sort(collect_list(col("doc_id"))).as("ids"))
-    streamedPairs(buckets, "minhash", minhashMaxBucket)
+    streamedPairs(buckets, "ids", "minhash", minhashMaxBucket)
+      .distinct().toDF("a_id", "b_id")
   }
 
-  /** Streamed in-bucket pair generation over a grouped table with a sorted
-    * `ids` array column — shared by every id-only bucketing dedup
-    * ([[bandsToPairs]], [[windowDupPairs]]): cap + observable drops, then
-    * chained posexplode + explode(slice) so transient memory is O(bucket).
+  /** The blocks of a grouped table whose sorted array column `arr` could
+    * pair (more than one member) and is within the degenerate-block `cap`;
+    * drops above the cap are observable as `graft_caps_<op>_*`.
     */
-  private def streamedPairs(buckets: DataFrame, op: String, cap: Int): DataFrame =
-    observeCapDrops(buckets, op, size(col("ids")), cap)
-      .filter(size(col("ids")) > 1 && size(col("ids")) <= cap)
-      .select(col("ids"), posexplode(col("ids")).as(Seq("i", "a_id")))
+  private def cappedBlocks(blocks: DataFrame, arr: String, op: String, cap: Int): DataFrame =
+    observeCapDrops(blocks, op, size(col(arr)), cap)
+      .filter(size(col(arr)) > 1 && size(col(arr)) <= cap)
+
+  /** Streamed in-block pair generation over [[cappedBlocks]] — shared by
+    * every bucketing dedup ([[bandsToPairs]], [[windowDupPairs]],
+    * [[nearDupPairs]], [[semanticDedup]], [[containmentPairs]]): chained
+    * posexplode + explode(slice) emit each (`a`, `b`) element pair with
+    * `a` before `b` in the array, so transient memory is O(block). Pairs
+    * are not deduplicated here: a pair sharing several blocks appears once
+    * per block, which [[containmentPairs]] counts.
+    */
+  private def streamedPairs(blocks: DataFrame, arr: String, op: String, cap: Int): DataFrame =
+    cappedBlocks(blocks, arr, op, cap)
+      .select(col(arr), posexplode(col(arr)).as(Seq("i", "a")))
       // slice is 1-based: position i (0-based) -> partners start at i + 2
-      .select(col("a_id"), explode(expr("slice(ids, i + 2, size(ids))")).as("b_id"))
-      .distinct()
+      .select(col("a"), explode(expr(s"slice($arr, i + 2, size($arr))")).as("b"))
 
   /** Windowed-fingerprint dedup parameters (the exact-substring dedup
     * tradition — Lee et al. 2021, "Deduplicating Training Data Makes
@@ -325,7 +335,8 @@ object Dedup {
       windowFingerprints(doc)
         .groupBy("wfp")
         .agg(array_sort(collect_set(col("doc_id"))).as("ids")),
-      "windowfp", windowMaxBucket)
+      "ids", "windowfp", windowMaxBucket)
+      .distinct().toDF("a_id", "b_id")
 
   /** INCREMENTAL dedup — the ingestion-time operation continual
     * pretraining runs: drop every INCOMING document that duplicates the
@@ -512,13 +523,10 @@ object Dedup {
     val hits = inc
       .join(artOk.select(col("cell"), col("embedding").as("e_emb"),
         col("na").as("e_na")), Seq("cell"))
-      .filter(round(vecDot(col("embedding"), col("e_emb")) /
-        sqrt(col("na") * col("e_na")), 6) >= nearDupCos)
+      .filter(Similarity.roundedCos(vecDot(col("embedding"), col("e_emb")),
+        col("na"), col("e_na")) >= nearDupCos)
       .select("vec_id").distinct()
-    inc.select(col("vec_id"), col("cell"), col("centroid_cos"))
-      .join(hits.withColumn("d", lit(true)), Seq("vec_id"), "left")
-      .select(col("vec_id"), col("cell"), col("centroid_cos"),
-        coalesce(col("d"), lit(false)).as("dropped"))
+    flagDropped(inc, hits)
   }
 
   /** The bloom-candidate probe over a [[hashAndBands]]-shaped row: true
@@ -995,8 +1003,7 @@ object Dedup {
         posexplode(bands).as(Seq("band_idx", "band_val")))
       .groupBy("band_idx", "band_val")
       .agg(array_sort(collect_list(struct(col("doc_id"), col("simhash")))).as("ms"))
-    observeCapDrops(blocks, "simhash", size(col("ms")), simhashMaxBlock)
-      .filter(size(col("ms")) > 1 && size(col("ms")) <= simhashMaxBlock)
+    cappedBlocks(blocks, "ms", "simhash", simhashMaxBlock)
       // in-block quadratic comparison via the native one-pass
       // [[graft.spark.SimHashPairsKernel.pairs]] kernel: only pairs within the distance
       // are ever materialized (the HOF form built EVERY in-block pair as an
@@ -1007,18 +1014,6 @@ object Dedup {
       .select(col("p.a_id").as("a_id"), col("p.b_id").as("b_id"),
         col("p.hamming").as("hamming"))
       .distinct()
-  }
-
-  /** Cosine between two float/double[64] array columns — dot products run
-    * through the native codegen'd [[graft.spark.VecDot]] expression, which
-    * preserves the exact sequential float-summation order of the
-    * `aggregate(zip_with(...))` form, so the DuckDB twins stay
-    * bit-identical while the per-candidate hot loop is a primitive loop
-    * instead of interpreted per-element lambdas.
-    */
-  def cosineExpr(a: Column, b: Column): Column = {
-    import graft.spark.VectorFunctions.vecDot
-    vecDot(a, b) / sqrt(vecDot(a, a) * vecDot(b, b))
   }
 
   /** Embeddings plus injected near-dups: every vector gets a copy (vec_id +
@@ -1121,17 +1116,12 @@ object Dedup {
       // sorts by vec_id (unique first field), so pair generation over
       // (i, j > i) preserves the a_id < b_id contract of the old join
       .agg(array_sort(collect_list(struct(col("vec_id"), col("emb"), col("na")))).as("vs"))
-    val pairs = observeCapDrops(buckets, "neardup", size(col("vs")), nearDupMaxBucket)
-      .filter(size(col("vs")) > 1 && size(col("vs")) <= nearDupMaxBucket)
-      .select(col("vs"), posexplode(col("vs")).as(Seq("i", "a")))
-      // slice is 1-based: position i (0-based) -> partners start at i + 2
-      .select(col("a"), explode(expr("slice(vs, i + 2, size(vs))")).as("b"))
-    val dot = vecDot(col("a.emb"), col("b.emb"))
-    pairs
+    streamedPairs(buckets, "vs", "neardup", nearDupMaxBucket)
       .select(
         col("a.vec_id").as("a_id"),
         col("b.vec_id").as("b_id"),
-        round(dot / sqrt(col("a.na") * col("b.na")), 6).as("cos"))
+        Similarity.roundedCos(vecDot(col("a.emb"), col("b.emb")), col("a.na"), col("b.na"))
+          .as("cos"))
       .filter(col("cos") >= minCos)
       .distinct()
   }
@@ -1234,26 +1224,29 @@ object Dedup {
     val rows = cells.select(col("cell"), explode(col("vs")).as("v"))
       .select(col("v.vec_id").as("vec_id"), col("cell"),
         col("v.centroid_cos").as("centroid_cos"))
-    val pairs = observeCapDrops(cells, "semdedup", size(col("vs")), semanticMaxCell)
-      .filter(size(col("vs")) > 1 && size(col("vs")) <= semanticMaxCell)
-      .select(col("vs"), posexplode(col("vs")).as(Seq("i", "a")))
-      // slice is 1-based: position i (0-based) -> partners start at i + 2
-      .select(col("a"), explode(expr("slice(vs, i + 2, size(vs))")).as("b"))
-    val dot = vecDot(col("a.embedding"), col("b.embedding"))
-    val dropped = pairs
+    val dropped = streamedPairs(cells, "vs", "semdedup", semanticMaxCell)
       .select(col("a.vec_id").as("a_id"), col("b.vec_id").as("b_id"),
         col("a.centroid_cos").as("ac"), col("b.centroid_cos").as("bc"),
-        round(dot / sqrt(col("a.na") * col("b.na")), 6).as("cos"))
+        Similarity.roundedCos(vecDot(col("a.embedding"), col("b.embedding")),
+          col("a.na"), col("b.na")).as("cos"))
       .filter(col("cos") >= nearDupCos)
       // a_id < b_id always holds (pairs come from a vec_id-sorted array),
       // so "ties lose on the larger vec_id" IS the otherwise branch
       .select(when(col("ac") > col("bc"), col("a_id"))
         .otherwise(col("b_id")).as("vec_id"))
       .distinct()
-    rows.join(dropped.withColumn("d", lit(true)), Seq("vec_id"), "left")
+    flagDropped(rows, dropped)
+  }
+
+  /** One row per vector of `rows` — `(vec_id, cell, centroid_cos,
+    * dropped)` — with `dropped` true iff its `vec_id` is in `dropped`:
+    * the output of every `semanticDedup*` operator.
+    */
+  private def flagDropped(rows: DataFrame, dropped: DataFrame): DataFrame =
+    rows.select(col("vec_id"), col("cell"), col("centroid_cos"))
+      .join(dropped.withColumn("d", lit(true)), Seq("vec_id"), "left")
       .select(col("vec_id"), col("cell"), col("centroid_cos"),
         coalesce(col("d"), lit(false)).as("dropped"))
-  }
 
   /** Block-hash ARTIFACT of the existing corpus for [[spanDedupIncremental]]:
     * the distinct md5s of its [[spanTokens]]-token blocks, eagerly
@@ -1386,11 +1379,9 @@ object Dedup {
     val postings = g.select(explode(col("grams")).as("shingle"), col("doc_id"))
       .groupBy("shingle")
       .agg(array_sort(collect_list(col("doc_id"))).as("ids"))
-    val shared = observeCapDrops(postings, "containment", size(col("ids")), containmentMaxDf)
-      .filter(size(col("ids")) > 1 && size(col("ids")) <= containmentMaxDf)
-      .select(col("ids"), posexplode(col("ids")).as(Seq("i", "a_id")))
-      .select(col("a_id"), explode(expr("slice(ids, i + 2, size(ids))")).as("b_id"))
-      .groupBy("a_id", "b_id").agg(count(lit(1)).as("n_shared"))
+    val shared = streamedPairs(postings, "ids", "containment", containmentMaxDf)
+      .groupBy("a", "b").agg(count(lit(1)).as("n_shared"))
+      .toDF("a_id", "b_id", "n_shared")
     shared
       .join(sizes.select(col("doc_id").as("a_id"), col("n_grams").as("na")), Seq("a_id"))
       .join(sizes.select(col("doc_id").as("b_id"), col("n_grams").as("nb")), Seq("b_id"))

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.spark.VectorFunctions.vecDot
 
 /** Approximate-nearest-neighbor search over the `embeddings` table
   * (`embedding: array<float>[64]`).
@@ -18,6 +19,12 @@ import org.apache.spark.sql.expressions.Window
   * Hyperplane signs are a deterministic arithmetic pattern (not RNG — keeps
   * the DuckDB oracle twin exact): sign(plane j, dim n[1-based]) =
   * +1 if (n * (j + 3)) % 7 <= 3 else -1.
+  *
+  * Known defect, kept because the oracle twin (`duckPlaneDot`) generates
+  * the same family: the pattern has period 7 in j, so with [[planes]] = 8
+  * plane 7 equals plane 0 on all 64 dims. Bit 7 of every [[lshBuckets]]
+  * bucket copies bit 0, and only 128 of the 256 bucket values occur.
+  * ([[Dedup.nearDupSign]] is the mixer-generated matrix without this flaw.)
   */
 object Similarity {
 
@@ -39,7 +46,7 @@ object Similarity {
     */
   private def planeDot(j: Int): Column = {
     val signs = (1 to dims).map(n => if ((n * (j + 3)) % 7 <= 3) 1d else -1d)
-    graft.spark.VectorFunctions.vecDot(col("embedding"), typedlit(signs))
+    vecDot(col("embedding"), typedlit(signs))
   }
 
   /** Assign every vector to its LSH bucket (bit j = plane-j dot > 0). */
@@ -51,20 +58,54 @@ object Similarity {
       bits.reduce(_ + _).cast("int").as("bucket"))
   }
 
+  /** The rounded cosine every similarity and semantic-dedup operator ranks
+    * and thresholds: `round(dot / sqrt(na * nb), 6)` from a dot product and
+    * the two squared norms, in the DuckDB twins' op order. Dots run through
+    * the native [[graft.spark.VecDot]], which keeps the sequential
+    * float-summation order of `aggregate(zip_with(...))`, so the twins stay
+    * bit-identical.
+    */
+  private[graft] def roundedCos(dot: Column, na: Column, nb: Column): Column =
+    round(dot / sqrt(na * nb), 6)
+
+  /** [[roundedCos]] between two array columns. */
+  private def vecCos(a: Column, b: Column): Column =
+    roundedCos(vecDot(a, b), vecDot(a, a), vecDot(b, b))
+
+  /** The `k` best-ranked `neighbor_id`s per `query_id` of a scored
+    * `(query_id, neighbor_id, <score>)` table, as `(query_id, rank,
+    * neighbor_id, <score>)`: `order` is `_.desc` for a similarity (cosine)
+    * and `_.asc` for a distance; the smaller `neighbor_id` wins ties.
+    */
+  private def topK(scored: DataFrame, k: Int, score: String,
+      order: Column => Column): DataFrame = {
+    val w = Window.partitionBy(col("query_id"))
+      .orderBy(order(col(score)), col("neighbor_id").asc)
+    scored.withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= k)
+      .select(col("query_id"), col("rank").cast("int").as("rank"),
+        col("neighbor_id"), col(score))
+  }
+
+  /** Cosine-scored candidates `(query_id, neighbor_id, cos)`: every vector
+    * of `c` sharing the `key` column (an IVF cell or LSH bucket) with a
+    * query of `q`, the query itself excluded — one equi-join on `key`.
+    */
+  private def keyedCandidates(q: DataFrame, c: DataFrame, key: String): DataFrame =
+    q.select(col("vec_id").as("query_id"), col("embedding").as("qe"), col(key))
+      .join(c.select(col("vec_id").as("neighbor_id"), col("embedding").as("ce"), col(key)),
+        Seq(key))
+      .filter(col("neighbor_id") =!= col("query_id"))
+      .select(col("query_id"), col("neighbor_id"), vecCos(col("qe"), col("ce")).as("cos"))
+
   /** Exact cosine top-k for a small query set (vec_id < nQueries). */
   def bruteForceTopK(emb: DataFrame, nQueries: Int = annQueries, k: Int = 5): DataFrame = {
     val q = emb.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
     val c = emb.select(col("vec_id").as("neighbor_id"), col("embedding").as("ce"))
     val scored = q.join(broadcast(c), col("neighbor_id") =!= col("query_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        round(Dedup.cosineExpr(col("qe"), col("ce")), 6).as("cos"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank").cast("int").as("rank"),
-        col("neighbor_id"), col("cos"))
+      .select(col("query_id"), col("neighbor_id"), vecCos(col("qe"), col("ce")).as("cos"))
+    topK(scored, k, "cos", _.desc)
   }
 
   /** IVF coarse quantizer: the first [[ivfCells]] vectors (by vec_id) are
@@ -108,16 +149,14 @@ object Similarity {
       .sortBy(_._1)
   }
 
-  /** The shared map-side scoring machinery: per-cell cosine array + the
-    * centroid-id lookup array, from an already-collected centroid table.
-    * Same op order as Dedup.cosineExpr / the DuckDB twin:
-    * round(dot / sqrt(na * nb), 6); nb folds sequentially like `aggregate`.
+  /** The shared map-side scoring machinery: per-cell [[roundedCos]] array +
+    * the centroid-id lookup array, from an already-collected centroid
+    * table; nb folds sequentially like `aggregate`.
     */
   private def cellScores(cents: Array[(Long, Array[Double])]): (DataFrame => DataFrame, Column) = {
-    import graft.spark.VectorFunctions.vecDot
     val scores = cents.map { case (_, ce) =>
       val nb = ce.foldLeft(0d)((acc, x) => acc + x * x)
-      round(vecDot(col("embedding"), typedlit(ce.toSeq)) / sqrt(col("na") * lit(nb)), 6)
+      roundedCos(vecDot(col("embedding"), typedlit(ce.toSeq)), col("na"), lit(nb))
     }
     val withScores = (emb: DataFrame) =>
       emb.select(col("vec_id"), col("embedding"))
@@ -125,6 +164,12 @@ object Similarity {
         .withColumn("ccos_arr", array(scores.toIndexedSeq: _*))
     (withScores, typedlit(cents.map(_._1).toSeq))
   }
+
+  /** 1-based position of the largest entry of `arr` (nulls skipped); the
+    * first occurrence wins, i.e. the lowest centroid id.
+    */
+  private def argmax(arr: Column): Column =
+    array_position(arr, array_max(arr)).cast("int")
 
   def ivfAssign(emb: DataFrame): DataFrame = ivfAssignWith(emb, collectCentroids(emb))
 
@@ -140,9 +185,7 @@ object Similarity {
     val (withScores, ids) = cellScores(cents)
     withScores(emb)
       .select(col("vec_id"), col("embedding"),
-        element_at(ids,
-          array_position(col("ccos_arr"), array_max(col("ccos_arr"))).cast("int"))
-          .as("cell"))
+        element_at(ids, argmax(col("ccos_arr"))).as("cell"))
   }
 
   /** [[ivfAssignWith]] plus the assigned cell's centroid cosine and the
@@ -156,9 +199,7 @@ object Similarity {
     val (withScores, ids) = cellScores(cents)
     withScores(emb).select(
       col("vec_id"), col("embedding"), col("na"),
-      element_at(ids,
-        array_position(col("ccos_arr"), array_max(col("ccos_arr"))).cast("int"))
-        .as("cell"),
+      element_at(ids, argmax(col("ccos_arr"))).as("cell"),
       array_max(col("ccos_arr")).as("centroid_cos"))
   }
 
@@ -172,14 +213,12 @@ object Similarity {
   def ivfAssignProbe2With(emb: DataFrame, cents: Array[(Long, Array[Double])]): DataFrame = {
     val (withScores, ids) = cellScores(cents)
     withScores(emb)
-      .withColumn("i1",
-        array_position(col("ccos_arr"), array_max(col("ccos_arr"))))
+      .withColumn("i1", argmax(col("ccos_arr")))
       .withColumn("arr2",
         expr("transform(ccos_arr, (x, i) -> IF(i + 1 = i1, CAST(NULL AS DOUBLE), x))"))
-      .withColumn("i2", array_position(col("arr2"), array_max(col("arr2"))))
       .select(col("vec_id"), col("embedding"),
-        element_at(ids, col("i1").cast("int")).as("cell1"),
-        element_at(ids, col("i2").cast("int")).as("cell2"))
+        element_at(ids, col("i1")).as("cell1"),
+        element_at(ids, argmax(col("arr2"))).as("cell2"))
   }
 
   /** IVF top-k with nprobe=2: candidates keep their single home cell, each
@@ -200,43 +239,19 @@ object Similarity {
     */
   private def ivfTopKProbe2From(
       assigned: DataFrame, probes: DataFrame, nQueries: Int, k: Int): DataFrame = {
-    val c = assigned.select(col("vec_id").as("neighbor_id"),
-      col("embedding").as("ce"), col("cell"))
     val q = probes.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
+      .select(col("vec_id"), col("embedding"),
         explode(array(col("cell1"), col("cell2"))).as("cell"))
-    val scored = q.join(c, Seq("cell"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        round(Dedup.cosineExpr(col("qe"), col("ce")), 6).as("cos"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank").cast("int").as("rank"),
-        col("neighbor_id"), col("cos"))
+    topK(keyedCandidates(q, assigned, "cell"), k, "cos", _.desc)
   }
 
   /** IVF top-k: candidates restricted to the query's cell (nprobe=1). */
   def ivfTopK(emb: DataFrame, nQueries: Int = annQueries, k: Int = annK): DataFrame =
     ivfTopKFrom(ivfAssign(emb), nQueries, k)
 
-  private def ivfTopKFrom(assigned: DataFrame, nQueries: Int, k: Int): DataFrame = {
-    val q = assigned.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"), col("cell"))
-    val c = assigned.select(col("vec_id").as("neighbor_id"), col("embedding").as("ce"),
-      col("cell"))
-    val scored = q.join(c, Seq("cell"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        round(Dedup.cosineExpr(col("qe"), col("ce")), 6).as("cos"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank").cast("int").as("rank"),
-        col("neighbor_id"), col("cos"))
-  }
+  private def ivfTopKFrom(assigned: DataFrame, nQueries: Int, k: Int): DataFrame =
+    topK(keyedCandidates(assigned.filter(col("vec_id") < nQueries), assigned, "cell"),
+      k, "cos", _.desc)
 
   /** Recall@k of each ANN method against the exact brute-force top-k — the
     * measured form of the recall/cost dial the probing docs describe
@@ -285,7 +300,6 @@ object Similarity {
     * [[pqDistArr]] and the DuckDB twin op-for-op.
     */
   def exactL2TopK(emb: DataFrame): DataFrame = {
-    import graft.spark.VectorFunctions.vecDot
     val q = emb.filter(col("vec_id") < annQueries)
       .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
     val c = emb.select(col("vec_id").as("neighbor_id"), col("embedding").as("ce"))
@@ -293,11 +307,7 @@ object Similarity {
       .select(col("query_id"), col("neighbor_id"),
         ((vecDot(col("qe"), col("qe")) - lit(2.0) * vecDot(col("qe"), col("ce")))
           + vecDot(col("ce"), col("ce"))).as("l2"))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("l2"), col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= pqK)
-      .select(col("query_id"), col("rank").cast("int").as("rank"),
-        col("neighbor_id"), col("l2"))
+    topK(scored, pqK, "l2", _.asc)
   }
 
   /** Recall@k of ADC over PQ codes against the exact-L2 truth — the
@@ -513,7 +523,6 @@ object Similarity {
     * IS the correctness harness (same shape as [[bruteForceTopK]]).
     */
   def pqTopK(emb: DataFrame): DataFrame = {
-    import graft.spark.VectorFunctions.vecDot
     val cents = collectCentroids(emb)
     require(cents.length >= pqCodes,
       s"PQ codebook needs $pqCodes centroid vectors, got ${cents.length}")
@@ -527,12 +536,7 @@ object Similarity {
     }.reduceLeft(_ + _)
     val scored = enc.join(broadcast(q), col("neighbor_id") =!= col("query_id"))
       .select(col("query_id"), col("neighbor_id"), adist.as("adist"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("adist"), col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= pqK)
-      .select(col("query_id"), col("rank").cast("int").as("rank"),
-        col("neighbor_id"), col("adist"))
+    topK(scored, pqK, "adist", _.asc)
   }
 
   /** LSH-bucketed top-k: same ranking but candidates restricted to the
@@ -540,19 +544,6 @@ object Similarity {
     */
   def lshTopK(emb: DataFrame, nQueries: Int = annQueries, k: Int = annK): DataFrame = {
     val b = lshBuckets(emb)
-    val q = b.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"), col("bucket"))
-    val c = b.select(col("vec_id").as("neighbor_id"), col("embedding").as("ce"),
-      col("bucket"))
-    val scored = q.join(c, Seq("bucket"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        round(Dedup.cosineExpr(col("qe"), col("ce")), 6).as("cos"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank").cast("int").as("rank"),
-        col("neighbor_id"), col("cos"))
+    topK(keyedCandidates(b.filter(col("vec_id") < nQueries), b, "bucket"), k, "cos", _.desc)
   }
 }

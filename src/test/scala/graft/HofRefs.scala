@@ -59,6 +59,42 @@ object HofRefs {
          |              ${TextAnalysis.classifierBuckets}) AS INT) + 1))""".stripMargin)
   }
 
+  /** Twin of `lang_scores4`: the four `TextAnalysis.langScores` columns
+    * as one array. On NULL text every score is NULL (the
+    * [[langPredictedHof]] difference), while the native kernel gives NULL.
+    */
+  def langScores4Hof: Column = array(TextAnalysis.langScores.map(_._2): _*)
+
+  /** Twin of `winnow_fps` with the `Dedup.windowTokens`/`windowStride`
+    * geometry: `df` plus a `wfps_hof` column — the md5 of every window of
+    * the single-space split, then the distinct minima of each stride of
+    * consecutive windows, in first-occurrence order. Fewer tokens than one
+    * window give an empty array, NULL text NULL.
+    */
+  def withWinnowFpsHof(df: DataFrame): DataFrame = {
+    val (w, s) = (Dedup.windowTokens, Dedup.windowStride)
+    df.withColumn("toks", split(col("text"), " "))
+      // IF keeps the window sequence (and slice at index 0) off short texts
+      .withColumn("wfps", expr(
+        s"""IF(size(toks) >= $w,
+           |  transform(sequence(0, size(toks) - $w),
+           |    i -> md5(concat_ws(' ', slice(toks, i + 1, $w)))),
+           |  array())""".stripMargin))
+      .withColumn("wfps_hof", when(col("text").isNull, lit(null))
+        .when(size(col("wfps")) > 0, expr(
+          s"""array_distinct(transform(sequence(1, greatest(size(wfps) - ${s - 1}, 1)),
+             |  i -> array_min(slice(wfps, i, $s))))""".stripMargin))
+        .otherwise(col("wfps")))
+      .drop("toks", "wfps")
+  }
+
+  /** Twin of `text_char_pairs`: every adjacent two-code-point pair of every
+    * single-space token of length >= 2, in token then position order.
+    */
+  def textCharPairsHof: Column =
+    flatten(transform(filter(split(col("text"), " "), w => length(w) >= 2),
+      w => transform(sequence(lit(1), length(w) - 1), i => w.substr(i, lit(2)))))
+
   /** Twin of `Dedup.simhash` (`simhash16`): one md5 `transform` plus one
     * `filter` traversal per signature bit.
     */

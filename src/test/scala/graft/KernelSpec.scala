@@ -7,6 +7,7 @@ import org.apache.spark.sql.GraftColumnBridge
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.expressions.Alias
 import org.apache.spark.sql.catalyst.plans.logical.Project
+import org.apache.spark.sql.execution.streaming.state.StateStore
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -33,7 +34,10 @@ class KernelSpec extends AnyFunSuite with BeforeAndAfterAll {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  override def afterAll(): Unit = spark.stop()
+  // state-store providers a streaming query loaded keep a JVM-wide
+  // maintenance thread polling this session's coordinator after it stops;
+  // unloading them ends it
+  override def afterAll(): Unit = try spark.stop() finally StateStore.stop()
 
   private val pua = TextAnalysis.bpeSymbol(1)
 

@@ -4,6 +4,7 @@ import graft.operators.{Dedup, Multimodal, Similarity}
 import graft.spark.{ExtractPipeline, Lineage, Transcripts}
 import graft.streaming.{OneShot, StreamPipeline}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.streaming.state.StateStore
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -33,7 +34,10 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       .getOrCreate()
   }
 
-  override def afterAll(): Unit = spark.stop()
+  // state-store providers a streaming query loaded keep a JVM-wide
+  // maintenance thread polling this session's coordinator after it stops;
+  // unloading them ends it
+  override def afterAll(): Unit = try spark.stop() finally StateStore.stop()
 
   private def tmpDir(prefix: String): String = graft.spark.TmpDirs.create(prefix)
 
@@ -1393,7 +1397,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     // ~50M structs in a single row, an executor-OOM cliff
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
     for (df <- Seq(Dedup.minhashBands(doc), Dedup.windowDupPairs(doc),
-        Dedup.embeddingNearDup(emb))) {
+        Dedup.embeddingNearDup(emb), Dedup.semanticDedup(emb), Dedup.containmentPairs(doc))) {
       val plan = df.queryExecution.optimizedPlan.toString
       assert(!plan.contains("flatten("), s"flattened pair array in plan:\n$plan")
     }
@@ -2178,24 +2182,11 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     import graft.operators.Dedup
     val w = Dedup.windowTokens
     val s = Dedup.windowStride
-    val hof = Transcripts.documents(spark, sfDir)
-      .select(col("doc_id"), split(col("text"), " ").as("toks"))
-      .filter(size(col("toks")) >= w)
-      .select(col("doc_id"), expr(
-        s"""transform(sequence(0, size(toks) - $w),
-           |  i -> md5(concat_ws(' ', slice(toks, i + 1, $w))))""".stripMargin)
-        .as("wfps"))
-      .select(col("doc_id"), expr(
-        s"""array_distinct(transform(
-           |  sequence(1, greatest(size(wfps) - ${s - 1}, 1)),
-           |  i -> array_min(slice(wfps, i, $s))))""".stripMargin).as("hof"))
-    val native = Transcripts.documents(spark, sfDir)
-      .select(col("doc_id"),
-        graft.spark.HashFunctions.winnowFps(col("text"), w, s).as("native"))
+    val both = Transcripts.documents(spark, sfDir)
+      .select(col("text"), graft.spark.HashFunctions.winnowFps(col("text"), w, s).as("native"))
+      .transform(HofRefs.withWinnowFpsHof)
     // element order matters (first-occurrence distinct) — compare arrays
-    val joined = native.join(hof, Seq("doc_id"), "left")
-    assert(joined.filter(col("hof").isNull && size(col("native")) =!= 0).count() == 0)
-    assert(joined.filter(col("hof").isNotNull && col("native") =!= col("hof")).count() == 0)
+    assert(both.filter(!(col("native") <=> col("wfps_hof"))).count() == 0)
     // short docs (< W tokens) yield an empty array; < W+S-1 tokens still
     // select exactly one (their minimum) fingerprint
     import spark.implicits._
@@ -2230,12 +2221,21 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       graft.spark.HashFunctions.tokenSetCount(col("text"), TextAnalysis.blockedTerms).as("tsc"),
       HofRefs.blockedTermCountHof.as("tsc_hof"),
       graft.spark.HashFunctions.classifierScore(col("text"), weights).cast("int").as("cs"),
-      HofRefs.classifierScoreExprHof.cast("int").as("cs_hof")).collect().toSeq
+      HofRefs.classifierScoreExprHof.cast("int").as("cs_hof"),
+      graft.spark.HashFunctions.langScores4(col("text")).as("ls4"),
+      HofRefs.langScores4Hof.as("ls4_hof"),
+      graft.spark.HashFunctions.textCharPairs(col("text")).as("tcp"),
+      HofRefs.textCharPairsHof.as("tcp_hof"),
+      graft.spark.HashFunctions.winnowFps(col("text"), Dedup.windowTokens, Dedup.windowStride)
+        .as("winnow"))
+      .transform(HofRefs.withWinnowFpsHof).collect().toSeq
     assert(rows.count(_.isNullAt(0)) > 0 && rows.map(_.getString(1)).distinct.size > 2 &&
-      rows.exists(r => !r.isNullAt(3) && r.getInt(3) > 0), "the batch covers NULL, languages, terms")
-    for ((native, twin) <- Seq(1 -> 2, 3 -> 4, 5 -> 6)) {
-      // NULL text: lang_predict's known difference (HofRefs), NULL == NULL otherwise
-      val diff = rows.filter(r => !r.isNullAt(0) || native != 1)
+      rows.exists(r => !r.isNullAt(3) && r.getInt(3) > 0) &&
+      rows.exists(r => !r.isNullAt(11) && r.getSeq[String](11).size > 1),
+      "the batch covers NULL, languages, terms, several winnowed windows")
+    for ((native, twin) <- Seq(1 -> 2, 3 -> 4, 5 -> 6, 7 -> 8, 9 -> 10, 11 -> 12)) {
+      // NULL text: the lang twins' known difference (HofRefs), NULL == NULL otherwise
+      val diff = rows.filter(r => !r.isNullAt(0) || !Set(1, 7)(native))
         .filter(r => r.get(native) != r.get(twin))
       assert(diff.isEmpty, s"${rows.head.schema(native).name}: ${diff.take(3)}")
     }
@@ -2257,18 +2257,10 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
         .cast("int").as("native"),
       HofRefs.classifierScoreExprHof.cast("int").as("hof"))
     assert(cs.filter(col("native") =!= col("hof")).count() == 0)
-    // text_char_pairs vs the two-generate HOF multiset (count per pair)
-    val hofPairs = d.select(explode(split(col("text"), " ")).as("w"))
-      .filter(length(col("w")) >= 2)
-      .select(explode(expr(
-        "transform(sequence(1, length(w) - 1), i -> substring(w, i, 2))")).as("pair"))
-      .groupBy("pair").agg(count(lit(1)).as("n_hof"))
-    val natPairs = d.select(
-        explode(graft.spark.HashFunctions.textCharPairs(col("text"))).as("pair"))
-      .groupBy("pair").agg(count(lit(1)).as("n_nat"))
-    val cmp = natPairs.join(hofPairs, Seq("pair"), "full_outer")
-    assert(cmp.filter(col("n_nat").isNull || col("n_hof").isNull
-      || col("n_nat") =!= col("n_hof")).count() == 0)
+    // text_char_pairs vs its HOF twin, pair order included
+    val pairs = d.select(graft.spark.HashFunctions.textCharPairs(col("text")).as("native"),
+      HofRefs.textCharPairsHof.as("hof"))
+    assert(pairs.filter(!(col("native") <=> col("hof"))).count() == 0)
     // multi-code-point stepping: a PUA merge symbol pairs like any BMP char
     import spark.implicits._
     val pua = TextAnalysis.bpeSymbol(1)
@@ -2696,7 +2688,8 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("dedup: degenerate-block cap drops are observable (graft_caps_* metrics)") {
-    // the caps (minhashMaxBucket / simhashMaxBlock / nearDupMaxBucket) are
+    // the caps (minhashMaxBucket, windowMaxBucket, simhashMaxBlock,
+    // nearDupMaxBucket, semanticMaxCell, containmentMaxDf) are
     // unreachable at test scale, so the contract to pin is OBSERVABILITY:
     // every capped operator publishes a graft_caps_* observed metric
     // (dropped_blocks, max_block) that a listener can read at runtime —
@@ -2716,16 +2709,25 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       Dedup.registerCapLogger(spark) // the production warn-logger co-exists
       val doc = Transcripts.documents(spark, sfDir)
       val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
+      val vecs = emb.select(col("vec_id"),
+        expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("embedding"))
       Dedup.minhashBands(doc).count()
+      Dedup.windowDupPairs(doc).count()
       Dedup.simhashPairs(doc).count()
       Dedup.embeddingNearDup(emb).count()
-      // QueryExecutionListener delivery is async — poll until the three
-      // operator families have reported
+      Dedup.containmentPairs(doc).count()
+      // a bare count() of the semantic reports prunes the pair side: the
+      // left join onto distinct dropped ids cannot change the row count
+      Dedup.semanticDedup(emb).filter(col("dropped")).count()
+      Dedup.semanticDedupIncremental(vecs, vecs).filter(col("dropped")).count()
+      // QueryExecutionListener delivery is async — poll until every
+      // operator family has reported
+      val all = Set("minhash", "windowfp", "simhash", "neardup", "semdedup", "containment",
+        "semincr")
       val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-      def families = Set("minhash", "simhash", "neardup")
-        .filter(fam => seen.keys.exists(_.startsWith(s"graft_caps_$fam")))
-      while (families.size < 3 && System.nanoTime() < deadline) Thread.sleep(50)
-      assert(families.size == 3, s"metrics seen: ${seen.keys}")
+      def families = all.filter(fam => seen.keys.exists(_.startsWith(s"graft_caps_${fam}_")))
+      while (families != all && System.nanoTime() < deadline) Thread.sleep(50)
+      assert(families == all, s"metrics seen: ${seen.keys}")
       // nothing dropped at this scale, and the gauge saw real blocks
       assert(seen.values.forall(_._1 == 0L), s"unexpected drops: $seen")
       assert(seen.values.exists(_._2 >= 2L), s"max_block never measured: $seen")
