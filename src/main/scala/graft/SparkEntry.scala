@@ -1017,8 +1017,8 @@ object SparkEntry {
         |FROM documents ORDER BY doc_id""".stripMargin),
 
     // SQL surface: the per-turn kernel through its registered SQL functions
-    // (two field reads of one ExtractTextKernel call, codegen'd as a static
-    // call — no UDF). Same per-turn semantics as the pipeline, driven
+    // (two field reads of one ExtractTextKernel run(normalize(...)), codegen'd
+    // as static calls — no UDF). Same per-turn semantics as the pipeline, driven
     // entirely from SQL.
     Query("sql_extract_text", (s, dir) => {
         graft.spark.GraftExtensions.register(s)

@@ -36,7 +36,10 @@ object Engines {
       configVars: Map[String, String],
       psm: String,
       lang: String
-  )
+  ) {
+    /** The one config var the analog reads; "" when unset. */
+    def whitelist: String = configVars.getOrElse("tessedit_char_whitelist", "")
+  }
 
   /** Arg parsing with the reference's exact lazy-validation semantics and
     * error strings (`/root/reference/tesseract_engine.go:22-74`): absent
@@ -87,39 +90,44 @@ object Engines {
     * `findOutfile` does, `tesseract_engine.go:236-250`).
     */
   def tesseract(bytes: Array[Byte], engineArgs: Option[Map[String, JVal]]): Either[String, EngineResult] =
-    parseTesseractArgs(engineArgs).flatMap { args =>
-      // psm must be a number 0..13 or tesseract itself rejects the flag
-      val psmNum: Either[String, Option[Int]] =
-        if (args.psm.isEmpty) Right(None)
-        else
-          args.psm.toIntOption match {
-            case Some(v) if v >= 0 && v <= 13 => Right(Some(v))
-            case _ => Left(s"tesseract failed: invalid psm value ${args.psm}")
+    parseTesseractArgs(engineArgs).flatMap(args => tesseract(bytes, args.psm, args.whitelist))
+
+  /** [[tesseract]] on validated args: only `psm` and the
+    * `tessedit_char_whitelist` config var ("" = no filter) shape the output.
+    */
+  def tesseract(bytes: Array[Byte], psm: String, whitelist: String): Either[String, EngineResult] = {
+    // psm must be a number 0..13 or tesseract itself rejects the flag
+    val psmNum: Either[String, Option[Int]] =
+      if (psm.isEmpty) Right(None)
+      else
+        psm.toIntOption match {
+          case Some(v) if v >= 0 && v <= 13 => Right(Some(v))
+          case _ => Left(s"tesseract failed: invalid psm value $psm")
+        }
+    psmNum.flatMap {
+      case Some(0) =>
+        // --psm 0 = orientation/script detection only: tesseract writes
+        // no .txt/.hocr/.json outfile -> findOutfile error
+        // (tesseract_engine.go:236-250)
+        Left("Could not find outfile.  Basename: <tmp> Extensions: [txt hocr json]")
+      case psm =>
+        val text = Payload.utf8(bytes)
+        val separator = psm match {
+          case Some(6) | Some(13) => "\n" // single uniform block / raw line
+          case _                  => "\n\n"
+        }
+        val extracted =
+          if (Html.looksLikeHtml(text)) Html.extract(text, separator)
+          else Html.collapseWs(text)
+        val filtered =
+          if (whitelist.isEmpty) extracted
+          else {
+            val keep = whitelist.toSet
+            Html.collapseWs(extracted.filter(c => keep.contains(c) || c.isWhitespace || c == '\n'))
           }
-      psmNum.flatMap {
-        case Some(0) =>
-          // --psm 0 = orientation/script detection only: tesseract writes
-          // no .txt/.hocr/.json outfile -> findOutfile error
-          // (tesseract_engine.go:236-250)
-          Left("Could not find outfile.  Basename: <tmp> Extensions: [txt hocr json]")
-        case psm =>
-          val text = Payload.utf8(bytes)
-          val separator = psm match {
-            case Some(6) | Some(13) => "\n" // single uniform block / raw line
-            case _                  => "\n\n"
-          }
-          val extracted =
-            if (Html.looksLikeHtml(text)) Html.extract(text, separator)
-            else Html.collapseWs(text)
-          val filtered = args.configVars.get("tessedit_char_whitelist") match {
-            case Some(wl) if wl.nonEmpty =>
-              val keep = wl.toSet
-              Html.collapseWs(extracted.filter(c => keep.contains(c) || c.isWhitespace || c == '\n'))
-            case _ => extracted
-          }
-          Right(EngineResult(filtered, "done"))
-      }
+        Right(EngineResult(filtered, "done"))
     }
+  }
 
   // ----------------------------------------------------------------- sandwich
 
@@ -208,34 +216,53 @@ object Engines {
       config: CoreConfig,
       nanoTime: () => Long = System.nanoTime
   ): Either[String, EngineResult] = {
+    val args = parseSandwichArgs(engineArgs)
+    sandwich(bytes, args.left.getOrElse(null), args.map(_.ocrType).getOrElse(""),
+      args.exists(_.resultOptimize), timeOutSeconds, config, nanoTime)
+  }
+
+  /** [[sandwich]] on validated args: only `ocr_type` and `result_optimize`
+    * shape the output. `argsError` is the `engine_args` validation error
+    * (null when they are valid), raised where the reference raises it: after
+    * the empty-file and file-type checks.
+    */
+  def sandwich(
+      bytes: Array[Byte],
+      argsError: String,
+      ocrType: String,
+      resultOptimize: Boolean,
+      timeOutSeconds: Long,
+      config: CoreConfig,
+      nanoTime: () => Long
+  ): Either[String, EngineResult] = {
     if (bytes == null || bytes.isEmpty)
       return Left("EOF") // readFirstBytes on an empty file, sandwich_engine.go:169-176
-    if (Payload.detectFileType(bytes) == Payload.UNKNOWN)
+    val fileType = Payload.detectFileType(bytes)
+    if (fileType == Payload.UNKNOWN)
       return Left("file format not understood") // sandwich_engine.go:178-185
-    parseSandwichArgs(engineArgs).flatMap { args =>
-      val deadline = nanoTime() + timeOutSeconds * 1000000000L
-      val pdfBytes: Either[String, Array[Byte]] =
-        if (Payload.detectFileType(bytes) == Payload.TIFF) tiffToPdf(bytes, config.t2pConverter)
-        else Right(bytes)
-      pdfBytes.flatMap { pdf =>
-        val ocrType = args.ocrType.toUpperCase
-        // pdfsandwich analog: layout parse under the request deadline
-        val parsed = Pdf.extractText(pdf)
-        if (nanoTime() > deadline) Left("command timed out")
-        else
-          parsed.flatMap { text =>
-            // the OCR layer is built only for the output types that carry it
-            val delivered: Either[String, Array[Byte]] = ocrType match {
-              case "TXT" => Right(Payload.bytes(text)) // pdftotext path, 455-471
-              case "COMBINEDPDF" =>
-                val combined = multistamp(pdf, Pdf.synthesize(text))
-                Right(if (args.resultOptimize) optimizePdf(combined) else combined)
-              case "OCRLAYERONLY" => Right(Pdf.synthesize(text))
-              case _              => Left("requested output format is not supported") // 471-476
-            }
-            delivered.map(b => EngineResult(Payload.encodeBase64(b), "done"))
+    if (argsError != null) return Left(argsError)
+    val deadline = nanoTime() + timeOutSeconds * 1000000000L
+    val pdfBytes: Either[String, Array[Byte]] =
+      if (fileType == Payload.TIFF) tiffToPdf(bytes, config.t2pConverter)
+      else Right(bytes)
+    pdfBytes.flatMap { pdf =>
+      val upper = ocrType.toUpperCase
+      // pdfsandwich analog: layout parse under the request deadline
+      val parsed = Pdf.extractText(pdf)
+      if (nanoTime() > deadline) Left("command timed out")
+      else
+        parsed.flatMap { text =>
+          // the OCR layer is built only for the output types that carry it
+          val delivered: Either[String, Array[Byte]] = upper match {
+            case "TXT" => Right(Payload.bytes(text)) // pdftotext path, 455-471
+            case "COMBINEDPDF" =>
+              val combined = multistamp(pdf, Pdf.synthesize(text))
+              Right(if (resultOptimize) optimizePdf(combined) else combined)
+            case "OCRLAYERONLY" => Right(Pdf.synthesize(text))
+            case _              => Left("requested output format is not supported") // 471-476
           }
-      }
+          delivered.map(b => EngineResult(Payload.encodeBase64(b), "done"))
+        }
     }
   }
 }

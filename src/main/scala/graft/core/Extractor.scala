@@ -2,13 +2,23 @@ package graft.core
 
 import graft.model._
 
-/** The fused per-turn extraction kernel: payload acquisition -> preprocessor
-  * chain (reverse list order) -> engine dispatch -> worker-style result
-  * wrapping. This is the whole reference request lifecycle
-  * (`/root/reference/ocr_rpc_client.go:43-195` +
-  * `/root/reference/ocr_rpc_worker.go:165-247`) collapsed into one pure
-  * function, so Spark can call it from one narrow whole-stage-codegen
-  * projection (`graft.spark.ExtractTextKernel`) with no per-hop shuffle.
+/** The per-turn extraction kernel, split where the reference splits it:
+  * at the work queue.
+  *
+  *  - [[normalize]] is the reference's steps 1-3, everything before the
+  *    publish: the HTTP handler decodes the request JSON
+  *    (`/root/reference/ocr_http_handler.go:75-84`), the RPC client clamps
+  *    the timeout (`ocr_rpc_client.go:87-89`) and turns the url/base64/bytes
+  *    payload into bytes (`ocr_rpc_client.go:146-164`); here it also
+  *    validates the engine args the engine reads.
+  *  - [[run]] is steps 4-5, the workers behind the queue: the preprocessor
+  *    chain (`preprocessor_rpc_worker.go:239-295`) and the engine dispatch
+  *    with worker-style result wrapping (`ocr_rpc_worker.go:165-247`).
+  *
+  * Both are pure functions. `graft.spark.ExtractTextKernel` calls them as two
+  * whole-stage-codegen projections on either side of the salted repartition
+  * that stands in for the queue, so only the [[Normalized]] request crosses
+  * the shuffle. [[extractTurn]] is the two composed.
   */
 object Extractor {
 
@@ -52,52 +62,120 @@ object Extractor {
     else if (req.imgUrl.nonEmpty) Left("url payload acquisition is disabled (inline payloads only)")
     else Right(Payload.bytes(if (textColumn == null) "" else textColumn))
 
-  /** Run one request end-to-end. `textColumn` is the turn's `text` column —
-    * the default payload when the tool JSON carries no inline payload.
+  /** One request as it crosses the queue: decoded, with only what [[run]]
+    * reads. A turn that already failed (its tool JSON did not parse, or its
+    * payload could not be acquired) carries its final `error` text and
+    * nothing else.
+    *
+    * @param engine the engine; null when the request did not parse
+    * @param error the final error text of a turn that ended before the
+    *   queue, else null
+    * @param payload the payload bytes; empty when no later stage reads them
+    *   (no chain runs and the engine is neither tesseract nor sandwich)
+    * @param chain the preprocessor chain in list order (consumed from the
+    *   tail); Nil when none runs (`inplace_decode` skips it)
+    * @param darkOnLight the SWT argument, only with a chain, else null
+    * @param timeOut the clamped timeout in seconds
+    * @param argsError the `engine_args` validation error of a tesseract or
+    *   sandwich request, else null
+    * @param psm tesseract's `psm`, else null
+    * @param whitelist tesseract's `tessedit_char_whitelist`, else null
+    * @param ocrType sandwich's `ocr_type`, else null
+    * @param resultOptimize sandwich's `result_optimize`
     */
-  def extract(
-      req: ExtractRequest,
-      textColumn: String,
-      config: Engines.CoreConfig = Engines.CoreConfig()
-  ): ExtractResult = {
-    val engineName = req.engine.name
-    def err(msg: String): ExtractResult =
-      ExtractResult(req.id, wrapError(req.id, msg), "error", engineName)
+  final case class Normalized(
+      engine: Engine,
+      error: String,
+      payload: Array[Byte],
+      chain: List[String],
+      darkOnLight: String,
+      timeOut: Long,
+      argsError: String,
+      psm: String,
+      whitelist: String,
+      ocrType: String,
+      resultOptimize: Boolean)
 
-    acquirePayload(req, textColumn) match {
-      case Left(e) => err(e)
-      case Right(payload0) =>
+  private def failed(engine: Engine, error: String): Normalized =
+    Normalized(engine, error, Array.emptyByteArray, Nil, null, DefaultTimeoutSeconds,
+      null, null, null, null, resultOptimize = false)
+
+  /** Steps 1-3 for one turn: decode `tool` (a parse failure is final),
+    * acquire the payload (a failure is final), clamp the timeout and
+    * validate the engine args. `id` is the request id `conv_id#turn_idx`;
+    * `text` is the turn's `text` column, the payload when the tool JSON
+    * carries none.
+    */
+  def normalize(id: String, text: String, tool: String): Normalized =
+    RequestJson.parse(id, tool) match {
+      case Left(pe) => failed(null, wrapParseError(id, pe.message))
+      case Right(req) =>
+        val engine = req.engine
         // O24: inplace_decode runs the engine in-process — the preprocessor
         // chain is routed by the RPC client the inplace path never reaches
         // (`/root/reference/ocr_http_handler.go:115-128`), so it is skipped.
-        val chained =
-          if (req.inplaceDecode) Right(payload0)
-          else Preprocessors.runChain(req, payload0)
-        chained match {
-          case Left(e) => err(e)
-          case Right(payload) =>
-            val timeOut = clampTimeout(req.timeOut)
-            val result: Either[String, Engines.EngineResult] = req.engine match {
-              case Engine.Mock      => Engines.mock()
-              case Engine.Tesseract => Engines.tesseract(payload, req.engineArgs)
-              case Engine.Sandwich  => Engines.sandwich(payload, req.engineArgs, timeOut, config)
-              case Engine.GoTesseract =>
-                // NewOcrEngine returns nil for go_tesseract and the reference
-                // worker would nil-deref (ocr_engine.go:23-33); we emit an
-                // error row instead of crashing the executor.
-                Left("engine is not implemented: go_tesseract")
-              case Engine.Unsupported(n) =>
-                Left(s"engine is not implemented: $n")
-            }
-            result match {
-              case Left(e)  => err(e)
-              case Right(r) => ExtractResult(req.id, r.text, r.status, engineName)
+        val chain = if (req.inplaceDecode) Nil else req.preprocessorChain
+        val readsPayload = chain.nonEmpty || engine == Engine.Tesseract || engine == Engine.Sandwich
+        // an unread text payload is not encoded; a base64 one is still
+        // decoded, since its failure is the turn's result
+        acquirePayload(req, if (readsPayload) text else "") match {
+          case Left(e) => failed(engine, wrapError(id, e))
+          case Right(bytes) =>
+            val base = Normalized(engine, null,
+              if (readsPayload) bytes else Array.emptyByteArray, chain,
+              if (chain.isEmpty) null else Preprocessors.extractDarkOnLightParam(req),
+              clampTimeout(req.timeOut), null, null, null, null, resultOptimize = false)
+            engine match {
+              case Engine.Tesseract => Engines.parseTesseractArgs(req.engineArgs) match {
+                case Left(e)  => base.copy(argsError = e)
+                case Right(a) => base.copy(psm = a.psm, whitelist = a.whitelist)
+              }
+              case Engine.Sandwich => Engines.parseSandwichArgs(req.engineArgs) match {
+                case Left(e)  => base.copy(argsError = e)
+                case Right(a) => base.copy(ocrType = a.ocrType, resultOptimize = a.resultOptimize)
+              }
+              case _ => base
             }
         }
     }
-  }
 
-  /** Parse + extract one turn. */
+  /** Steps 4-5 for one normalized turn: the preprocessor chain (reverse list
+    * order), then the engine, each failure wrapped like the worker wraps it.
+    * Every error is raised where the reference raises it: the chain's first,
+    * then tesseract's args error, or sandwich's after its file checks.
+    */
+  def run(id: String, n: Normalized, config: Engines.CoreConfig = Engines.CoreConfig()): ExtractResult =
+    if (n.error != null) ExtractResult(id, n.error, "error", if (n.engine == null) "" else n.engine.name)
+    else {
+      val engineName = n.engine.name
+      val chained =
+        if (n.chain.isEmpty) Right(n.payload)
+        else Preprocessors.runChain(n.chain, n.darkOnLight, n.payload)
+      val result = chained.flatMap { payload =>
+        n.engine match {
+          case Engine.Mock => Engines.mock()
+          case Engine.Tesseract =>
+            if (n.argsError != null) Left(n.argsError)
+            else Engines.tesseract(payload, n.psm, n.whitelist)
+          case Engine.Sandwich =>
+            Engines.sandwich(payload, n.argsError, n.ocrType, n.resultOptimize, n.timeOut,
+              config, () => System.nanoTime)
+          case Engine.GoTesseract =>
+            // NewOcrEngine returns nil for go_tesseract and the reference
+            // worker would nil-deref (ocr_engine.go:23-33); we emit an
+            // error row instead of crashing the executor.
+            Left("engine is not implemented: go_tesseract")
+          case Engine.Unsupported(c) =>
+            Left(s"engine is not implemented: $c")
+        }
+      }
+      result match {
+        case Left(e)  => ExtractResult(id, wrapError(id, e), "error", engineName)
+        case Right(r) => ExtractResult(id, r.text, r.status, engineName)
+      }
+    }
+
+  /** Parse + extract one turn: [[run]] of [[normalize]]. */
   def extractTurn(
       convId: String,
       turnIdx: Int,
@@ -106,9 +184,6 @@ object Extractor {
       config: Engines.CoreConfig = Engines.CoreConfig()
   ): ExtractResult = {
     val id = s"$convId#$turnIdx"
-    RequestJson.parse(id, tool) match {
-      case Left(pe) => ExtractResult(id, wrapParseError(id, pe.message), "error", "")
-      case Right(req) => extract(req, text, config)
-    }
+    run(id, normalize(id, text, tool), config)
   }
 }

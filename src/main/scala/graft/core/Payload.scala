@@ -11,17 +11,16 @@ object Payload {
 
   /** Reference semantics exactly: `%PDF` -> PDF; `II*\0` or `MM\0*` -> TIFF;
     * else UNKNOWN; buffers of <=3 bytes are UNKNOWN (`len(buffer) > 3` guard).
+    * Only the first four bytes decide, read in place.
     */
-  def detectFileType(buffer: Array[Byte]): String = {
-    val b = if (buffer == null) Array.emptyByteArray else buffer.take(64)
-    if (b.length > 3 && b(0) == 0x25 && b(1) == 0x50 && b(2) == 0x44 && b(3) == 0x46) PDF
+  def detectFileType(b: Array[Byte]): String =
+    if (b == null || b.length <= 3) UNKNOWN
+    else if (b(0) == 0x25 && b(1) == 0x50 && b(2) == 0x44 && b(3) == 0x46) PDF
     else if (
-      b.length > 3 &&
-      ((b(0) == 0x49 && b(1) == 0x49 && b(2) == 0x2a && b(3) == 0x00) ||
-        (b(0) == 0x4d && b(1) == 0x4d && b(2) == 0x00 && b(3) == 0x2a))
+      (b(0) == 0x49 && b(1) == 0x49 && b(2) == 0x2a && b(3) == 0x00) ||
+      (b(0) == 0x4d && b(1) == 0x4d && b(2) == 0x00 && b(3) == 0x2a)
     ) TIFF
     else UNKNOWN
-  }
 
   def utf8(bytes: Array[Byte]): String =
     new String(bytes, java.nio.charset.StandardCharsets.UTF_8)

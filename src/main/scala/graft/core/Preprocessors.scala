@@ -10,8 +10,9 @@ import graft.model.{ExtractRequest, JVal}
   * element as the next routing key.
   *
   * In the reference every hop crosses the broker; here the whole chain is
-  * fused into the single per-turn kernel call (no per-hop shuffle — the hops exist
-  * only for horizontal scaling, which Spark partitions already give us).
+  * fused into `Extractor.run`, the per-turn call after the one queue
+  * shuffle (no per-hop shuffle — the hops exist only for horizontal
+  * scaling, which Spark partitions already give us).
   */
 object Preprocessors {
 
@@ -20,17 +21,23 @@ object Preprocessors {
   val ConvertPdf = "convert-pdf"
 
   /** Apply the full chain in reference order (reverse of list order). */
-  def runChain(req: ExtractRequest, bytes: Array[Byte]): Either[String, Array[Byte]] = {
-    // foldRight = tail-first consumption (ocr_request.go:34-38)
-    req.preprocessorChain.foldRight[Either[String, Array[Byte]]](Right(bytes)) {
-      (name, acc) => acc.flatMap(b => apply(name, req, b))
-    }
-  }
+  def runChain(req: ExtractRequest, bytes: Array[Byte]): Either[String, Array[Byte]] =
+    runChain(req.preprocessorChain, extractDarkOnLightParam(req), bytes)
 
-  def apply(name: String, req: ExtractRequest, bytes: Array[Byte]): Either[String, Array[Byte]] =
+  /** [[runChain]] on the decoded chain and its one argument, the SWT
+    * dark-on-light value.
+    */
+  def runChain(chain: List[String], darkOnLight: String,
+      bytes: Array[Byte]): Either[String, Array[Byte]] =
+    // foldRight = tail-first consumption (ocr_request.go:34-38)
+    chain.foldRight[Either[String, Array[Byte]]](Right(bytes)) {
+      (name, acc) => acc.flatMap(b => apply(name, darkOnLight, b))
+    }
+
+  def apply(name: String, darkOnLight: String, bytes: Array[Byte]): Either[String, Array[Byte]] =
     name match {
       case Identity             => Right(bytes) // preprocessor.go:13-17
-      case StrokeWidthTransform => Right(strokeWidthTransform(bytes, extractDarkOnLightParam(req)))
+      case StrokeWidthTransform => Right(strokeWidthTransform(bytes, darkOnLight))
       case ConvertPdf           => convertPdf(bytes)
       case other                => Left(s"unknown preprocessor: $other") // preprocessor_rpc_worker.go:35-38
     }

@@ -27,12 +27,17 @@ final case class Turn(
   * reference accepts verbatim at JSON-decode time (`ocr_engine.go:73-76`) and
   * then crashes on; we also surface it as `status=error`.
   */
-sealed trait Engine { def name: String }
+sealed trait Engine {
+  def name: String
+
+  /** The enum's int value: `Engine.fromInt(code)` is this engine. */
+  def code: Long
+}
 object Engine {
-  case object Tesseract extends Engine { val name = "tesseract" }
-  case object GoTesseract extends Engine { val name = "go_tesseract" }
-  case object Sandwich extends Engine { val name = "sandwich" }
-  case object Mock extends Engine { val name = "mock" }
+  case object Tesseract extends Engine { val name = "tesseract"; val code = 0L }
+  case object GoTesseract extends Engine { val name = "go_tesseract"; val code = 1L }
+  case object Sandwich extends Engine { val name = "sandwich"; val code = 2L }
+  case object Mock extends Engine { val name = "mock"; val code = 3L }
   final case class Unsupported(code: Long) extends Engine {
     val name = s"unsupported($code)"
   }
@@ -62,15 +67,19 @@ object Engine {
 }
 
 /** One extraction request — the analog of `OcrRequest`
-  * (`ocr_request.go:8-26`). The payload is `imgBase64` when set, else the
-  * turn's `text` column; `Extractor.acquirePayload` turns it into bytes
-  * before the preprocessor chain runs, as the reference client normalizes
-  * url/base64/bytes before enqueue (`ocr_rpc_client.go:146-164`).
+  * (`ocr_request.go:8-26`), as the HTTP handler decodes it (step 1,
+  * `ocr_http_handler.go:75-84`). `Extractor.normalize` turns it into the
+  * `Extractor.Normalized` request that crosses the queue (steps 2-3): the
+  * payload is `imgBase64` when set, else the turn's `text` column, and
+  * `Extractor.acquirePayload` turns it into bytes, as the reference client
+  * normalizes url/base64/bytes before enqueue (`ocr_rpc_client.go:146-164`).
   *
   * `engineArgs` / `preprocessorArgs` stay as raw JSON trees (rendered to a
   * small AST) because the reference validates them lazily *inside* each
-  * engine (`tesseract_engine.go:22-74`, `sandwich_engine.go:36-104`) and the
-  * error points must match. Reference fields no stage reads (`doc_type`,
+  * engine (`tesseract_engine.go:22-74`, `sandwich_engine.go:36-104`).
+  * `normalize` validates them before the queue but only records the error;
+  * `Extractor.run` (steps 4-5) raises it at the reference's error point.
+  * Reference fields no stage reads (`doc_type`,
   * whose priority is computed from the raw tool JSON, `deferred`,
   * `reply_to`, `page_number`, `user_agent`, `reference_id`) are not decoded.
   */

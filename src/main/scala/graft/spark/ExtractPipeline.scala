@@ -6,10 +6,16 @@ import org.apache.spark.sql.functions._
 
 /** The Spark-native extraction pipeline — the whole reference request
   * lifecycle (`/root/reference/ocr_rpc_client.go` + `ocr_rpc_worker.go` +
-  * the preprocessor workers) as ONE whole-stage-codegen projection:
+  * the preprocessor workers) as two whole-stage-codegen projections around
+  * one shuffle, split where the reference splits it, at the queue:
   *
-  *   scan -> salted repartition (replaces the RabbitMQ work queue, O16) ->
-  *   [[ExtractTextKernel]] (parse + chain + engine, O5-O15/O17) -> write (O18).
+  *   scan -> normalize ([[ExtractTextKernel]]: decode, timeout clamp,
+  *   payload, engine args) -> salted repartition (replaces the RabbitMQ work
+  *   queue, O16) -> run ([[ExtractTextKernel]]: chain + engine,
+  *   O5-O15/O17) -> write (O18).
+  *
+  * Only `(conv_id, turn_idx, salt, normalized request)` crosses the shuffle:
+  * the raw `text` and `tool` JSON stay in the scan stage.
   *
   * Scale design notes (100 TB / 10^12 turns):
   *   - The per-turn path is a NARROW map: exactly one shuffle (the salted
@@ -64,9 +70,13 @@ object ExtractPipeline {
     when(isHeavy, xxhash64(col("conv_id"), col("turn_idx")))
       .otherwise(xxhash64(col("conv_id")))
 
-  /** Run the extraction over a transcript-shaped DataFrame: one salted
-    * repartition on [[saltColumn]] (the reference's work queue, O16), then
-    * one [[ExtractTextKernel]] call per turn (a NULL `turn_idx` raises).
+  /** Run the extraction over a transcript-shaped DataFrame: one projection
+    * that normalizes each turn and computes its [[saltColumn]], one salted
+    * repartition (the reference's work queue, O16), then one
+    * [[ExtractTextKernel]] `run` per turn (a NULL `turn_idx` raises). The
+    * projection sits below the repartition on purpose: Catalyst does not
+    * prune columns through a `repartition(n, expr)`, so a column dropped
+    * after it would still be shuffled.
     *
     * O14 with an actual SCHEDULING effect (the reference publishes each
     * message with a priority 0-9 onto an `x-max-priority` queue so
@@ -74,6 +84,8 @@ object ExtractPipeline {
     * 294-340`): when `priorityOrdered` is true, rows are sorted within each
     * post-shuffle partition by descending doc_type priority before the
     * kernel runs, so high-priority work completes first inside every task.
+    * The priority is computed in the projection too, since `tool` does not
+    * cross the shuffle.
     * NO extra shuffle — `sortWithinPartitions` sorts the existing
     * distribution in place (plan-tested: still exactly one Exchange).
     * Cross-job preemption (the other half of queue priority) maps to Spark
@@ -90,21 +102,21 @@ object ExtractPipeline {
     val parts =
       if (numPartitions > 0) numPartitions
       else spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val prepared = transcripts
+    val prio =
+      if (!priorityOrdered) Nil
+      else Seq(graft.functions.GraftFunctions.priorityFor(
+        coalesce(get_json_object(col("tool"), "$.doc_type"), lit("")),
+        config.prioMap).as("prio"))
+    val queued = transcripts
       .select(col("conv_id"), col("turn_idx").cast("int").as("turn_idx"),
         col("text"), col("tool"))
-      .repartition(parts, saltColumn()) // O16: the only shuffle
-    val ordered =
-      if (!priorityOrdered) prepared
-      else {
-        val prio = graft.functions.GraftFunctions.priorityFor(
-          coalesce(get_json_object(col("tool"), "$.doc_type"), lit("")),
-          config.prioMap)
-        prepared.sortWithinPartitions(prio.desc)
-      }
+      .select(Seq(col("conv_id"), col("turn_idx"), saltColumn().as("salt"),
+        ExtractTextKernel.normalize(col("conv_id"), col("turn_idx"), col("text"), col("tool"))
+          .as("n")) ++ prio: _*)
+      .repartition(parts, col("salt")) // O16: the only shuffle
+    val ordered = if (priorityOrdered) queued.sortWithinPartitions(col("prio").desc) else queued
     ordered
-      .select(ExtractTextKernel(col("conv_id"), col("turn_idx"), col("text"), col("tool"),
-        config).as("r"))
+      .select(ExtractTextKernel.run(col("conv_id"), col("turn_idx"), col("n"), config).as("r"))
       .select("r.*")
       .as[Extracted]
   }

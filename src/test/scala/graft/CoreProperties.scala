@@ -311,6 +311,86 @@ object CoreProperties extends Properties("core") {
     if (u == null) "null" else u.getBytes.map(x => f"${x & 0xff}%02x").mkString("utf8[", " ", "]")
   }
 
+  /** A JSON string literal of arbitrary text. */
+  private def jsonStr(s: String): String = "\"" + augmentString(s).flatMap {
+    case '"'          => "\\\""
+    case '\\'         => "\\\\"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c            => c.toString
+  } + "\""
+
+  private val otherJson: Gen[String] = Gen.oneOf("null", "true", "false", "0", "-0", "1.50",
+    "7", "{}", "[]", "[1,\"a\"]", """{"k":"v"}""", "\"s\"")
+
+  /** Request fields, each with valid, invalid and wrongly typed values. */
+  private val requestFields: Seq[(String, Gen[String])] = {
+    val engine = Gen.frequency(
+      4 -> Gen.oneOf("tesseract", "TESSERACT", "Tesseract", "sandwich", "SandWich", "mock",
+        "MOCK", "go_tesseract", "Go_Tesseract", "unknown", "").map(jsonStr),
+      2 -> Gen.chooseNum(0, 5).map(_.toString),
+      1 -> Gen.oneOf("null", "true", "false", "{}", """{"a":1}""", "1.5", "[]"))
+    val stringy = Gen.frequency(
+      3 -> Gen.oneOf("6", "13", "0", "3", "14", "banana", "", "txt", "TXT", "combinedpdf",
+        "CombinedPDF", "ocrlayeronly", "bogus", "eng").map(jsonStr),
+      1 -> otherJson)
+    val configVars = Gen.frequency(
+      2 -> Gen.oneOf("abc ", "0123456789", "", "xyz\n", "pdf").map(w =>
+        s"""{"tessedit_char_whitelist":${jsonStr(w)}}"""),
+      1 -> otherJson.map(v => s"""{"tessedit_char_whitelist":"ab","k":$v}"""),
+      1 -> Gen.oneOf("{}", "null", "\"k=v\"", "3", "[]", """{"k":{"n":1}}"""))
+    val engineArgs = Gen.frequency(
+      4 -> (for {
+        psm <- Gen.option(stringy)
+        lang <- Gen.option(stringy)
+        ocrType <- Gen.option(stringy)
+        cv <- Gen.option(configVars)
+        optimize <- Gen.option(Gen.oneOf("true", "false", "null", "\"yes\"", "1"))
+      } yield Seq("psm" -> psm, "lang" -> lang, "ocr_type" -> ocrType, "config_vars" -> cv,
+        "result_optimize" -> optimize).collect { case (k, Some(v)) => s"${jsonStr(k)}:$v" }
+        .mkString("{", ",", "}")),
+      1 -> Gen.oneOf("null", "[]", "\"x\"", "3", "true"))
+    def b64(s: String) = Payload.encodeBase64(Payload.bytes(s))
+    val imgBase64 = Gen.frequency(
+      4 -> Gen.oneOf("", "!!!not-base64!!!", "YWJj\n", "YWJ",
+        Payload.encodeBase64(Pdf.synthesize("pdf body ab 12")),
+        b64("%PDF-1.4\nstream\nBT (lit \\101) Tj ET"), b64("%PDF"), b64("%PD"),
+        b64("II*\u0000tiff little ab"), b64("MM\u0000*tiff big ab"), b64("II*\u0000"),
+        b64("II*"), b64("plain garbage")),
+      1 -> Gen.listOf(Arbitrary.arbitrary[Byte]).map(bs => Payload.encodeBase64(bs.toArray)))
+    val preprocessors = Gen.frequency(
+      4 -> Gen.listOf(Gen.oneOf("identity", "stroke-width-transform", "convert-pdf", "bogus",
+        "IDENTITY")).map(_.take(4).map(jsonStr).mkString("[", ",", "]")),
+      1 -> Gen.oneOf("null", "\"identity\"", "{}", "[1, -0, 1.50, null]"))
+    Seq(
+      "engine" -> engine,
+      "engine_args" -> engineArgs,
+      "img_base64" -> imgBase64.map(jsonStr),
+      "img_url" -> Gen.oneOf("http://x/y.png", "").map(jsonStr),
+      "preprocessors" -> preprocessors,
+      "preprocessor-args" -> Gen.oneOf("{}", """{"stroke-width-transform":"0"}""",
+        """{"stroke-width-transform":"1"}""", """{"stroke-width-transform":5}""", "null", "[]"),
+      "inplace_decode" -> Gen.oneOf("true", "false", "\"true\"", "null"),
+      "time_out" -> Gen.oneOf("0", "-1", "60", "1099511627776", "1.5", "\"60\"", "null"),
+      "doc_type" -> Gen.oneOf("\"egov\"", "1"))
+  }
+
+  /** `tool` JSON: any subset of [[requestFields]] in any order, sometimes
+    * with a repeated key (the last one wins); or malformed, blank or not an
+    * object.
+    */
+  private val request: Gen[String] = {
+    val member = requestFields.map { case (k, g) => g.map(v => s"${jsonStr(k)}:$v") }
+    Gen.frequency(
+      10 -> (for {
+        present <- Gen.sequence[List[Option[String]], Option[String]](member.map(Gen.option(_)))
+        repeated <- Gen.option(Gen.oneOf(member).flatMap(identity))
+        seed <- Arbitrary.arbitrary[Long]
+      } yield (new scala.util.Random(seed).shuffle(present.flatten) ++ repeated)
+        .mkString("{", ",", "}")),
+      1 -> Gen.oneOf(null, "", "   ", """{"engine":"mock",""", "[1]", "\"str\"",
+        """{"engine": nope}"""))
+  }
+
   property("extraction kernel equals extractTurn on every field, chars counted in UTF-16") = {
     val value = Gen.frequency(1 -> Gen.const(null: String), 6 -> anyText)
     // text and tool also arrive as raw bytes, invalid UTF-8 included, bare
@@ -318,7 +398,8 @@ object CoreProperties extends Properties("core") {
     val raw = rawUtf8.map(UTF8String.fromBytes)
     val text = Gen.frequency(6 -> value.map(utf8), 2 -> raw)
     val tool = Gen.frequency(8 -> value.map(utf8), 2 -> Gen.oneOf("""{"engine":"mock"}""",
-      """{"engine":"tesseract"}""", """{"engine":"mock",""").map(utf8), 1 -> raw,
+      """{"engine":"tesseract"}""", """{"engine":"mock",""").map(utf8), 4 -> request.map(utf8),
+      1 -> raw,
       1 -> rawUtf8.map(bs => UTF8String.fromBytes(
         Payload.bytes("""{"engine":"mock","id":"""") ++ bs ++ Payload.bytes("\"}"))))
     forAll(value, Gen.chooseNum(0, 1000), text, tool) { (conv, idx, text, tl) =>
@@ -383,6 +464,22 @@ object CoreProperties extends Properties("core") {
     forAll(Gen.oneOf(pdfGen, anyText.map(t => Pdf.synthesize(t)))) { bs =>
       Pdf.extractText(bs) == CoreRefs.extractTextRef(bs)
     }
+
+  property("extractTurn (normalize, then run) equals the monolithic extractTurnRef") = {
+    val text = Gen.frequency(
+      3 -> anyText,
+      2 -> Gen.listOf(htmlPiece).map(_.mkString),
+      1 -> rawUtf8.map(bs => UTF8String.fromBytes(bs).toString),
+      1 -> Gen.const(null: String),
+      1 -> anyText.map(t => Payload.utf8(Pdf.synthesize(t))),
+      1 -> Gen.oneOf("II*\u0000tiff text", "MM\u0000*tiff text", "%PDF", ""))
+    val config = Gen.oneOf(Engines.CoreConfig(), Engines.CoreConfig(t2pConverter = "tiff2pdf"))
+    forAll(Gen.listOfN(5, Gen.zip(text, request, config))) { turns =>
+      turns.forall { case (text, tool, cfg) =>
+        Extractor.extractTurn("c", 1, text, tool, cfg) == CoreRefs.extractTurnRef("c", 1, text, tool, cfg)
+      }
+    }
+  }
 }
 
 /** Pure-Scala mirrors of columnar text kernels, shared by the ScalaCheck

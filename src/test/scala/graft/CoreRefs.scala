@@ -1,13 +1,14 @@
 package graft
 
-import graft.core.{Html, Payload, Pdf}
+import graft.core.{Engines, Extractor, Html, Payload, Pdf, Preprocessors}
+import graft.model.{Engine, ExtractResult, RequestJson}
 import scala.collection.mutable
 
-/** Reference twins of the per-character `graft.core` kernels: the
-  * straightforward forms (boxed `foreach`/`filter`/`map`, `substring` tag
-  * parsing, per-use block collapse) that the primitive-loop kernels
-  * replaced. `CoreProperties` checks each kernel against its twin on
-  * arbitrary input; nothing in `src/main` calls these.
+/** Reference twins of `graft.core` kernels: the straightforward forms
+  * (boxed `foreach`/`filter`/`map`, `substring` tag parsing, per-use block
+  * collapse, one monolithic per-turn function) that the primitive-loop and
+  * split kernels replaced. `CoreProperties` checks each kernel against its
+  * twin on arbitrary input; nothing in `src/main` calls these.
   */
 object CoreRefs {
 
@@ -319,5 +320,52 @@ object CoreRefs {
         }
       else cleaned
     Payload.bytes(out)
+  }
+
+  // ------------------------------------------------------ extraction
+
+  /** The per-turn kernel in one piece, as it was before it was split at the
+    * queue into `Extractor.normalize` and `Extractor.run`: parse, acquire the
+    * payload, run the chain (unless `inplace_decode`), then the engine with
+    * its `engine_args` validated inside it.
+    */
+  def extractTurnRef(
+      convId: String,
+      turnIdx: Int,
+      text: String,
+      tool: String,
+      config: Engines.CoreConfig = Engines.CoreConfig()
+  ): ExtractResult = {
+    val id = s"$convId#$turnIdx"
+    RequestJson.parse(id, tool) match {
+      case Left(pe) => ExtractResult(id, Extractor.wrapParseError(id, pe.message), "error", "")
+      case Right(req) =>
+        val engineName = req.engine.name
+        def err(msg: String): ExtractResult =
+          ExtractResult(req.id, Extractor.wrapError(req.id, msg), "error", engineName)
+        Extractor.acquirePayload(req, text) match {
+          case Left(e) => err(e)
+          case Right(payload0) =>
+            val chained =
+              if (req.inplaceDecode) Right(payload0)
+              else Preprocessors.runChain(req, payload0)
+            chained match {
+              case Left(e) => err(e)
+              case Right(payload) =>
+                val timeOut = Extractor.clampTimeout(req.timeOut)
+                val result: Either[String, Engines.EngineResult] = req.engine match {
+                  case Engine.Mock      => Engines.mock()
+                  case Engine.Tesseract => Engines.tesseract(payload, req.engineArgs)
+                  case Engine.Sandwich  => Engines.sandwich(payload, req.engineArgs, timeOut, config)
+                  case Engine.GoTesseract => Left("engine is not implemented: go_tesseract")
+                  case Engine.Unsupported(n) => Left(s"engine is not implemented: $n")
+                }
+                result match {
+                  case Left(e)  => err(e)
+                  case Right(r) => ExtractResult(req.id, r.text, r.status, engineName)
+                }
+            }
+        }
+    }
   }
 }

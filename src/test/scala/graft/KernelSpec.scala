@@ -4,7 +4,7 @@ import graft.operators.{Dedup, TextAnalysis}
 import graft.spark._
 import org.apache.spark.sql.{AnalysisException, Column, Row, SparkSession}
 import org.apache.spark.sql.GraftColumnBridge
-import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.Alias
 import org.apache.spark.sql.catalyst.plans.logical.Project
 import org.apache.spark.sql.execution.streaming.state.StateStore
@@ -15,7 +15,8 @@ import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** One table-driven check of every [[HashFunctions]] kernel: on NULL, empty,
+/** One table-driven check of every [[HashFunctions]] kernel and of the two
+  * [[ExtractTextKernel]] kernels: on NULL, empty,
   * multi-byte and private-use-area text plus a few sf0.01 documents, the
   * whole-stage-codegen run and the interpreted run (`StaticInvoke` finding
   * the kernel by reflection) must both equal a direct call to the kernel
@@ -74,11 +75,39 @@ class KernelSpec extends AnyFunSuite with BeforeAndAfterAll {
     s
   }
 
+  /** One extraction request per text: the text with one of these tools,
+    * covering parse, payload, chain and args failures and both engines
+    * that read the payload.
+    */
+  private val tools = Seq(null, """{"engine":"mock"}""",
+    s"""{"engine":"sandwich","img_base64":"${graft.core.Payload.encodeBase64(
+      graft.core.Pdf.synthesize(s"pdf héllo $pua"))}","engine_args":{"ocr_type":"txt"}}""",
+    """{"engine":"tesseract","preprocessors":["identity","stroke-width-transform"],""" +
+      """"preprocessor-args":{"stroke-width-transform":"0"},""" +
+      """"engine_args":{"psm":"6","config_vars":{"tessedit_char_whitelist":"abcHÉ "}}}""",
+    """{"engine":"mock",""", """{"engine":"tesseract","engine_args":{"psm":6}}""",
+    """{"engine":"sandwich","engine_args":{"ocr_type":1},"time_out":60}""")
+
+  private val config = graft.core.Engines.CoreConfig()
+
+  private def request(t: String, i: Int): Row =
+    Row(if (i == 1) null else s"c$i", i, t, tools(i % tools.size))
+
+  /** The request after [[ExtractTextKernel.normalize]], as `run` reads it. */
+  private def queued(t: String, i: Int): Row = {
+    val r = CatalystTypeConverters.convertToCatalyst(request(t, i)).asInstanceOf[InternalRow]
+    val n = ExtractTextKernel.normalize(r.getUTF8String(0), r.getInt(1), r.getUTF8String(2),
+      r.getUTF8String(3))
+    Row(request(t, i).get(0), i, CatalystTypeConverters.convertToScala(n,
+      ExtractTextKernel.normalizedType))
+  }
+
   private case class Case(kernel: GraftColumnBridge.StaticKernel, input: String,
       build: Column => Column, direct: Any => Any)
 
   private def text(f: UTF8String => Any): Any => Any = v => f(v.asInstanceOf[UTF8String])
   private def array(f: ArrayData => Any): Any => Any = v => f(v.asInstanceOf[ArrayData])
+  private def struct(f: InternalRow => Any): Any => Any = v => f(v.asInstanceOf[InternalRow])
 
   private val cases = {
     import HashFunctions._
@@ -106,7 +135,15 @@ class KernelSpec extends AnyFunSuite with BeforeAndAfterAll {
       Case(classifierScoreKernel, "text", classifierScore(_, weights),
         text(ClassifierScoreKernel.score(_,
           new scala.collection.immutable.ArraySeq.ofLong(weights.toArray)))),
-      Case(textCharPairsKernel, "text", textCharPairs, text(CharPairsKernel.pairs)))
+      Case(textCharPairsKernel, "text", textCharPairs, text(CharPairsKernel.pairs)),
+      Case(ExtractTextKernel.normalizeKernel, "req",
+        r => ExtractTextKernel.normalize(r("conv_id"), r("turn_idx"), r("text"), r("tool")),
+        struct(r => ExtractTextKernel.normalize(r.getUTF8String(0), r.getInt(1),
+          r.getUTF8String(2), r.getUTF8String(3)))),
+      Case(ExtractTextKernel.runKernel, "queued",
+        q => ExtractTextKernel.run(q("conv_id"), q("turn_idx"), q("n"), config),
+        struct(q => ExtractTextKernel.run(q.getUTF8String(0), q.getInt(1),
+          q.getStruct(2, ExtractTextKernel.normalizedType.size), config))))
   }
 
   /** Parquet-backed inputs: a local relation would be evaluated by the
@@ -118,8 +155,16 @@ class KernelSpec extends AnyFunSuite with BeforeAndAfterAll {
       StructField("text", StringType),
       StructField("grams", ArrayType(StringType)),
       StructField("ms", ArrayType(StructType(Seq(
-        StructField("doc_id", LongType), StructField("simhash", IntegerType)))))))
-    val rows = texts.zipWithIndex.map { case (t, i) => Row(i, t, grams(t), block(t)) }
+        StructField("doc_id", LongType), StructField("simhash", IntegerType))))),
+      StructField("req", StructType(Seq(StructField("conv_id", StringType),
+        StructField("turn_idx", IntegerType), StructField("text", StringType),
+        StructField("tool", StringType)))),
+      StructField("queued", StructType(Seq(StructField("conv_id", StringType),
+        StructField("turn_idx", IntegerType),
+        StructField("n", ExtractTextKernel.normalizedType))))))
+    val rows = texts.zipWithIndex.map { case (t, i) =>
+      Row(i, t, grams(t), block(t), request(t, i), queued(t, i))
+    }
     val dir = graft.spark.TmpDirs.create("graft_kernels_") + "/in"
     spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
       .write.parquet(dir)
@@ -153,7 +198,9 @@ class KernelSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("kernel table covers every declared kernel") {
-    assert(cases.map(_.kernel.name).sorted == HashFunctions.kernels.map(_.name).sorted)
+    val declared = HashFunctions.kernels ++
+      Seq(ExtractTextKernel.normalizeKernel, ExtractTextKernel.runKernel)
+    assert(cases.map(_.kernel.name).sorted == declared.map(_.name).sorted)
   }
 
   test("every kernel: codegen and interpreted runs equal a direct kernel call") {
@@ -251,12 +298,13 @@ class KernelSpec extends AnyFunSuite with BeforeAndAfterAll {
       .map(r => (r.getInt(0), r.getString(1), r.getString(2))).sortBy(_._1)
     val codegen = plan()
     assert(codegen.linesIterator.exists(l => l.contains("*(") &&
-      l.contains("graft.spark.ExtractTextKernel.turn(")), s"no codegen stage around the kernel in:\n$codegen")
-    // both fields read one subexpression-eliminated kernel call
+      l.contains("graft.spark.ExtractTextKernel.run(")), s"no codegen stage around the kernel in:\n$codegen")
+    // both fields read one subexpression-eliminated call of each kernel
     val generated = org.apache.spark.sql.execution.debug
       .codegenStringSeq(spark.sql(sql).queryExecution.executedPlan).map(_._2).mkString("\n")
-    assert("graft\\.spark\\.ExtractTextKernel\\.turn\\(".r.findAllMatchIn(generated).size == 1,
-      generated)
+    for (k <- Seq("normalize", "run"))
+      assert(s"graft\\.spark\\.ExtractTextKernel\\.$k\\(".r.findAllMatchIn(generated).size == 1,
+        generated)
     assert(run() == want, "codegen")
     val interpreted = withConf(
         "spark.sql.codegen.wholeStage" -> "false",

@@ -118,8 +118,32 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       .queryExecution.executedPlan.toString
     val exchange = plan.linesIterator.filter(_.contains("Exchange hashpartitioning")).toList
     assert(exchange.size == 1, s"plan:\n$plan")
-    assert(exchange.head.contains("octet_length("), exchange.head)
-    assert("\\blength\\(".r.findFirstIn(exchange.head).isEmpty, exchange.head)
+    // the Exchange hashes the salt; the projection below it computes it
+    val salt = plan.linesIterator.filter(_.contains(" AS salt#")).toList
+    assert(salt.size == 1, s"plan:\n$plan")
+    assert(salt.head.contains("octet_length("), salt.head)
+    assert("\\blength\\(".r.findFirstIn(salt.head).isEmpty, salt.head)
+  }
+
+  test("plan: the salted Exchange ships the normalized request, not text or tool") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    val t = Transcripts.fromDocuments(spark, sfDir)
+    // two priority classes, or the optimizer folds the priority to a
+    // constant and drops the sort
+    val cfg = graft.core.Engines.CoreConfig(prioMap = Map("standard" -> 1, "egov" -> 9))
+    for (priorityOrdered <- Seq(false, true)) {
+      val ds = ExtractPipeline.extract(spark, t, config = cfg, priorityOrdered = priorityOrdered)
+      ds.collect()
+      if (priorityOrdered) assert(ds.queryExecution.executedPlan.toString.contains("Sort"))
+      // the final (AQE) plan, after the action
+      val exchanges = new AdaptiveSparkPlanHelper {}
+        .collect(ds.queryExecution.executedPlan) { case e: ShuffleExchangeLike => e }
+      assert(exchanges.size == 1, ds.queryExecution.executedPlan.toString)
+      val shipped = exchanges.head.child.output.map(_.name)
+      assert(shipped == Seq("conv_id", "turn_idx", "salt", "n") ++
+        (if (priorityOrdered) Seq("prio") else Nil), shipped)
+    }
   }
 
   test("plan: extract runs the kernel inside a codegen stage, one call per row, no object round trip") {
@@ -130,12 +154,15 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val text = plan.toString
     for (node <- Seq("DeserializeToObject", "MapPartitions", "SerializeFromObject"))
       assert(!text.contains(node), s"$node in:\n$text")
-    assert(text.linesIterator.exists(l => l.contains("*(") &&
-      l.contains("graft.spark.ExtractTextKernel.turn(")), s"no codegen stage around the kernel in:\n$text")
     val generated = org.apache.spark.sql.execution.debug.codegenStringSeq(plan)
       .map(_._2).mkString("\n")
-    assert("graft\\.spark\\.ExtractTextKernel\\.turn\\(".r.findAllMatchIn(generated).size == 1,
-      generated)
+    // normalize before the shuffle, run after it
+    for (k <- Seq("normalize", "run")) {
+      assert(text.linesIterator.exists(l => l.contains("*(") &&
+        l.contains(s"graft.spark.ExtractTextKernel.$k(")), s"no codegen stage around $k in:\n$text")
+      assert(s"graft\\.spark\\.ExtractTextKernel\\.$k\\(".r.findAllMatchIn(generated).size == 1,
+        generated)
+    }
   }
 
   test("extract: the schema is the Extracted encoder's, nullability included") {

@@ -20,7 +20,13 @@
 # each pair's base -> head values, the medians, the base IQR and, for the
 # metrics BENCHMARK.json declares, how many pairs the head won by its
 # `better` direction (ties count for neither side), plus `failed`; run with
-# `-t 1 -n 1` for one traced pair of per-layer metrics. Run from the repo.
+# `-t 1 -n 1` for one traced pair of per-layer metrics. Each run's report
+# (perfbench's `.bench_results/<workload>-seed<N>-trace<T>.json`, which goes
+# with the exported tree) is kept in OUTDIR beside its result line, as
+# `<side>-<workload>-seed<N>-trace<T>.report.json`; with `-t 1` the per-side
+# medians of the extraction pass's stage split (`pipeline.scan_stage_s`,
+# `pipeline.map_stage_s`, `pipeline.shuffle_bytes_per_turn`) are printed
+# from those reports. Run from the repo.
 #
 # For each end-to-end metric BENCHMARK.json gates, one verdict line:
 #   gain          the head wins at least 9/10 of at least 10 pairs, and the
@@ -37,7 +43,7 @@ while getopts "b:n:f:t:o:" opt; do
   case $opt in
     b) base=$OPTARG ;; n) seeds=$OPTARG ;; f) first=$OPTARG ;;
     t) trace=$OPTARG ;; o) out=$OPTARG ;;
-    *) sed -n '2,32p' "$0"; exit 2 ;;
+    *) sed -n '2,38p' "$0"; exit 2 ;;
   esac
 done
 shift $((OPTIND - 1))
@@ -63,9 +69,12 @@ done
 
 run() { # side workload seed
   local f="$out/$1-$2-seed$3-trace$trace.json"
+  local report="$work/$1/.bench_results/$2-seed$3-trace$trace.json"
   echo "[perf_ab] $1 $2 seed $3" >&2
+  rm -f "$report"
   (cd "$work/$1" && python3 perfbench/run.py --workload "$2" --seed "$3" \
     --seconds "$seconds" --trace "$trace") | tail -n 1 > "$f" || echo '{}' > "$f"
+  if [ -f "$report" ]; then cp "$report" "${f%.json}.report.json"; fi
 }
 
 for w in "${workloads[@]}"; do
@@ -84,12 +93,18 @@ lead = ["setup_s", "ops_per_s", "cpu_us_per_op"]
 better = {m["name"]: m["better"] for m in bench["end_to_end"] + bench["per_layer"]}
 bound = {m["name"]: m["bound"] for m in bench["end_to_end"]}
 
-def load(side, w, seed):
+def load(side, w, seed, suffix=""):
     try:
-        with open(f"{out}/{side}-{w}-seed{seed}-trace{trace}.json") as f:
+        with open(f"{out}/{side}-{w}-seed{seed}-trace{trace}{suffix}.json") as f:
             return json.loads(f.read() or "{}")
-    except ValueError:
+    except (OSError, ValueError):
         return {}
+
+stages = ["pipeline.scan_stage_s", "pipeline.map_stage_s", "pipeline.shuffle_bytes_per_turn"]
+
+def stage(side, w, seed, m):  # a traced run's report holds the pass's stage split
+    v = load(side, w, seed, ".report").get("report", {}).get(m)
+    return v if isinstance(v, (int, float)) else None
 
 def value(r, m):  # a metric is {"value": v, "unit": u}
     v = r.get("metrics", {}).get(m)
@@ -154,6 +169,13 @@ for w in workloads:
         per = "  ".join(f"{fmt(x)}->{fmt(y)}" for x, y in zip(bs, hs))
         print(f"  {m:28s} median {fmt(mb)} -> {fmt(mh)}{rel}, base IQR {fmt(iqr(bs))}"
               f"{wins(m, bs, hs)}   pairs: {per}")
+    if trace == "1":
+        for m in stages:
+            bs = [stage("base", w, s, m) for s, _, _ in pairs]
+            hs = [stage("head", w, s, m) for s, _, _ in pairs]
+            mb, mh = median(bs), median(hs)
+            rel = f" ({(mh / mb - 1) * 100:+.1f} %)" if mb and mh is not None else ""
+            print(f"  {m:32s} median {fmt(mb)} -> {fmt(mh)}{rel} (from the run reports)")
     for m in bound:
         bs = [value(b, m) for _, b, _ in pairs]
         hs = [value(h, m) for _, _, h in pairs]
