@@ -28,7 +28,8 @@
 # `pipeline.map_stage_s`, `pipeline.shuffle_bytes_per_turn`) are printed
 # from those reports. Run from the repo.
 #
-# For each end-to-end metric BENCHMARK.json gates, one verdict line:
+# For each end-to-end metric BENCHMARK.json gates, one verdict line (untraced
+# runs only: a traced run's result carries the per-layer metrics alone):
 #   gain          the head wins at least 9/10 of at least 10 pairs, and the
 #                 medians differ, head better, by more than the base IQR;
 #   regressed     the head median is worse than the base median by more
@@ -43,7 +44,7 @@ while getopts "b:n:f:t:o:" opt; do
   case $opt in
     b) base=$OPTARG ;; n) seeds=$OPTARG ;; f) first=$OPTARG ;;
     t) trace=$OPTARG ;; o) out=$OPTARG ;;
-    *) sed -n '2,38p' "$0"; exit 2 ;;
+    *) sed -n '2,39p' "$0"; exit 2 ;;
   esac
 done
 shift $((OPTIND - 1))
@@ -176,7 +177,7 @@ for w in workloads:
             mb, mh = median(bs), median(hs)
             rel = f" ({(mh / mb - 1) * 100:+.1f} %)" if mb and mh is not None else ""
             print(f"  {m:32s} median {fmt(mb)} -> {fmt(mh)}{rel} (from the run reports)")
-    for m in bound:
+    for m in bound if trace == "0" else []:  # a traced run reports per-layer metrics only
         bs = [value(b, m) for _, b, _ in pairs]
         hs = [value(h, m) for _, _, h in pairs]
         print(f"  verdict {m}: {verdict(m, bs, hs)}")
